@@ -492,8 +492,9 @@ def q_minhash_dedup(spark, sf_dir):
     """Banded-MinHash candidates, portable-hash variant (same plan shape
     as the xxhash64 fast path; every value DuckDB-recomputable)."""
     docs = _t(spark, sf_dir, "documents")
-    return dedup.minhash_candidate_pairs_portable(
-        docs, "doc_id", "text", est_threshold=0.5
+    return dedup.minhash_candidate_pairs(
+        docs, "doc_id", "text", num_perm=16, bands=8, rows=2,
+        est_threshold=0.5, family="portable",
     ).orderBy("src", "dst")
 
 
@@ -501,8 +502,8 @@ def q_simhash_dedup(spark, sf_dir):
     """SimHash near-pairs, portable 32-bit variant. Banding is exact for
     hamming <= bands-1, so the oracle is the all-pairs Hamming predicate."""
     docs = _t(spark, sf_dir, "documents")
-    return dedup.simhash_near_pairs_portable(
-        docs, "doc_id", "text", max_hamming=3
+    return dedup.simhash_near_pairs(
+        docs, "doc_id", "text", max_hamming=3, family="portable"
     ).orderBy("src", "dst")
 
 
@@ -1603,7 +1604,7 @@ def _incremental_match_sql() -> str:
     """
 
 
-def _crawl_entity_map_sql() -> str:
+def _crawl_entity_map_sql(cap: int = 100) -> str:
     """Composed crawl oracle: exact novelty (the Bloom stage's RESULT is
     exact by construction, so the mirror is a NOT-IN on the
     null-coalesced canonical text — content-hash equality modulo sha2
@@ -1620,7 +1621,7 @@ def _crawl_entity_map_sql() -> str:
     z = _feat_z_sql("pa.ntext", "pb.ntext")
     return f"""
         WITH
-        {_er_prefix_sql(pages)},
+        {_er_prefix_sql(pages, cap)},
         histk AS MATERIALIZED (SELECT DISTINCT coalesce(ntext, url) AS k
                  FROM ex WHERE sd = 0),
         novel AS MATERIALIZED (
@@ -1629,12 +1630,12 @@ def _crawl_entity_map_sql() -> str:
         -- the engine filters to novel pages BEFORE blocking, so the
         -- batch side's block cap counts NOVEL members only (a block
         -- crowded with suppressed re-crawls must not be dropped).
-        -- Re-cap bm over the novel subset instead of reusing bmk's
-        -- full-batch cap; 100 mirrors _er_prefix_sql's default cap.
+        -- Re-cap bm over the novel subset at the same cap as bmk
+        -- instead of reusing bmk's full-batch cap.
         keepn AS MATERIALIZED (
           SELECT bm.block_key FROM bm JOIN novel n ON n.url = bm.url
           WHERE bm.sd = 1
-          GROUP BY bm.block_key HAVING COUNT(*) <= 100),
+          GROUP BY bm.block_key HAVING COUNT(*) <= {cap}),
         bmn AS MATERIALIZED (
           SELECT bm.url, bm.block_key FROM bm
           JOIN novel n ON n.url = bm.url

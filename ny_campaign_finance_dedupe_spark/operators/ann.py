@@ -30,6 +30,8 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame, Window
 
+from . import pairs
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -700,37 +702,19 @@ def cosine_neardup_bucketed(
     margin-safe and tunable by (bands, bits).
 
     The candidate shuffle is ids-only ((id, bucket) exchange, vectors
-    re-joined after dropDuplicates — pairs.hydrate_pairs shape), so a
-    vector crosses the wire once, not once per band collision."""
+    re-joined after dropDuplicates — pairs.banded_pairs), so a vector
+    crosses the wire once, not once per band collision."""
     if dim is None:
         dim = int(
             df.select(F.size(F.col(vec_col)).alias("d")).limit(1).collect()[0]["d"]
         )
-    keyed = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(bucket_keys(F.col(vec_col), dim, bands, bits, seed)).alias(
-            "bucket"
-        ),
-    )
-    cand = (
-        keyed.select(F.col("_id").alias("src"), "bucket")
-        .join(keyed.select(F.col("_id").alias("dst"), "bucket"), "bucket")
-        .where(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .dropDuplicates(["src", "dst"])
-    )
-    va = df.select(F.col(id_col).alias("src"), F.col(vec_col).alias("va"))
-    vb = df.select(F.col(id_col).alias("dst"), F.col(vec_col).alias("vb"))
-    return (
-        cand.join(va, "src")
-        .join(vb, "dst")
-        .select(
-            "src",
-            "dst",
-            cosine_batch_udf()(F.col("va"), F.col("vb")).alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
-    )
+    keyed = df.select(F.col(id_col).alias("record_id"), F.col(vec_col).alias("v"))
+    return pairs.banded_pairs(
+        keyed,
+        bucket_keys(F.col("v"), dim, bands, bits, seed),
+        cosine_batch_udf(),
+        "cosine",
+    ).where(F.col("cosine") >= threshold)
 
 
 # Above this row count the all-pairs GEMM's driver collect + broadcast is

@@ -10,10 +10,17 @@ DataFrame operator (and a ``queries()`` entry in __spark_entry__):
   No cross join anywhere, so it scales exactly like the blocking
   self-join (and shares its skew story: common shingles are stop-worded
   by a document-frequency cap, canopy_index.py:20-38 analog).
-- MinHash+LSH:  banded signature join (functions/hashing.py) -> candidate
-  pairs with estimated Jaccard = fraction of agreeing signature positions
-- SimHash:      banded 64-bit simhash join + exact Hamming filter
+- MinHash+LSH:  banded signature join -> candidate pairs with estimated
+  Jaccard = fraction of agreeing signature positions
+- SimHash:      banded simhash join + exact Hamming filter
+- edit distance: deletion-variant join + exact Levenshtein filter
 - embedding cosine: see operators/ann.py (shared kernel)
+
+The three banded operators share one kernel, pairs.banded_pairs (explode
+keys -> pairs.candidate_pairs -> hydrate both sides -> measure). MinHash
+and SimHash take ``family="fast"|"portable"``: xxhash64 + Arrow for the
+bench/scale path, md5 Catalyst expressions that the DuckDB oracle
+recomputes for the correctness gate.
 """
 
 from __future__ import annotations
@@ -22,6 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from ..functions import hashing, keygen, portable
+from . import pairs
 
 
 def _tag_persisted(out: DataFrame, *deps: DataFrame) -> DataFrame:
@@ -263,63 +271,47 @@ def minhash_candidate_pairs(
     bands: int = 16,
     rows: int = 4,
     est_threshold: float = 0.0,
+    family: str = "fast",
 ) -> DataFrame:
     """Banded-MinHash near-dup candidates with estimated Jaccard.
 
     est_jaccard = fraction of agreeing signature positions (unbiased
     estimator of true shingle Jaccard). One narrow keygen pass + one
-    equi-join on band keys — the LSH replacement for the reference's
-    TfidfCanopy index predicates (predicates.py:248-305).
+    equi-join on band keys (pairs.banded_pairs) — the LSH replacement
+    for the reference's TfidfCanopy index predicates
+    (predicates.py:248-305). The portable family has slower constants
+    (see PipelineConfig.portable_hashing); its callers run it at 16
+    perms / 8x2 banding.
     """
+    t, s = F.col("t"), F.col("sig")
+    if family == "fast":
+        # token-hash-combined shingle ids, no gram strings materialized
+        # (hashing.word_ngram_hashes)
+        sig_expr = hashing.minhash_signature_udf(num_perm)(
+            hashing.word_ngram_hashes(t, shingle_words)
+        )
+        keys = hashing.minhash_band_keys(s, bands, rows)
+    elif family == "portable":
+        sig_expr = portable.minhash_sig(keygen.word_ngrams(t, shingle_words), num_perm)
+        keys = portable.minhash_band_keys(s, bands, rows)
+    else:
+        raise ValueError(f"minhash_candidate_pairs: unknown family {family!r}")
     sig = (
         df.select(F.col(id_col).alias("record_id"), F.col(text_col).alias("t"))
-        .withColumn(
-            "sig",
-            hashing.minhash_signature_udf(num_perm)(
-                # fast family: token-hash-combined shingle ids, no gram
-                # strings materialized (hashing.word_ngram_hashes)
-                hashing.word_ngram_hashes(F.col("t"), shingle_words)
-            ),
-        )
+        .withColumn("sig", sig_expr)
         .where(F.col("sig").isNotNull())
         .select("record_id", "sig")
-        # reused by the band-key explode AND both hydration sides below:
-        # without a persist the signature UDF subtree evaluates 3x.
+        # reused by the band-key explode AND both hydration sides:
+        # without a persist the signature subtree evaluates 3x.
         .persist()
     )
-    bm = sig.select(
-        "record_id",
-        F.explode(hashing.minhash_band_keys(F.col("sig"), bands, rows)).alias(
-            "block_key"
-        ),
-    )
-    cand = (
-        bm.alias("l")
-        .join(bm.alias("r"), "block_key")
-        .where(F.col("l.record_id") < F.col("r.record_id"))
-        .select(
-            F.col("l.record_id").alias("src"), F.col("r.record_id").alias("dst")
-        )
-        .dropDuplicates(["src", "dst"])
-    )
-    sa = sig.select(F.col("record_id").alias("src"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("record_id").alias("dst"), F.col("sig").alias("sig_b"))
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                lambda b: b,
-            )
-        )
-        / F.lit(num_perm)
-    )
-    return _tag_persisted(
-        cand.join(sa, "src")
-        .join(sb, "dst")
-        .select("src", "dst", est.alias("est_jaccard"))
-        .where(F.col("est_jaccard") >= est_threshold),
-        sig,
-    )
+
+    def est(a: Column, b: Column) -> Column:
+        agree = F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda m: m)
+        return F.size(agree) / F.lit(float(num_perm))
+
+    out = pairs.banded_pairs(sig, keys, est, "est_jaccard")
+    return _tag_persisted(out.where(F.col("est_jaccard") >= est_threshold), sig)
 
 
 def edit_distance_pairs(
@@ -345,147 +337,13 @@ def edit_distance_pairs(
         .where(F.col("k").isNotNull() & (F.length("k") > 0))
         .persist()  # reused by the variant explode and both hydrations
     )
-    bm = keyed.select(
-        "record_id",
-        F.explode(keygen.deletion_variants(F.col("k"), key_len)).alias(
-            "block_key"
-        ),
-    )
-    cand = (
-        bm.alias("l")
-        .join(bm.alias("r"), "block_key")
-        .where(F.col("l.record_id") < F.col("r.record_id"))
-        .select(
-            F.col("l.record_id").alias("src"), F.col("r.record_id").alias("dst")
-        )
-        .dropDuplicates(["src", "dst"])
-    )
-    ka = keyed.select(F.col("record_id").alias("src"), F.col("k").alias("k_a"))
-    kb = keyed.select(F.col("record_id").alias("dst"), F.col("k").alias("k_b"))
-    return _tag_persisted(
-        cand.join(ka, "src")
-        .join(kb, "dst")
-        .select(
-            "src", "dst", F.levenshtein(F.col("k_a"), F.col("k_b")).alias("dist")
-        )
-        .where(F.col("dist") <= max_dist),
+    out = pairs.banded_pairs(
         keyed,
+        keygen.deletion_variants(F.col("k"), key_len),
+        F.levenshtein,
+        "dist",
     )
-
-
-def minhash_candidate_pairs_portable(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_words: int = 3,
-    num_perm: int = 16,
-    bands: int = 8,
-    rows: int = 2,
-    est_threshold: float = 0.5,
-) -> DataFrame:
-    """``minhash_candidate_pairs`` with the engine-portable hash family
-    (functions/portable.py): identical plan shape (linear keygen, banded
-    equi-join, est-Jaccard filter), zero Python, and every value
-    recomputable by the DuckDB oracle — this is the variant the
-    correctness gate runs; the xxhash64+Arrow variant is the bench/scale
-    path (same operator contract, pinned equivalent by test)."""
-    sig = (
-        df.select(F.col(id_col).alias("record_id"), F.col(text_col).alias("t"))
-        .withColumn(
-            "sig",
-            portable.minhash_sig(
-                keygen.word_ngrams(F.col("t"), shingle_words), num_perm
-            ),
-        )
-        .where(F.col("sig").isNotNull())
-        .select("record_id", "sig")
-        .persist()
-    )
-    bm = sig.select(
-        "record_id",
-        F.explode(portable.minhash_band_keys(F.col("sig"), bands, rows)).alias(
-            "block_key"
-        ),
-    )
-    cand = (
-        bm.alias("l")
-        .join(bm.alias("r"), "block_key")
-        .where(F.col("l.record_id") < F.col("r.record_id"))
-        .select(
-            F.col("l.record_id").alias("src"), F.col("r.record_id").alias("dst")
-        )
-        .dropDuplicates(["src", "dst"])
-    )
-    sa = sig.select(F.col("record_id").alias("src"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("record_id").alias("dst"), F.col("sig").alias("sig_b"))
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                lambda b: b,
-            )
-        )
-        / F.lit(float(num_perm))
-    )
-    return _tag_persisted(
-        cand.join(sa, "src")
-        .join(sb, "dst")
-        .select("src", "dst", est.alias("est_jaccard"))
-        .where(F.col("est_jaccard") >= est_threshold),
-        sig,
-    )
-
-
-def simhash_near_pairs_portable(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    bands: int = 4,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """``simhash_near_pairs`` over the 32-bit portable simhash. The
-    banded join + exact bit_count filter yields EXACTLY the set of pairs
-    within ``max_hamming`` (pigeonhole recall is total for
-    max_hamming <= bands-1), so the oracle is the all-pairs Hamming
-    predicate — banding is a physical detail the check need not mirror.
-
-    Simhash input is word-3-gram shingles, not unigram tokens: unigram
-    simhash is cross-document correlated (every page shares the
-    language's top tokens — see hashing.minhash_simhash_udf) and at 32
-    bits that correlation floods the pair space; shingles decorrelate."""
-    sh = (
-        df.select(F.col(id_col).alias("record_id"), F.col(text_col).alias("t"))
-        .withColumn(
-            "simhash", portable.simhash32(keygen.word_ngrams(F.col("t"), 3))
-        )
-        .where(F.col("simhash").isNotNull())
-        .select("record_id", "simhash")
-        .persist()
-    )
-    bm = sh.select(
-        "record_id",
-        F.explode(
-            portable.simhash_band_keys(F.col("simhash"), bands, bits=32)
-        ).alias("block_key"),
-    )
-    cand = (
-        bm.alias("l")
-        .join(bm.alias("r"), "block_key")
-        .where(F.col("l.record_id") < F.col("r.record_id"))
-        .select(F.col("l.record_id").alias("src"), F.col("r.record_id").alias("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
-    ha = sh.select(F.col("record_id").alias("src"), F.col("simhash").alias("h_a"))
-    hb = sh.select(F.col("record_id").alias("dst"), F.col("simhash").alias("h_b"))
-    return _tag_persisted(
-        cand.join(ha, "src")
-        .join(hb, "dst")
-        .select(
-            "src", "dst", hashing.hamming64(F.col("h_a"), F.col("h_b")).alias("hamming")
-        )
-        .where(F.col("hamming") <= max_hamming),
-        sh,
-    )
+    return _tag_persisted(out.where(F.col("dist") <= max_dist), keyed)
 
 
 def simhash_near_pairs(
@@ -494,47 +352,42 @@ def simhash_near_pairs(
     text_col: str,
     bands: int = 4,
     max_hamming: int = 3,
+    family: str = "fast",
 ) -> DataFrame:
-    """Near-dup pairs within Hamming distance over 64-bit SimHash.
+    """Near-dup pairs within Hamming distance over SimHash: 64-bit over
+    token shingle hashes (family 'fast') or 32-bit over word-3-gram
+    shingles (family 'portable').
 
     Banded join guarantees recall for distance <= bands-1 (pigeonhole;
     Manku et al. '07); the exact bit_count filter removes band-collision
-    false positives. Output (src, dst, hamming).
+    false positives, so the result is EXACTLY the set of pairs within
+    ``max_hamming`` and the oracle is the all-pairs Hamming predicate —
+    banding is a physical detail the check need not mirror. Output
+    (src, dst, hamming).
+
+    The portable input is word-3-gram shingles, not unigram tokens:
+    unigram simhash is cross-document correlated (every page shares the
+    language's top tokens — see hashing.minhash_simhash_udf) and at 32
+    bits that correlation floods the pair space; shingles decorrelate.
     """
+    t, h = F.col("t"), F.col("simhash")
+    if family == "fast":
+        sim_expr = hashing.simhash_udf()(hashing.shingle_hashes(keygen.tokens(t)))
+        keys = hashing.simhash_band_keys(h, bands)
+    elif family == "portable":
+        sim_expr = portable.simhash32(keygen.word_ngrams(t, 3))
+        keys = portable.simhash_band_keys(h, bands, bits=32)
+    else:
+        raise ValueError(f"simhash_near_pairs: unknown family {family!r}")
     sh = (
         df.select(F.col(id_col).alias("record_id"), F.col(text_col).alias("t"))
-        .withColumn(
-            "simhash",
-            hashing.simhash_udf()(hashing.shingle_hashes(keygen.tokens(F.col("t")))),
-        )
+        .withColumn("simhash", sim_expr)
         .where(F.col("simhash").isNotNull())
         .select("record_id", "simhash")
         .persist()  # reused 3x (band explode + both hydration sides)
     )
-    bm = sh.select(
-        "record_id",
-        F.explode(hashing.simhash_band_keys(F.col("simhash"), bands)).alias(
-            "block_key"
-        ),
-    )
-    cand = (
-        bm.alias("l")
-        .join(bm.alias("r"), "block_key")
-        .where(F.col("l.record_id") < F.col("r.record_id"))
-        .select(F.col("l.record_id").alias("src"), F.col("r.record_id").alias("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
-    ha = sh.select(F.col("record_id").alias("src"), F.col("simhash").alias("h_a"))
-    hb = sh.select(F.col("record_id").alias("dst"), F.col("simhash").alias("h_b"))
-    return _tag_persisted(
-        cand.join(ha, "src")
-        .join(hb, "dst")
-        .select(
-            "src", "dst", hashing.hamming64(F.col("h_a"), F.col("h_b")).alias("hamming")
-        )
-        .where(F.col("hamming") <= max_hamming),
-        sh,
-    )
+    out = pairs.banded_pairs(sh, keys, hashing.hamming64, "hamming")
+    return _tag_persisted(out.where(F.col("hamming") <= max_hamming), sh)
 
 
 def segment_text(col: Column, seg_words: int = 10) -> Column:

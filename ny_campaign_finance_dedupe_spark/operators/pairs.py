@@ -10,25 +10,27 @@ partitions), triangular filter, then ``dropDuplicates`` BEFORE the
 expensive scoring UDF — the invariant that each pair is scored exactly
 once no matter how many keys it co-blocks under (dedupe/api.py:199-205).
 
+One kernel: ``candidate_pairs`` is the plain self-join and
+``hydrate_pairs`` attaches payloads after its distinct. ``banded_pairs``
+composes the two for every keyed near-dup operator
+(dedup.minhash_candidate_pairs / simhash_near_pairs /
+edit_distance_pairs, ann.cosine_neardup_bucketed): explode keys ->
+candidate_pairs -> hydrate both sides -> measure. The skew variant is
+``salted_candidate_pairs`` (hot-key bucket grid), alongside the block
+cap and AQE's skew-join split.
+
 Scale notes:
 - blocks are pre-capped (operators/blocking.py), so per-key fan-out is
   bounded: the join output is at most max_block^2/2 x n_keys rows.
 - the blocking map is persisted by the caller when used on both sides.
-- ``pairs_via_cogroup`` is the alternative physical strategy from the
-  north_star ("salted groupBy-cogroup"): one shuffle on block_key, pairs
-  emitted per-block in Arrow batches. Same semantics; pick by block-size
-  profile (join wins when blocks are small and keys many; cogroup wins
-  when payload should be carried once per record rather than re-joined).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable
 
-import pandas as pd
 import pyspark.sql.functions as F
-import pyspark.sql.types as T
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 
 def candidate_pairs(blocking_map: DataFrame) -> DataFrame:
@@ -42,34 +44,6 @@ def candidate_pairs(blocking_map: DataFrame) -> DataFrame:
             F.col("l.record_id").alias("src"),
             F.col("r.record_id").alias("dst"),
         )
-        .dropDuplicates(["src", "dst"])
-    )
-
-
-def pairs_via_cogroup(blocking_map: DataFrame) -> DataFrame:
-    """Same contract as ``candidate_pairs`` via groupBy(block_key) +
-    applyInPandas emitting the triangle per block — one shuffle, no join.
-    Blocks must already be capped (bounded memory per group)."""
-    out_schema = T.StructType(
-        [
-            T.StructField("src", blocking_map.schema["record_id"].dataType, False),
-            T.StructField("dst", blocking_map.schema["record_id"].dataType, False),
-        ]
-    )
-
-    def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["record_id"].drop_duplicates().sort_values().to_numpy()
-        n = len(ids)
-        if n < 2:
-            return pd.DataFrame({"src": ids[:0], "dst": ids[:0]})
-        import numpy as np
-
-        iu = np.triu_indices(n, k=1)
-        return pd.DataFrame({"src": ids[iu[0]], "dst": ids[iu[1]]})
-
-    return (
-        blocking_map.groupBy("block_key")
-        .applyInPandas(emit, schema=out_schema)
         .dropDuplicates(["src", "dst"])
     )
 
@@ -88,6 +62,32 @@ def hydrate_pairs(
         F.col(id_col).alias("dst"), *[F.col(c).alias(f"{c}_b") for c in payload_cols]
     )
     return pairs.join(a, "src").join(b, "dst")
+
+
+def banded_pairs(
+    keyed: DataFrame,
+    keys: Column,
+    measure: Callable[[Column, Column], Column],
+    name: str,
+) -> DataFrame:
+    """keyed(record_id, payload) -> (src, dst, ``name``), src < dst.
+
+    ``keys`` is an array expression over the payload column (band keys,
+    LSH buckets, deletion variants): records sharing any key become a
+    distinct candidate pair (``candidate_pairs``), both payloads are
+    re-attached after the distinct (``hydrate_pairs``, so the pair
+    shuffle stays ids-only) and ``measure(payload_a, payload_b)`` is the
+    output column. Persists nothing: ``keyed`` is read three times (key
+    explode + both hydration sides), so a caller whose payload is costly
+    to recompute persists it first."""
+    (payload,) = [c for c in keyed.columns if c != "record_id"]
+    bm = keyed.select("record_id", F.explode(keys).alias("block_key"))
+    hyd = hydrate_pairs(candidate_pairs(bm), keyed, "record_id", [payload])
+    return hyd.select(
+        "src",
+        "dst",
+        measure(F.col(f"{payload}_a"), F.col(f"{payload}_b")).alias(name),
+    )
 
 
 def salted_candidate_pairs(

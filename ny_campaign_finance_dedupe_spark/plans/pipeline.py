@@ -50,9 +50,8 @@ class PipelineConfig:
     # the bench one. Use 16 perms / 8x2 banding with it.
     portable_hashing: bool = False
     max_block_size: int = 100
-    # candidate generation strategy: "join" (plain self-join + AQE),
-    # "salted" (hot-key bucket grid, pairs.salted_candidate_pairs), or
-    # "cogroup" (north_star's groupBy-cogroup emission)
+    # candidate generation strategy: "join" (plain self-join + AQE) or
+    # "salted" (hot-key bucket grid, pairs.salted_candidate_pairs)
     pair_strategy: str = "join"
     salt_hot_threshold: int = 1_000
     salt: int = 16
@@ -94,6 +93,10 @@ class DedupePipeline:
     """
 
     def __init__(self, config: PipelineConfig, store: CheckpointStore | None = None):
+        if config.pair_strategy not in ("join", "salted"):
+            raise ValueError(
+                f"unknown pair_strategy {config.pair_strategy!r} (join|salted)"
+            )
         self.cfg = config
         self.store = store
 
@@ -234,8 +237,6 @@ class DedupePipeline:
             return pairs.salted_candidate_pairs(
                 blocking_map, cfg.salt_hot_threshold, cfg.salt
             )
-        if cfg.pair_strategy == "cogroup":
-            return pairs.pairs_via_cogroup(blocking_map)
         return pairs.candidate_pairs(blocking_map)
 
     def score(self, cand: DataFrame, extracted: DataFrame) -> DataFrame:

@@ -140,9 +140,10 @@ def start_crawl_pipeline(
     repeated calls are the crawl's ingestion ticks; each restart resumes
     from ``checkpoint_dir`` (already-consumed files are never
     reprocessed, so the entity-map append is effectively exactly-once at
-    file granularity). The watermark exists for the same reason as in
-    start_incremental_matcher: foreachBatch itself never drops late
-    rows, but a stateful stage added downstream inherits sane bounds.
+    file granularity). The watermark drops no late rows: with
+    foreachBatch and no stateful stage downstream every file-source row
+    reaches the batch. It exists so that a stateful stage added
+    downstream inherits sane late-data bounds.
     """
     if strategy == "auto":
         # The index is fixed for the query's lifetime: resolve the
@@ -154,11 +155,6 @@ def start_crawl_pipeline(
             if tot_bits // 8 <= bloom.BROADCAST_MAX_BYTES
             else "join"
         )
-    stream = (
-        spark.readStream.schema(pages_schema)
-        .parquet(stream_source_dir)
-        .withWatermark("warc_ts", watermark)
-    )
 
     def sink(batch_df: DataFrame, batch_id: int):
         out = match_novel_batch(
@@ -175,9 +171,7 @@ def start_crawl_pipeline(
             "append"
         ).parquet(out_dir)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return ingest.start_page_stream(
+        spark, stream_source_dir, pages_schema, watermark, checkpoint_dir,
+        lambda stream: stream.writeStream.foreachBatch(sink),
     )

@@ -7,13 +7,13 @@ inverted index becomes a *stream-static equi-join on block_key* against a
 persisted blocking map; the per-block top-N becomes a window rank inside
 ``foreachBatch``.
 
-Shape:
-  readStream(pages) --watermark(warc_ts)--> foreachBatch(match_batch)
-where ``match_batch`` = build batch blocking keys -> join static index ->
-score (same native expression as batch) -> top-N per query url -> append
-to the matches sink. The static index is reloaded per batch (cheap
-metadata op with parquet/Iceberg), so index/unindex are plain appends/
-deletes on the index table between batches.
+Shape: ``match_batch`` = build batch blocking keys -> join static index
+-> score (same native expression as batch) -> top-N per query url. The
+streaming query that runs it per micro-batch is
+crawl.start_crawl_pipeline (Bloom novelty first, then this match). The
+static index is reloaded per batch (cheap metadata op with
+parquet/Iceberg), so index/unindex are plain appends/deletes on the
+index table between batches.
 """
 
 from __future__ import annotations
@@ -90,45 +90,4 @@ def match_batch(
         .select(
             "query_url", F.col("url").alias("match_url"), "score", "rank"
         )
-    )
-
-
-def start_incremental_matcher(
-    spark,
-    stream_source_dir: str,
-    index: DataFrame,
-    cfg,
-    out_dir: str,
-    checkpoint_dir: str,
-    pages_schema,
-    n_matches: int = 1,
-    watermark: str = "1 hour",
-    threshold: float | None = None,
-):
-    """Wire the streaming query: file-source pages stream, foreachBatch
-    append sink. ``threshold`` forwards to match_batch (default:
-    cfg.score_threshold). NOTE on the watermark: with foreachBatch and
-    no stateful aggregation/join downstream, a watermark does NOT drop
-    late rows — every file-source row reaches match_batch; it exists so
-    that adding a stateful dedup/windowed stage later inherits sane
-    late-data bounds, not as a filter today."""
-    stream = (
-        spark.readStream.schema(pages_schema)
-        .parquet(stream_source_dir)
-        .withWatermark("warc_ts", watermark)
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int):
-        out = match_batch(
-            batch_df, index, cfg, n_matches=n_matches, threshold=threshold
-        )
-        out.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
-            out_dir
-        )
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )

@@ -20,8 +20,11 @@ shuffle on the 64-hex key. The watermark bounds state size to
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..functions import normalize
 
@@ -79,6 +82,34 @@ def with_content_key(pages: DataFrame) -> DataFrame:
     ).drop("_nt")
 
 
+def start_page_stream(
+    spark,
+    stream_source_dir: str,
+    pages_schema,
+    watermark: str,
+    checkpoint_dir: str,
+    to_writer: Callable[[DataFrame], DataStreamWriter],
+) -> StreamingQuery:
+    """The one file-source query shape every ``start_*`` entry point
+    runs: parquet pages stream watermarked on ``warc_ts`` ->
+    ``to_writer(stream)`` (the query's transform + sink) ->
+    ``checkpointLocation`` -> ``trigger(availableNow)`` -> start.
+    availableNow drains what exists and stops, so repeated calls against
+    a growing source directory are the crawl's ingestion ticks; each
+    restart resumes from ``checkpoint_dir``."""
+    stream = (
+        spark.readStream.schema(pages_schema)
+        .parquet(stream_source_dir)
+        .withWatermark("warc_ts", watermark)
+    )
+    return (
+        to_writer(stream)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def start_ingest_dedup(
     spark,
     stream_source_dir: str,
@@ -88,24 +119,14 @@ def start_ingest_dedup(
     watermark: str = "1 hour",
 ):
     """File-source pages stream -> watermarked stateful exact dedup ->
-    append parquet sink. ``trigger(availableNow)`` drains what exists and
-    stops, so repeated calls against a growing source directory are the
-    crawl's ingestion ticks — each restart reloads dedup state from
-    ``checkpoint_dir``."""
-    stream = (
-        spark.readStream.schema(pages_schema)
-        .parquet(stream_source_dir)
-        .withWatermark("warc_ts", watermark)
-    )
-    deduped = with_content_key(stream).dropDuplicatesWithinWatermark(
-        ["exact_key"]
-    )
-    return (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    append parquet sink (``start_page_stream``); each restart reloads
+    dedup state from ``checkpoint_dir``."""
+    return start_page_stream(
+        spark, stream_source_dir, pages_schema, watermark, checkpoint_dir,
+        lambda stream: with_content_key(stream)
+        .dropDuplicatesWithinWatermark(["exact_key"])
+        .writeStream.format("parquet")
+        .option("path", out_dir),
     )
 
 
@@ -145,13 +166,6 @@ def start_ingest_dedup_with_counts(
     """
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    stream = (
-        spark.readStream.schema(pages_schema)
-        .parquet(stream_source_dir)
-        .withWatermark("warc_ts", watermark)
-    )
-    keyed = with_content_key(stream).select("exact_key", "url", "warc_ts")
 
     out_type = (
         "exact_key string, url string, admitted boolean,"
@@ -196,17 +210,23 @@ def start_ingest_dedup_with_counts(
             ]
         )
 
-    audited = keyed.groupBy("exact_key").applyInPandasWithState(
-        fn,
-        outputStructType=out_type,
-        stateStructType=state_type,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return (
-        audited.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    def audited(stream: DataFrame) -> DataStreamWriter:
+        return (
+            with_content_key(stream)
+            .select("exact_key", "url", "warc_ts")
+            .groupBy("exact_key")
+            .applyInPandasWithState(
+                fn,
+                outputStructType=out_type,
+                stateStructType=state_type,
+                outputMode="append",
+                timeoutConf=GroupStateTimeout.EventTimeTimeout,
+            )
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+        )
+
+    return start_page_stream(
+        spark, stream_source_dir, pages_schema, watermark, checkpoint_dir,
+        audited,
     )

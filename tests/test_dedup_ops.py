@@ -202,9 +202,9 @@ def _walk_plan(node):
         yield from _walk_plan(ch.apply(i))
 
 
-def _bucket_join_outputs(df):
+def _bucket_join_outputs(df, key="bucket"):
     """Output (name, type) of every optimized-plan Join carrying the LSH
-    bucket key."""
+    bucket key column ``key``."""
     found = []
     for n in _walk_plan(df._jdf.queryExecution().optimizedPlan()):
         if n.nodeName() == "Join":
@@ -213,7 +213,7 @@ def _bucket_join_outputs(df):
                 o.apply(i).name(): o.apply(i).dataType().simpleString()
                 for i in range(o.size())
             }
-            if "bucket" in names:
+            if key in names:
                 found.append(names)
     return found
 
@@ -228,8 +228,10 @@ def test_lsh_candidate_shuffles_are_ids_only(spark, vecs):
     for names in joins:
         assert not any(t.startswith("array") for t in names.values()), names
 
+    # the near-dup path runs pairs.banded_pairs, whose key column is the
+    # blocking map's block_key
     nd = ann.cosine_neardup_bucketed(vecs, dim=3, bands=4, bits=4)
-    joins = _bucket_join_outputs(nd)
+    joins = _bucket_join_outputs(nd, key="block_key")
     assert joins
     for names in joins:
         assert not any(t.startswith("array") for t in names.values()), names
@@ -571,18 +573,6 @@ def test_salted_candidate_pairs_matches_plain(spark):
     }
     assert salted == plain
     assert len(plain) == 40 * 39 // 2 + 1
-
-
-def test_cogroup_pairs_match_join_pairs(spark):
-    """The two physical pair-generation strategies are semantically
-    identical (north_star's salted groupBy-cogroup alternative)."""
-    from ny_campaign_finance_dedupe_spark.operators import pairs as P
-
-    rows = [("k1", 3), ("k1", 1), ("k1", 2), ("k2", 5), ("k2", 4), ("k3", 9)]
-    bm = spark.createDataFrame(rows, "block_key string, record_id long")
-    a = {(r["src"], r["dst"]) for r in P.candidate_pairs(bm).collect()}
-    b = {(r["src"], r["dst"]) for r in P.pairs_via_cogroup(bm).collect()}
-    assert a == b == {(1, 2), (1, 3), (2, 3), (4, 5)}
 
 
 def test_quantizer_parity_across_physical_paths(spark):

@@ -53,8 +53,8 @@ def test_minhash_families_equal_recall_at_matched_geometry(corpus):
     docs, truth = corpus
     geom = dict(num_perm=16, bands=8, rows=2, est_threshold=0.0)
     fast = dedup.minhash_candidate_pairs(docs, "doc_id", "text", **geom)
-    port = dedup.minhash_candidate_pairs_portable(
-        docs, "doc_id", "text", **geom
+    port = dedup.minhash_candidate_pairs(
+        docs, "doc_id", "text", **geom, family="portable"
     )
     rf = _candidate_recall(fast, truth)
     rp = _candidate_recall(port, truth)
@@ -71,8 +71,8 @@ def test_minhash_families_equal_recall_at_matched_geometry(corpus):
 def test_simhash_families_agree_on_planted_truth(corpus):
     docs, truth = corpus
     fast = dedup.simhash_near_pairs(docs, "doc_id", "text", max_hamming=3)
-    port = dedup.simhash_near_pairs_portable(
-        docs, "doc_id", "text", max_hamming=3
+    port = dedup.simhash_near_pairs(
+        docs, "doc_id", "text", max_hamming=3, family="portable"
     )
     rf = _candidate_recall(fast, truth)
     rp = _candidate_recall(port, truth)
@@ -130,3 +130,11 @@ def test_pipeline_equivalent_under_either_family(spark):
     # blocking (and thus cluster count) may differ at the edges — but
     # only at the edges (observed 369 vs 367 on this corpus)
     assert abs(k_fast - k_port) <= max(2, k_fast // 100), results
+
+
+def test_unknown_family_raises(corpus):
+    docs, _ = corpus
+    with pytest.raises(ValueError, match="family"):
+        dedup.minhash_candidate_pairs(docs, "doc_id", "text", family="xx")
+    with pytest.raises(ValueError, match="family"):
+        dedup.simhash_near_pairs(docs, "doc_id", "text", family="Portable")

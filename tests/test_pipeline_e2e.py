@@ -114,6 +114,16 @@ def test_resume_rejects_changed_params(spark, run):
     assert store.has("extract", PipelineConfig().params())
 
 
+def test_unknown_pair_strategy_raises():
+    """A misspelled pair_strategy must fail at construction, not fall
+    through to the plain self-join."""
+    for bad in ("cogroup", "Salted", "joins"):
+        with pytest.raises(ValueError, match="pair_strategy"):
+            DedupePipeline(PipelineConfig(pair_strategy=bad))
+    for ok in ("join", "salted"):
+        DedupePipeline(PipelineConfig(pair_strategy=ok))
+
+
 def test_pipeline_with_hac_refinement(spark, tmp_path):
     """use_hac=True (C3) must keep every record exactly once and not
     break the F1 contract on a small synth table."""

@@ -1,7 +1,5 @@
 """Incremental (gazetteer-style) matching: batch kernel + streaming query."""
 
-import time
-
 import pyspark.sql.functions as F
 import pytest
 
@@ -44,33 +42,6 @@ def test_match_batch_no_false_match(spark, corpus):
     )
     out = incremental.match_batch(batch, index, cfg, n_matches=3).collect()
     assert out == []
-
-
-def test_streaming_query_end_to_end(spark, corpus, tmp_path):
-    """availableNow file-source stream through foreachBatch to parquet."""
-    cfg = PipelineConfig()
-    index = incremental.build_index(corpus, cfg).localCheckpoint()
-    src = tmp_path / "stream_src"
-    out_dir = tmp_path / "matches"
-    ckpt = tmp_path / "stream_ckpt"
-    two = corpus.limit(2).collect()
-    batch = spark.createDataFrame(
-        [
-            (f"https://newsite.example.com/s/{i}", r["warc_ts"], r["html"],
-             r["text"], r["lang"])
-            for i, r in enumerate(two)
-        ],
-        PAGES_SCHEMA,
-    )
-    batch.write.parquet(str(src))
-    q = incremental.start_incremental_matcher(
-        spark, str(src), index, cfg, str(out_dir), str(ckpt), PAGES_SCHEMA
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(str(out_dir)).collect()
-    matches = {r["query_url"]: r["match_url"] for r in got}
-    for i, r in enumerate(two):
-        assert matches[f"https://newsite.example.com/s/{i}"] == r["url"]
 
 
 def test_ingest_dedup_suppresses_recrawls_across_restart(spark, tmp_path):

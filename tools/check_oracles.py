@@ -3,13 +3,22 @@ entry on Spark and its oracle_sql() on DuckDB over the same sf dir,
 compare row count, column names, and order-insensitive values.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
+
+A full sweep (no query filter) also writes ORACLE_SWEEP.json at the repo
+root: per query pass (null when it has no oracle), rows, engine and
+oracle seconds, plus the git HEAD sha and the tracked files that
+differed from it. A filtered run prints only, so it never overwrites the record
+of a full sweep.
 """
 
 from __future__ import annotations
 
+import json
 import math
 import os
+import subprocess
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -77,6 +86,37 @@ def canon_duck_type(t: str) -> str:
     }.get(t, t)
 
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SWEEP_PATH = os.path.join(REPO, "ORACLE_SWEEP.json")
+
+
+def _git(*args: str) -> str:
+    return subprocess.run(
+        ["git", *args], cwd=REPO, capture_output=True, text=True
+    ).stdout
+
+
+def write_sweep(sf_dir: str, results: dict) -> None:
+    """Machine-readable record of one full sweep (see module docstring)."""
+    changed = [
+        ln[3:] for ln in _git("status", "--porcelain", "--untracked-files=no")
+        .splitlines() if ln[3:] != os.path.basename(SWEEP_PATH)
+    ]
+    rec = {
+        "head": _git("rev-parse", "HEAD").strip(),
+        "tracked_changes_vs_head": changed,
+        "sf_dir": sf_dir,
+        "n_queries": len(results),
+        "n_pass": sum(r["pass"] is True for r in results.values()),
+        "n_fail": sum(r["pass"] is False for r in results.values()),
+        "queries": results,
+    }
+    with open(SWEEP_PATH, "w") as f:
+        json.dump(rec, f, indent=1, sort_keys=True)
+        f.write("\n")
+    print(f"wrote {SWEEP_PATH}")
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -94,10 +134,16 @@ def main():
         print(f"known: {sorted(qs)}")
         sys.exit(2)
     failures = []
+    results: dict[str, dict] = {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
         sql = oracles.get(name)
+        rec = results[name] = {
+            "pass": False, "rows": None, "seconds": None,
+            "oracle_seconds": None, "detail": None,
+        }
+        t0 = time.perf_counter()
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
@@ -105,19 +151,26 @@ def main():
             _dedup.release(sdf)
         except Exception as e:
             failures.append((name, f"SPARK ERROR: {e}"))
+            rec["detail"] = f"spark error: {str(e)[:300]}"
             print(f"FAIL  {name}: spark error {str(e)[:200]}")
             continue
+        rec["seconds"] = round(time.perf_counter() - t0, 3)
+        rec["rows"] = len(srows)
         if sql is None:
+            rec["pass"] = None
             print(f"ok    {name}: rows-only ({len(srows)} rows)")
             continue
+        t0 = time.perf_counter()
         try:
             res = con.sql(sql)
             ocols = [c for c in res.columns]
             orows = res.fetchall()
         except Exception as e:
             failures.append((name, f"ORACLE ERROR: {e}"))
+            rec["detail"] = f"oracle error: {str(e)[:300]}"
             print(f"FAIL  {name}: oracle error {str(e)[:200]}")
             continue
+        rec["oracle_seconds"] = round(time.perf_counter() - t0, 3)
         problems = []
         if sorted(c.lower() for c in scols) != sorted(c.lower() for c in ocols):
             problems.append(f"cols spark={scols} duck={ocols}")
@@ -147,10 +200,14 @@ def main():
                 problems.append(f"values differ, first diffs: {diff}")
         if problems:
             failures.append((name, "; ".join(problems)))
-            print(f"FAIL  {name}: {'; '.join(p[:300] for p in problems)}")
+            rec["detail"] = "; ".join(p[:300] for p in problems)
+            print(f"FAIL  {name}: {rec['detail']}")
         else:
+            rec["pass"] = True
             print(f"PASS  {name} ({len(srows)} rows)")
     print(f"\n{len(failures)} failures")
+    if not only:
+        write_sweep(sf_dir, results)
     spark.stop()
     sys.exit(1 if failures else 0)
 

@@ -42,27 +42,6 @@ OPS = [
 ]
 
 
-def _rest_totals(spark) -> dict:
-    """Total shuffle write / spill bytes over all completed stages."""
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    if not base:
-        return {}
-    app_id = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app_id}/stages?status=complete"
-    try:
-        with urllib.request.urlopen(url, timeout=10) as r:
-            stages = json.loads(r.read().decode())
-    except Exception:
-        return {}
-    return {
-        "shuffle_write_b": sum(s.get("shuffleWriteBytes", 0) for s in stages),
-        "shuffle_read_b": sum(s.get("shuffleReadBytes", 0) for s in stages),
-        "spill_b": sum(s.get("diskBytesSpilled", 0) for s in stages),
-    }
-
-
 def _build(op: str, docs, spark):
     import pyspark.sql.functions as F
 
@@ -104,6 +83,7 @@ def worker(op: str, pages_n: int, cores: int, seed: int) -> None:
     from ny_campaign_finance_dedupe_spark.operators import dedup
     from ny_campaign_finance_dedupe_spark.session import get_spark
     from ny_campaign_finance_dedupe_spark.synth import synth_pages
+    from tools.stage_telemetry import shuffle_totals
 
     heap = f"{4 * cores}g"
     spark = get_spark(
@@ -123,7 +103,7 @@ def worker(op: str, pages_n: int, cores: int, seed: int) -> None:
     ).persist()
     n_in = docs.count()  # materialize input outside the timed region
 
-    before = _rest_totals(spark)
+    before = shuffle_totals(spark)
     t0 = time.perf_counter()
     err = None
     try:
@@ -136,7 +116,7 @@ def worker(op: str, pages_n: int, cores: int, seed: int) -> None:
     except Exception as e:  # loud-bound refusals are a finding, not a crash
         err = f"{type(e).__name__}: {e}"[:400]
     wall = time.perf_counter() - t0
-    after = _rest_totals(spark)
+    after = shuffle_totals(spark)
     rec = {
         "op": op,
         "pages": pages_n,
@@ -145,9 +125,11 @@ def worker(op: str, pages_n: int, cores: int, seed: int) -> None:
         "wall_s": round(wall, 1),
         "error": err,
     }
+    # a failed snapshot on either side leaves the deltas unknown (null),
+    # never differenced against 0: a missing "before" would charge the
+    # set-up stages' shuffle to the operator
     for k in ("shuffle_write_b", "shuffle_read_b", "spill_b"):
-        if k in after:
-            rec[k] = after.get(k, 0) - before.get(k, 0)
+        rec[k] = after[k] - before[k] if before and after else None
     if err is None:
         dedup.release(out)
     print("WING " + json.dumps(rec), flush=True)

@@ -12,10 +12,12 @@ candidate mechanisms, but executor task metrics can:
 - python worker death/respawn -> numFailedTasks > 0 (task retries)
 - spill                       -> memoryBytesSpilled > 0
 
-Used by tools/scaling_bench.py when the worker enables the UI
-(spark.ui.enabled=true, port 0). Pipeline stages are identified by the
-job group DedupePipeline.run sets around each stage; anything outside a
-group (synth input materialization, run-stats) is ignored.
+Used by tools/scaling_bench.py and perfbench/tracing.py when the
+session enables the UI (spark.ui.enabled=true, port 0). Pipeline stages
+are identified by the job group DedupePipeline.run sets around each
+stage; anything outside a group (synth input materialization,
+run-stats) is ignored. ``shuffle_totals`` is the app-wide shuffle/spill
+snapshot tools/llm_wing_stress.py differences around one operator.
 """
 
 from __future__ import annotations
@@ -24,24 +26,45 @@ import json
 import urllib.request
 
 
+def _rest_get(spark, path: str):
+    """GET ``path`` under this application's UI REST API, parsed. Raises
+    when the UI is disabled or unreachable; callers catch and report
+    None (telemetry is best-effort: it must never fail a measurement
+    run)."""
+    base = spark.sparkContext.uiWebUrl
+    if not base:
+        raise RuntimeError("Spark UI disabled")
+    app_id = spark.sparkContext.applicationId
+    url = f"{base}/api/v1/applications/{app_id}{path}"
+    with urllib.request.urlopen(url, timeout=10) as r:
+        return json.loads(r.read().decode())
+
+
+def shuffle_totals(spark) -> dict | None:
+    """{shuffle_write_b, shuffle_read_b, spill_b} summed over all
+    completed stages of the application, or None when the UI is
+    disabled or unreachable."""
+    try:
+        stages = _rest_get(spark, "/stages?status=complete")
+    except Exception:
+        return None
+    return {
+        "shuffle_write_b": sum(s.get("shuffleWriteBytes", 0) for s in stages),
+        "shuffle_read_b": sum(s.get("shuffleReadBytes", 0) for s in stages),
+        "spill_b": sum(s.get("diskBytesSpilled", 0) for s in stages),
+    }
+
+
 def stage_exec_metrics(spark) -> dict | None:
     """{pipeline_stage: {run_s, cpu_s, gc_s, failed_tasks, spill_mb}}
     aggregated over that stage's Spark stages, or None when the UI is
     disabled or unreachable (callers treat telemetry as best-effort:
     it must never fail a measurement run)."""
-    base = spark.sparkContext.uiWebUrl
-    if not base:
-        return None
-    app_id = spark.sparkContext.applicationId
-
-    def get(path: str):
-        url = f"{base}/api/v1/applications/{app_id}{path}"
-        with urllib.request.urlopen(url, timeout=10) as r:
-            return json.loads(r.read().decode())
-
     try:
-        jobs = get("/jobs")
-        stages = get("/stages?status=complete") + get("/stages?status=failed")
+        jobs = _rest_get(spark, "/jobs")
+        stages = _rest_get(spark, "/stages?status=complete") + _rest_get(
+            spark, "/stages?status=failed"
+        )
     except Exception:
         return None
     group_of: dict[int, str] = {}
