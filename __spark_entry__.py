@@ -974,7 +974,10 @@ def q_incremental_match(spark, sf_dir):
     cfg = _portable_cfg()
     index = incremental.build_index(idx_pages, cfg)
     return (
-        incremental.match_batch(batch, index, cfg, n_matches=1, threshold=0.5)
+        incremental.match_batch(
+            DedupePipeline(cfg).extract(batch), index, cfg,
+            n_matches=1, threshold=0.5,
+        )
         .select("query_url", "match_url", "rank")
         .orderBy("query_url")
     )
@@ -983,8 +986,9 @@ def q_incremental_match(spark, sf_dir):
 def q_crawl_entity_map(spark, sf_dir):
     """The composed incremental crawl pipeline (streaming/crawl.py —
     the foreachBatch production shape, driven here as its batch-callable
-    kernel): content-key the batch (every 7th doc), Bloom-probe it
-    against the indexed history (the rest), drop already-seen pages,
+    kernel): extract and content-key the batch (every 7th doc) once,
+    Bloom-probe it against the indexed history (the rest), drop
+    already-seen pages,
     gazetteer-match the novel remainder (portable blocking -> features
     -> logistic threshold 0.5), and emit the entity-map rows — matched
     pages adopt their best match's url as cluster id, unmatched pages

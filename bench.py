@@ -2,7 +2,8 @@
 
 Runs the headline queries from ``__spark_entry__.queries()`` at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line::
+``local[$SPARK_GRAFT_CPUS]``, each timed (and warmed up) as a full
+write to Spark's ``noop`` sink, and prints ONE JSON line::
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -137,7 +138,7 @@ def _fast_er(spark, sf_dir):
     store = CheckpointStore(entry_mod._scratch_mkdtemp("nycfd_benchq_"))
     em = DedupePipeline(PipelineConfig(), store).run(spark, pages)
     # the returned DF reads the cluster checkpoint lazily, so removal
-    # must wait until _time_df has counted it
+    # must wait until _time_df has written it
     _SCRATCH_STORES.append(store.root)
     return em.select("record_id", "cluster_id")
 
@@ -157,15 +158,18 @@ BENCH_VARIANT = {
 }
 
 
-def _time_df(fn, *args) -> tuple[float, int]:
+def _time_df(fn, *args) -> float:
+    """Seconds to build and fully write ``fn(*args)`` to a noop sink:
+    every column is produced, unlike ``count()``, under which column
+    pruning deletes part of the operator."""
     t0 = time.perf_counter()
     df = fn(*args)
-    n = df.count()
+    df.write.format("noop").mode("overwrite").save()
     secs = time.perf_counter() - t0
     # reclaim operator-internal caches between queries (dedup._tag_persisted):
     # this loop materializes-and-discards 17 results in one session
     dedup.release(df)
-    return secs, n
+    return secs
 
 
 def main() -> None:
@@ -222,7 +226,7 @@ def main() -> None:
             while _SCRATCH_STORES:
                 shutil.rmtree(_SCRATCH_STORES.pop(), ignore_errors=True)
         try:
-            secs, _ = _time_df(fn, spark, sf_dir)
+            secs = _time_df(fn, spark, sf_dir)
             timings[name] = round(secs, 3)
         except Exception as e:  # pragma: no cover - bench robustness
             print(f"# bench {name} FAILED: {e}", file=sys.stderr)

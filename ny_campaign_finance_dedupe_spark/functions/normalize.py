@@ -21,7 +21,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 
 # The reference's full 20-group address-abbreviation table, canonical
 # form first (clean_donors.py:57-78 address_words, verbatim).
@@ -255,6 +255,29 @@ def extract_text_udf():
     recomputed downstream.
     """
     return F.pandas_udf(_extract_batch, "string")
+
+
+def with_ntext(pages: DataFrame) -> DataFrame:
+    """pages(text, html, ...) + ``ntext``: THE page-text chain that batch
+    extract, the ingest content key and the crawl match all run — html
+    fallback -> normalize_text -> gated N4 + N5 canonicalization.
+
+    pandas-UDF arguments are evaluated unconditionally, so both UDF
+    inputs are gated JVM-side: extraction sees html only where ``text``
+    is null, canonicalize_udf only pages matching any_abbrev_pattern.
+    ``_nt`` is its own projection so the normalize chain runs once for
+    its three uses (gate, UDF argument, coalesce fallback)."""
+    txt = F.coalesce(
+        F.col("text"),
+        extract_text_udf()(F.when(F.col("text").isNull(), F.col("html"))),
+    )
+    c = F.col("_nt")
+    gated = canonicalize_udf()(F.when(c.rlike(any_abbrev_pattern()), c))
+    return (
+        pages.withColumn("_nt", normalize_text(txt))
+        .withColumn("ntext", F.coalesce(gated, c))
+        .drop("_nt")
+    )
 
 
 # URL canonicalization (web-pipeline dedup prefilter): params whose whole

@@ -133,6 +133,21 @@ def build_bloom_index(
     )
 
 
+def resolve_strategy(
+    index: DataFrame,
+    strategy: str = "auto",
+    broadcast_max_bytes: int = BROADCAST_MAX_BYTES,
+) -> str:
+    """The probe strategy ``bloom_probe`` will run: an explicit one as
+    given; ``'auto'`` sums the index's bitmap bytes (one small agg job)
+    and picks broadcast up to ``broadcast_max_bytes``, the bucket join
+    above. Callers probing one fixed index many times resolve it once."""
+    if strategy != "auto":
+        return strategy
+    tot_bits = index.agg(F.sum("m")).collect()[0][0] or 0
+    return "broadcast" if tot_bits // 8 <= broadcast_max_bytes else "join"
+
+
 def bloom_probe(
     batch: DataFrame,
     index: DataFrame,
@@ -165,11 +180,7 @@ def bloom_probe(
     factorizes on the blob and tests each group with vectorized numpy
     bit probes.
     """
-    if strategy == "auto":
-        tot_bits = index.agg(F.sum("m")).collect()[0][0] or 0
-        strategy = (
-            "broadcast" if tot_bits // 8 <= broadcast_max_bytes else "join"
-        )
+    strategy = resolve_strategy(index, strategy, broadcast_max_bytes)
     key_col = F.col(key) if isinstance(key, str) else key
     h1, h2 = _hash_cols(key_col)
     keyed = batch.withColumns(

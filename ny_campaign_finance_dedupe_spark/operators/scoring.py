@@ -148,11 +148,16 @@ class LogisticModel:
     )
     bias: float = -7.0
 
-    def score_column(self) -> Column:
+    def logit_column(self) -> Column:
+        """z = w.x + b. Rank on this, not on the score: the sigmoid
+        saturates to 1.0 and ties distinct logits."""
         z = F.lit(float(self.bias))
         for name, w in self.weights.items():
             z = z + F.lit(float(w)) * F.col(name)
-        return 1.0 / (1.0 + F.exp(-z))
+        return z
+
+    def score_column(self) -> Column:
+        return 1.0 / (1.0 + F.exp(-self.logit_column()))
 
     def to_dict(self) -> dict:
         return {"weights": self.weights, "bias": self.bias}

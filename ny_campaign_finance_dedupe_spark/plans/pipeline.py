@@ -102,48 +102,20 @@ class DedupePipeline:
 
     # -- stages ---------------------------------------------------------------
     def extract(self, pages: DataFrame) -> DataFrame:
-        """Normalize text (byte-identical per url).
+        """pages -> (url, warc_ts, lang, ntext), byte-identical per url.
 
-        If ``text`` is null but ``html`` is present, extract text from the
-        html bytes (input_hint: text byte-identically derivable from html).
-        The UDF input is gated on ``text IS NULL`` — Spark evaluates
-        pandas-UDF arguments unconditionally (no short-circuit through
-        coalesce), so ungated it would parse every page's html.
+        ``lang_filter`` (P1-analog person/type filter,
+        campaign_finance_dedupe.py:154-159), then the one page-text
+        chain :func:`normalize.with_ntext` (html fallback where ``text``
+        is null, normalize_text, gated abbreviation canonicalization) —
+        the same chain the ingest content key and the crawl match run,
+        so every path agrees on a page's text. Runs once per page: the
+        batch pipeline checkpoints this stage and the crawl
+        localCheckpoints it per micro-batch.
         """
-        cfg = self.cfg
-        df = pages
-        if cfg.lang_filter:
-            # P1-analog person/type filter (campaign_finance_dedupe.py:154-159)
-            df = df.where(F.col("lang") == cfg.lang_filter)
-        txt = F.coalesce(
-            F.col("text"),
-            normalize.extract_text_udf()(
-                F.when(F.col("text").isNull(), F.col("html"))
-            ),
-        )
-        # lowercase/punct-strip FIRST (the reference cleans processed_
-        # donors, already lowercased at load), THEN the guarded 20-group
-        # abbrev canonicalization + org-name expansion (N4 + N5) as an
-        # opaque Arrow UDF — every native shape of the 23-step chain is
-        # optimizer-toxic (see normalize.canonicalize_udf). The UDF input
-        # is gated JVM-side (rlike on the combined abbreviation pattern):
-        # pandas-UDF arguments are evaluated unconditionally, so the gate
-        # must live INSIDE the argument — non-matching pages ship a null
-        # through Arrow instead of their whole text (~2x off the UDF
-        # overhead; the two-step select computes the normalize chain once
-        # — CollapseProject declines to inline a non-cheap expression
-        # referenced three times).
-        pre = df.select(
-            "url", "warc_ts", "lang",
-            normalize.normalize_text(txt).alias("_nt"),
-        )
-        c = F.col("_nt")
-        gated = normalize.canonicalize_udf()(
-            F.when(c.rlike(normalize.any_abbrev_pattern()), c)
-        )
-        return pre.select(
-            "url", "warc_ts", "lang", F.coalesce(gated, c).alias("ntext")
-        )
+        if self.cfg.lang_filter:
+            pages = pages.where(F.col("lang") == self.cfg.lang_filter)
+        return normalize.with_ntext(pages).select("url", "warc_ts", "lang", "ntext")
 
     def signatures(self, extracted: DataFrame) -> DataFrame:
         """MinHash + SimHash signatures (plus the exact-dedup sha2 key)

@@ -3,24 +3,26 @@ crawler actually runs, wiring three pieces that each exist (and are
 tested) separately into ONE foreachBatch streaming query:
 
   readStream(pages)
-    -> content key (ingest.with_content_key — the batch pipeline's
-       exact-identity chain, so stream and batch agree on "same page")
+    -> DedupePipeline.extract (the one page-text chain, lang_filter
+       included) + ingest.exact_key (the ingest dedup's key, so stream
+       and batch agree on "same page"), localCheckpointed: every step
+       below reads that frame, so a tick normalizes each page once
     -> Bloom novelty vs indexed history (operators/bloom — negatives
        are certainly novel and skip the join entirely; the small
        positive remainder pays an exact confirm anti-join against the
        history KEY projection, never the corpus)
-    -> gazetteer match of the novel pages against the static blocking
-       index (incremental.match_batch — same predicates, features and
-       model as batch)
+    -> gazetteer match of the novel pages, with their ntext, against
+       the static blocking index (incremental.match_batch — same
+       predicates, features and model as batch; it never re-extracts)
     -> entity-map append: a novel page adopts its best match's url as
        cluster id (the gazetteer decision, reference api.py:612-896),
        or founds a new singleton cluster when nothing clears the
        threshold. Non-novel pages are suppressed before matching —
        that is the point of the Bloom stage at 100 TB/day.
 
-Scale shape per micro-batch: one Arrow bloom probe (broadcast or
-bucket-join, size-gated — bloom.bloom_probe's strategy knob), one
-anti-join whose history side is the distinct key column, one
+Scale shape per micro-batch: one Arrow extract pass, one Arrow bloom
+probe (broadcast or bucket-join, size-gated — bloom.resolve_strategy),
+one anti-join whose history side is the distinct key column, one
 stream-static equi-join on block_key for the (novel-only) batch, one
 window rank. History artifacts (bloom index + key projection + blocking
 index) are built once per ingest epoch and persisted; between epochs
@@ -38,6 +40,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..operators import bloom
+from ..plans.pipeline import DedupePipeline
 from . import incremental, ingest
 
 PAGE_COLS = ["url", "warc_ts", "html", "text", "lang"]
@@ -81,21 +84,25 @@ def match_novel_batch(
     Returns (record_id, cluster_id, cluster_score, exact_key, matched):
     cluster_id is the best gazetteer match's url when one clears the
     threshold, else the page's own url (new singleton entity). Pages
-    whose content key is already in history yield no row (suppressed).
-    Pure DataFrame ops — runs identically under foreachBatch or as a
-    plain batch call (how the tests drive it deterministically).
+    whose content key is already in history yield no row (suppressed),
+    and so do pages ``cfg.lang_filter`` drops, as in batch extract.
+    Both Bloom branches, both of match_batch's reads and the
+    adopt-or-found join read one extracted, keyed, localCheckpointed
+    frame. Runs identically under foreachBatch or as a plain batch call
+    (how the tests drive it deterministically).
     """
-    keyed = ingest.with_content_key(batch).select(*PAGE_COLS, "exact_key")
+    keyed = (
+        DedupePipeline(cfg)
+        .extract(batch)
+        .withColumn("exact_key", ingest.exact_key())
+        .localCheckpoint()
+    )
     novel = bloom.novel_rows(
         keyed, "exact_key", history_keys, bloom_index,
         n_buckets=n_buckets, strategy=strategy,
     )
     matches = incremental.match_batch(
-        novel.select(*PAGE_COLS),
-        index,
-        cfg,
-        n_matches=1,
-        threshold=threshold,
+        novel, index, cfg, n_matches=1, threshold=threshold
     )
     best = matches.where(F.col("rank") == 1).select(
         F.col("query_url").alias("record_id"),
@@ -145,16 +152,9 @@ def start_crawl_pipeline(
     reaches the batch. It exists so that a stateful stage added
     downstream inherits sane late-data bounds.
     """
-    if strategy == "auto":
-        # The index is fixed for the query's lifetime: resolve the
-        # size-gated probe strategy ONCE here instead of paying the
-        # auto agg job inside every micro-batch.
-        tot_bits = bloom_index.agg(F.sum("m")).collect()[0][0] or 0
-        strategy = (
-            "broadcast"
-            if tot_bits // 8 <= bloom.BROADCAST_MAX_BYTES
-            else "join"
-        )
+    # the index is fixed for the query's lifetime: resolve the probe
+    # strategy once here, not as an auto agg job inside every batch
+    strategy = bloom.resolve_strategy(bloom_index, strategy)
 
     def sink(batch_df: DataFrame, batch_id: int):
         out = match_novel_batch(

@@ -7,13 +7,14 @@ inverted index becomes a *stream-static equi-join on block_key* against a
 persisted blocking map; the per-block top-N becomes a window rank inside
 ``foreachBatch``.
 
-Shape: ``match_batch`` = build batch blocking keys -> join static index
--> score (same native expression as batch) -> top-N per query url. The
-streaming query that runs it per micro-batch is
-crawl.start_crawl_pipeline (Bloom novelty first, then this match). The
-static index is reloaded per batch (cheap metadata op with
-parquet/Iceberg), so index/unindex are plain appends/deletes on the
-index table between batches.
+Shape: ``match_batch`` = batch blocking keys over extract-stage rows ->
+join static index -> score (same native expression as batch) -> top-N
+per query url. It never extracts: the caller runs the one page-text
+chain (``DedupePipeline.extract``) once per page; only ``build_index``
+extracts here. crawl.start_crawl_pipeline runs the match per
+micro-batch, after Bloom novelty. The static index is reloaded per batch
+(cheap metadata op with parquet/Iceberg), so index/unindex are plain
+appends/deletes on the index table between batches.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from ..operators import scoring
+from ..plans.pipeline import DedupePipeline
 
 
 def build_index(pages: DataFrame, cfg) -> DataFrame:
@@ -32,8 +34,6 @@ def build_index(pages: DataFrame, cfg) -> DataFrame:
     identically (the reference shares Fingerprinter between Dedupe and
     Gazetteer for the same reason, blocking.py:48-104).
     """
-    from ..plans.pipeline import DedupePipeline
-
     pipe = DedupePipeline(cfg)
     extracted = pipe.extract(pages)
     bm = pipe.block(pipe.signatures(extracted))
@@ -51,23 +51,23 @@ def match_batch(
     n_matches: int = 1,
     threshold: float | None = None,
 ) -> DataFrame:
-    """One micro-batch: new pages -> top-N scored matches vs the index.
+    """One micro-batch of extract-stage rows (url, warc_ts, lang, ntext —
+    ``DedupePipeline(cfg).extract`` output; extra columns are ignored)
+    -> top-N scored matches vs the index.
 
-    Returns (query_url, match_url, score, rank). Pure DataFrame ops, so
-    it runs identically under foreachBatch or as a plain batch call
-    (which is how the tests drive it deterministically).
+    Returns (query_url, match_url, score, rank), ranked on the logit then
+    url like the oracles (a saturated sigmoid ties distinct logits). Pure
+    DataFrame ops, so it runs identically under foreachBatch or as a
+    plain batch call (which is how the tests drive it deterministically).
     ``threshold=None`` takes ``cfg.score_threshold`` — stream and batch
     accept at the SAME configured score unless explicitly overridden.
     """
-    from ..plans.pipeline import DedupePipeline
-
     if threshold is None:
         threshold = getattr(cfg, "score_threshold", 0.5)
     pipe = DedupePipeline(cfg)
-    ext = pipe.extract(batch)
-    bm = pipe.block(pipe.signatures(ext))
+    bm = pipe.block(pipe.signatures(batch))
     qk = bm.join(
-        ext.select(F.col("url").alias("record_id"), F.col("ntext").alias("q_ntext")),
+        batch.select(F.col("url").alias("record_id"), F.col("ntext").alias("q_ntext")),
         "record_id",
     ).select("block_key", F.col("record_id").alias("query_url"), "q_ntext")
     cand = (
@@ -81,8 +81,10 @@ def match_batch(
         )
     )
     model = scoring.LogisticModel.from_dict(cfg.model)
-    scored = scoring.score_pairs(feats, model)
-    w = Window.partitionBy("query_url").orderBy(F.desc("score"), F.asc("url"))
+    scored = scoring.score_pairs(feats, model).withColumn(
+        "_z", model.logit_column()
+    )
+    w = Window.partitionBy("query_url").orderBy(F.desc("_z"), F.asc("url"))
     return (
         scored.where(F.col("score") >= threshold)
         .withColumn("rank", F.row_number().over(w))

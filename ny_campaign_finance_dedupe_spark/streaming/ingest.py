@@ -1,8 +1,9 @@
 """Streaming crawl-ingest exact dedup: suppress re-crawled duplicate
 pages at ingestion time, before they ever reach storage.
 
-Batch twin: ``operators/dedup.exact_duplicates`` (P5) — the key is the
-same sha2 over the same normalization chain, so a page admitted by the
+Batch twin: ``operators/dedup.exact_duplicates`` (P5). The key is the
+same sha2 over the one page-text chain (``normalize.with_ntext``, which
+batch extract and the crawl match also run), so a page admitted by the
 stream and a page deduped in batch agree on identity. The streaming form
 uses Spark's native stateful dedup operator
 (``dropDuplicatesWithinWatermark``): state is keyed by the content hash,
@@ -23,63 +24,32 @@ from __future__ import annotations
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..functions import normalize
 
 
-def content_key(text_col, html_col=None) -> "F.Column":
-    """sha2-256 identity key over the SAME ntext chain the batch
-    pipeline hashes (DedupePipeline.extract -> signatures' exact_key:
-    html fallback, normalize_text, gated abbrev canonicalization), so
-    stream and batch dedup agree on what "the same page" means — an
-    abbreviation variant ('123 Main St' vs '123 Main Street') is ONE
-    page in both. Single-expression form: fine for a key (one consumer);
-    the batch extract's two-step select exists because IT fans ntext out
-    to many downstream expressions."""
-    txt = text_col
-    if html_col is not None:
-        txt = F.coalesce(
-            text_col,
-            normalize.extract_text_udf()(
-                F.when(text_col.isNull(), html_col)
-            ),
-        )
-    nt = normalize.normalize_text(txt)
-    gated = normalize.canonicalize_udf()(
-        F.when(nt.rlike(normalize.any_abbrev_pattern()), nt)
-    )
-    return F.sha2(F.coalesce(gated, nt), 256)
+def exact_key() -> Column:
+    """The content key over an ``ntext`` column: sha2-256 of the
+    normalized text, the batch pipeline's exact_key. A NULL ntext (no
+    text AND no extractable html) keys on the url itself, so such pages
+    are never dropped as dups of each other — matching batch, where a
+    null exact_key never forms an exact block (pipeline.predicates)."""
+    return F.coalesce(F.sha2(F.col("ntext"), 256), F.col("url"))
 
 
 def with_content_key(pages: DataFrame) -> DataFrame:
-    """pages(url, warc_ts, html, text, ...) + exact_key. NULL-normalized
-    texts (no text AND no extractable html) get the url itself as key
-    (never dropped as dups of each other — matching batch, where a null
-    exact_key never forms an exact block, pipeline.predicates)."""
-    # two-step select: nt feeds three expressions (rlike gate, UDF arg,
-    # coalesce fallback) — compute the normalize chain once per row
-    nt = normalize.normalize_text(
-        F.coalesce(
-            F.col("text"),
-            normalize.extract_text_udf()(
-                F.when(F.col("text").isNull(), F.col("html"))
-            ),
-        )
+    """pages(url, warc_ts, html, text, ...) + exact_key: the one
+    page-text chain (normalize.with_ntext — what batch extract runs, so
+    stream and batch agree on what "the same page" means, and an
+    abbreviation variant is ONE page in both) keyed by
+    :func:`exact_key`; ntext itself is dropped."""
+    return (
+        normalize.with_ntext(pages)
+        .withColumn("exact_key", exact_key())
+        .drop("ntext")
     )
-    pre = pages.withColumn("_nt", nt)
-    gated = normalize.canonicalize_udf()(
-        F.when(
-            F.col("_nt").rlike(normalize.any_abbrev_pattern()), F.col("_nt")
-        )
-    )
-    return pre.withColumn(
-        "exact_key",
-        F.coalesce(
-            F.sha2(F.coalesce(gated, F.col("_nt")), 256), F.col("url")
-        ),
-    ).drop("_nt")
 
 
 def start_page_stream(

@@ -1,9 +1,12 @@
 """Incremental (gazetteer-style) matching: batch kernel + streaming query."""
 
-import pyspark.sql.functions as F
 import pytest
 
-from ny_campaign_finance_dedupe_spark.plans.pipeline import PipelineConfig
+from ny_campaign_finance_dedupe_spark.operators.scoring import LogisticModel
+from ny_campaign_finance_dedupe_spark.plans.pipeline import (
+    DedupePipeline,
+    PipelineConfig,
+)
 from ny_campaign_finance_dedupe_spark.streaming import incremental
 from ny_campaign_finance_dedupe_spark.synth import PAGES_SCHEMA, synth_pages
 
@@ -24,7 +27,8 @@ def test_match_batch_finds_planted_match(spark, corpus):
           one["text"], one["lang"])],
         PAGES_SCHEMA,
     )
-    out = incremental.match_batch(batch, index, cfg, n_matches=1).collect()
+    ext = DedupePipeline(cfg).extract(batch)
+    out = incremental.match_batch(ext, index, cfg, n_matches=1).collect()
     assert len(out) == 1
     assert out[0]["match_url"] == one["url"]
     assert out[0]["score"] > 0.9
@@ -40,8 +44,38 @@ def test_match_batch_no_false_match(spark, corpus):
           "en")],
         PAGES_SCHEMA,
     )
-    out = incremental.match_batch(batch, index, cfg, n_matches=3).collect()
+    ext = DedupePipeline(cfg).extract(batch)
+    out = incremental.match_batch(ext, index, cfg, n_matches=3).collect()
     assert out == []
+
+
+def test_match_batch_ties_break_on_logit(spark, corpus):
+    """Candidates rank on the logit, as both oracles do (ORDER BY z DESC,
+    match_url): under a scaled-up model the sigmoid saturates and two
+    candidates both score 1.0, and the exact copy (higher logit) must
+    still beat the near-duplicate whose url sorts first."""
+    base = corpus.limit(1).collect()[0]["text"]
+    model = LogisticModel()
+    cfg = PipelineConfig(model=LogisticModel(
+        weights={k: 10 * w for k, w in model.weights.items()},
+        bias=10 * model.bias,
+    ).to_dict())
+    indexed = spark.createDataFrame(
+        [("https://a.example.com/near", None, None, base + " zzzextra", "en"),
+         ("https://b.example.com/copy", None, None, base, "en")],
+        PAGES_SCHEMA,
+    )
+    index = incremental.build_index(indexed, cfg).localCheckpoint()
+    batch = spark.createDataFrame(
+        [("https://q.example.com/1", None, None, base, "en")], PAGES_SCHEMA
+    )
+    out = incremental.match_batch(
+        DedupePipeline(cfg).extract(batch), index, cfg, n_matches=2
+    ).collect()
+    assert [r["score"] for r in out] == [1.0, 1.0]
+    assert {r["rank"]: r["match_url"] for r in out} == {
+        1: "https://b.example.com/copy", 2: "https://a.example.com/near"
+    }
 
 
 def test_ingest_dedup_suppresses_recrawls_across_restart(spark, tmp_path):
@@ -94,27 +128,16 @@ def test_ingest_dedup_suppresses_recrawls_across_restart(spark, tmp_path):
     assert len(got2) == 3  # re-crawl suppressed by RESTORED state
     assert "https://a.com/3" in urls
     assert "https://a.com/1?recrawl" not in urls
-    # normalization-identity: case/punct variants are the SAME page
-    k = ingest.content_key
-    df = spark.createDataFrame(
-        [("Page One, Body: TEXT!",), ("page one body text",)], "t string"
-    )
-    keys = {r["k"] for r in df.select(k(F.col("t")).alias("k")).collect()}
-    assert len(keys) == 1
 
 
 def test_ingest_key_matches_batch_exact_key(spark):
     """The stream's content key must equal the batch pipeline's
     exact_key on every page shape — text-only, abbreviation variant
-    (goes through the gated canonicalize UDF), and html-only (text
-    derived by the extraction UDF) — so a page admitted at ingest and a
-    page deduped in batch agree on identity."""
+    (goes through the gated canonicalize UDF), html-only (text derived
+    by the extraction UDF) and case/punctuation variant — so a page
+    admitted at ingest and a page deduped in batch agree on identity."""
     import datetime
 
-    from ny_campaign_finance_dedupe_spark.plans.pipeline import (
-        DedupePipeline,
-        PipelineConfig,
-    )
     from ny_campaign_finance_dedupe_spark.streaming import ingest
 
     t0 = datetime.datetime(2026, 1, 1)
@@ -124,6 +147,8 @@ def test_ingest_key_matches_batch_exact_key(spark):
             ("https://a.com/2", t0, None, "123 Main Street", "en"),
             ("https://a.com/3", t0, b"<p>Hello world</p>", None, "en"),
             ("https://a.com/4", t0, None, "plain page text", "en"),
+            ("https://a.com/5", t0, None, "Page One, Body: TEXT!", "en"),
+            ("https://a.com/6", t0, None, "page one body text", "en"),
         ],
         PAGES_SCHEMA,
     )
@@ -140,7 +165,9 @@ def test_ingest_key_matches_batch_exact_key(spark):
         .select("url", "exact_key")
         .collect()
     }
-    assert batch == stream and len(batch) == 4
+    assert batch == stream and len(batch) == 6
+    # normalization-identity: case/punct variants are the SAME page
+    assert stream["https://a.com/5"] == stream["https://a.com/6"]
 
 
 def test_stateful_ingest_dedup_with_counts(spark, tmp_path):
@@ -360,3 +387,68 @@ def test_match_novel_batch_forwards_bloom_strategy(spark):
         )
     assert rows["broadcast"] == rows["join"]
     assert [r[0] for r in rows["join"]] == ["https://fresh.example.com/y"]
+
+
+@pytest.fixture(scope="module")
+def crawl_history(spark):
+    """(keys, bloom index, blocking index) over 120 history pages, each
+    checkpointed like an epoch's persisted artifacts."""
+    from ny_campaign_finance_dedupe_spark.streaming import crawl
+
+    pages, _ = synth_pages(spark, n_pages=120, seed=19, dup_rate=0.0)
+    history = pages.localCheckpoint()
+    keys, bidx = crawl.build_history_index(history, n_buckets=8)
+    index = incremental.build_index(history, PipelineConfig())
+    return (
+        history, keys.localCheckpoint(), bidx.localCheckpoint(),
+        index.localCheckpoint(),
+    )
+
+
+def test_match_novel_batch_extracts_once(spark, crawl_history):
+    """A tick normalizes each page once: the extract pass sits behind the
+    batch's checkpoint, so the result's plan re-runs no html extraction
+    for any of its consumers (Bloom branches, match, adopt-or-found)."""
+    from ny_campaign_finance_dedupe_spark.streaming import crawl
+
+    history, keys, bidx, index = crawl_history
+    one = history.limit(1).collect()[0]
+    batch = spark.createDataFrame(
+        [("https://near.example.com/b", one["warc_ts"], None,
+          one["text"] + " zzzextra", one["lang"]),
+         ("https://fresh.example.com/c", None, b"<p>fresh html page</p>",
+          None, "en")],
+        PAGES_SCHEMA,
+    )
+    out = crawl.match_novel_batch(
+        batch, keys, bidx, index, PipelineConfig(), n_buckets=8
+    )
+    plan = out._sc._jvm.PythonSQLUtils.explainString(
+        out._jdf.queryExecution(), "extended"
+    )
+    assert "_extract_batch" not in plan, plan
+    assert {r["record_id"] for r in out.collect()} == {
+        "https://near.example.com/b", "https://fresh.example.com/c"
+    }
+
+
+def test_match_novel_batch_honours_lang_filter(spark, crawl_history):
+    """The crawl drops other-language pages as batch extract does: a
+    page whose lang is not cfg.lang_filter yields no entity-map row."""
+    from ny_campaign_finance_dedupe_spark.streaming import crawl
+
+    _, keys, bidx, index = crawl_history
+    batch = spark.createDataFrame(
+        [("https://en.example.com/1", None, None,
+          "an english page with fresh vocabulary qqq", "en"),
+         ("https://fr.example.com/1", None, None,
+          "une page francaise au vocabulaire nouveau qqq", "fr")],
+        PAGES_SCHEMA,
+    )
+    out = crawl.match_novel_batch(
+        batch, keys, bidx, index, PipelineConfig(lang_filter="en"),
+        n_buckets=8,
+    )
+    assert [r["record_id"] for r in out.collect()] == [
+        "https://en.example.com/1"
+    ]

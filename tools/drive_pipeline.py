@@ -10,8 +10,7 @@ t0 = time.time()
 spark = get_spark("drive", master="local[8]")
 spark.sparkContext.setLogLevel("ERROR")
 pages, entities = synth.synth_pages(spark, n_pages=3000, seed=42)
-txt = F.coalesce(F.col("text"), normalize.extract_text_udf()(F.col("html")))
-df = pages.select("url", normalize.canonicalize_udf()(normalize.normalize_text(txt)).alias("ntext"))
+df = normalize.with_ntext(pages).select("url", "ntext")
 shingles = keygen.word_ngrams(F.col("ntext"), 3)
 df = df.withColumn("shashes", hashing.shingle_hashes(shingles))
 df = df.withColumn("sig", hashing.minhash_signature_udf(64)(F.col("shashes")))
