@@ -246,25 +246,23 @@ def main() -> None:
     # size, ADJACENT to its timed run (same eviction argument as the
     # per-query warm-up above; measured 24.5 s cold -> 10.1 s warm for
     # the identical 40k-page job — JIT latency, not operator cost).
+    def _synth_er(store, pages):
+        return DedupePipeline(PipelineConfig(), store).run(spark, pages)
+
     try:
         wpages, _ = synth_pages(spark, n_pages=n_bench_pages // 20, seed=7)
-        ws = entry_mod._scratch_mkdtemp("nycfd_warm_")
-        DedupePipeline(PipelineConfig(), CheckpointStore(ws)).run(
-            spark, wpages
-        ).count()
-        shutil.rmtree(ws, ignore_errors=True)
+        ws = CheckpointStore(entry_mod._scratch_mkdtemp("nycfd_warm_"))
+        _time_df(_synth_er, ws, wpages)
+        shutil.rmtree(ws.root, ignore_errors=True)
     except Exception as e:  # pragma: no cover - warm-up is best-effort
         print(f"# warm-up skipped: {e}", file=sys.stderr)
 
     pages, _ = synth_pages(spark, n_pages=n_bench_pages, seed=42)
     pages = pages.persist()
     pages.count()  # materialize input outside the timed region
-    scratch = entry_mod._scratch_mkdtemp("nycfd_bench_")
-    t0 = time.perf_counter()
-    store = CheckpointStore(scratch)
-    em = DedupePipeline(PipelineConfig(), store).run(spark, pages)
-    n_out = em.count()
-    er_secs = time.perf_counter() - t0
+    store = CheckpointStore(entry_mod._scratch_mkdtemp("nycfd_bench_"))
+    er_secs = _time_df(_synth_er, store, pages)
+    n_out = store.read(spark, "cluster").count()
     shutil.rmtree(store.root, ignore_errors=True)
     timings["er_pipeline_synth"] = round(er_secs, 3)
     pages_per_sec = n_bench_pages / er_secs if er_secs > 0 else 0.0

@@ -14,8 +14,8 @@ and mostly novel. The standard engine answer is a *Bloom-filter index*:
    power of two >= bits_per_key * n). The index table is tiny relative
    to history (bits_per_key/8 bytes per key, ~2 GB per 10^9 keys at the
    default 16 bits) and is a durable artifact: persist it once, reuse it
-   for every subsequent batch (the TableFormat seam in
-   sources/checkpoint.py writes it like any other stage output).
+   for every subsequent batch (write it as parquet like any other stage
+   output).
 
 2. ``bloom_probe`` — flags each batch row ``bloom_maybe`` by testing the
    k double-hashed bit positions (Kirsch-Mitzenmacher: pos_i = h1 + i*h2
@@ -289,7 +289,7 @@ def bloom_novelty(
     anti-join, and the history side of that join is its (distinct) key
     projection — never the payload. Pass a prebuilt ``index`` to
     amortize the history scan across batches (the production shape:
-    build once per ingest epoch, persist via TableFormat, probe every
+    build once per ingest epoch, persist as parquet, probe every
     batch). Returns (record_id, novel_key) ordered by caller.
     """
     bkey = payload_key(F.col(payload)).alias("_k")

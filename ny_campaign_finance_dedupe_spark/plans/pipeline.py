@@ -56,11 +56,6 @@ class PipelineConfig:
     salt_hot_threshold: int = 1_000
     salt: int = 16
     score_threshold: float = 0.5
-    # optional C3 refinement: re-cluster each CC component with HAC cut
-    # at (1 - score_threshold) — the reference's per-component
-    # hierarchical pass (clustering.py:196-238); off by default because
-    # the pairwise-F1 contract is met by CC-at-threshold (SURVEY.md §7e)
-    use_hac: bool = False
     max_component: int = clustering.MAX_COMPONENT
     lang_filter: str | None = None
     # Compact block keys to 64-bit xxhash64 before the blocking map is
@@ -237,22 +232,6 @@ class DedupePipeline:
             self.cfg.max_component,
             report=c2_report,
         )
-        if self.cfg.use_hac:
-            from ..operators import refine
-
-            refined = refine.hac_refine(
-                scored.where(F.col("score") >= self.cfg.score_threshold),
-                cl.select("record_id", "cluster_id"),
-                threshold=self.cfg.score_threshold,
-            )
-            conf = clustering.member_confidence(
-                scored.where(F.col("score") >= self.cfg.score_threshold), refined
-            )
-            cl = refined.join(conf, "record_id", "left").select(
-                "record_id",
-                "cluster_id",
-                F.coalesce("cluster_score", F.lit(1.0)).alias("cluster_score"),
-            )
         return clustering.add_singletons(records, "url", cl)
 
     # -- orchestration ----------------------------------------------------------

@@ -1,4 +1,3 @@
-"""Sources & sinks: stage checkpoints with lineage/metrics, schema'd
-readers/writers. Parquet-backed in the sandbox; the writer abstraction is
-the Iceberg seam — on a cluster, swap ``format('parquet')`` for
-``writeTo(...).using('iceberg')`` in one place (CheckpointStore._write)."""
+"""Sources & sinks: stage checkpoints with lineage/metrics
+(``checkpoint.CheckpointStore``, overwrite-mode parquet per stage) and
+schema'd readers/writers."""

@@ -7,21 +7,18 @@ and ``run_stats_only.py`` (recompute-from-entity_map) possible, plus the
 (campaign_finance_dedupe.py:473-481, schema data_load/pre_init_db.py:23).
 
 Here every stage writes:
-- its output table under ``<root>/<run_id>/<stage>/data`` through a
-  ``TableFormat`` (ParquetFormat default — hive-partitioned when the
-  stage has a partition spec; IcebergFormat for catalog-backed tables
-  on a cluster with the runtime jar),
+- its output as overwrite-mode parquet under
+  ``<root>/<run_id>/<stage>/data``,
 - a ``_SUCCESS``-gated marker with the stage params hash, so resume only
   reuses a checkpoint produced by an identical configuration,
 - per-partition lineage rows (partition_id, rows_out) + wall clock into
   ``<root>/match_runs`` (FIXTURES.md §5 schema).
 
 Partition counts come from the parquet file footers of the written
-checkpoint — metadata-only, the Iceberg-manifest-stats analog: no extra
-scan job per stage, and decoding every footer doubles as a read-back
-validation (a truncated or corrupt file fails right here, not three
-stages later). Non-parquet formats fall back to one narrow agg over
-``spark_partition_id()``.
+checkpoint — metadata-only: no extra scan job per stage (pinned by
+test_checkpoint_write_runs_no_extra_job), and decoding every footer
+doubles as a read-back validation (a truncated or corrupt file fails
+right here, not three stages later).
 """
 
 from __future__ import annotations
@@ -51,241 +48,17 @@ MATCH_RUNS_SCHEMA = T.StructType(
 )
 
 
-class TableFormat:
-    """The durable-table seam (reference analog: the Postgres DDL in
-    init_postgres_db.py:61-77,203-210 — blocking_map/entity_map as real
-    tables, not files). On a cluster this is Iceberg; in this sandbox
-    (no Iceberg runtime jar shipped with the pyspark build) the default
-    is hive-layout partitioned parquet, which demonstrates the two
-    features resume actually relies on — partition pruning on read and
-    atomic overwrite per stage — minus Iceberg's snapshot log."""
-
-    name = "abstract"
-
-    def target(self, root: str, run_id: str, stage: str) -> str:
-        """Physical target for a logical (run_id, stage): a filesystem
-        path for file formats, a catalog table IDENTIFIER for Iceberg —
-        the store never assumes which (a path spliced into an identifier
-        is a ParseException on any real catalog)."""
-        raise NotImplementedError
-
-    def write(self, df: DataFrame, target: str, partition_by=()) -> None:
-        raise NotImplementedError
-
-    def read(self, spark: SparkSession, target: str) -> DataFrame:
-        raise NotImplementedError
-
-
-class ParquetFormat(TableFormat):
-    """Default: overwrite-mode parquet, hive partition layout when
-    ``partition_by`` is given (so equality filters on the partition
-    column prune directories at planning time — asserted by
-    test_checkpoint_partition_pruning)."""
-
-    name = "parquet"
-
-    def target(self, root: str, run_id: str, stage: str) -> str:
-        return str(Path(root) / run_id / stage / "data")
-
-    def write(self, df: DataFrame, target: str, partition_by=()) -> None:
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(target)
-
-    def read(self, spark: SparkSession, target: str) -> DataFrame:
-        return spark.read.parquet(target)
-
-    def file_counts(self, target: str) -> list[tuple[int, int]] | None:
-        """(partition_id, rows) per written data file, straight from the
-        parquet footers — a metadata-only read (the manifest-stats path
-        an Iceberg catalog gives for free).
-
-        Validation scope: footer-only. Decoding the footer catches a
-        truncated or missing footer, but NOT corruption inside data
-        pages — that surfaces on the first real read of the checkpoint
-        (which every resume performs anyway). partition_id here is the
-        SORTED-FILE INDEX within the checkpoint directory, not a Spark
-        partition id — stable across re-lists of the same write, but not
-        comparable to spark_partition_id() (see FIXTURES.md match_runs
-        contract)."""
-        import pyarrow.parquet as pq
-
-        files = sorted(Path(target).rglob("*.parquet"))
-        return [
-            (i, pq.ParquetFile(str(f)).metadata.num_rows)
-            for i, f in enumerate(files)
-        ]
-
-
-def _safe_run_ident(run_id: str) -> str:
-    """Fold a caller-supplied run_id to identifier-safe chars, keeping
-    the mapping injective via a content-hash suffix ('exp-1' and 'exp.1'
-    must not overwrite each other's catalog tables while their meta.json
-    resume state stays separate)."""
-    safe = "".join(
-        c if (c.isascii() and c.isalnum()) else "_" for c in run_id
-    )
-    if safe != run_id:
-        import hashlib
-
-        safe += "_" + hashlib.md5(run_id.encode()).hexdigest()[:6]
-    return safe
-
-
-class BucketedParquetFormat(TableFormat):
-    """Catalog-registered parquet with hash bucketing — the co-located
-    join layout. A stage written bucketed on its join key reads back
-    pre-partitioned: every later equi-join or groupBy on that key
-    between same-bucketed tables runs WITHOUT an Exchange (asserted by
-    test_bucketed_join_has_no_exchange). At 10^12 rows this removes the
-    single biggest cost of the resume path — re-shuffling the
-    signatures/pairs checkpoints on url for every downstream join the
-    pipeline performs (J2 hydration, entity-map joins).
-
-    Bucketing metadata only flows through the session catalog, so
-    ``target`` is a TABLE IDENTIFIER (like Iceberg), the data files are
-    parked under the checkpoint root via the external-table ``path``
-    option, and reads go through ``spark.read.table``. The store must
-    not re-spread the scan (``preserves_layout``): a repartition would
-    throw the co-location away.
-
-    Sandbox stand-in note: on a real cluster the same property comes
-    from Iceberg's bucket partition transform (write.distribution-mode +
-    bucket(N, key)) — this class demonstrates the plan-level effect with
-    the machinery pyspark ships in-box.
-    """
-
-    name = "bucketed_parquet"
-    preserves_layout = True
-
-    def __init__(
-        self,
-        bucket_cols: list[str],
-        n_buckets: int = 32,
-        sort_cols: list[str] | None = None,
-    ):
-        if not bucket_cols:
-            raise ValueError("BucketedParquetFormat: bucket_cols required")
-        self.bucket_cols = list(bucket_cols)
-        self.n_buckets = int(n_buckets)
-        # sorted-within-bucket gives merge-join-ready runs for free
-        self.sort_cols = list(sort_cols or bucket_cols)
-        self._paths = {}  # ident -> filesystem path, filled by target()
-
-    def target(self, root: str, run_id: str, stage: str) -> str:
-        ident = f"nycfd_ckpt_r{_safe_run_ident(run_id)}_{stage}"
-        # EXTERNAL table: the catalog entry carries the bucket spec, the
-        # data files live under the checkpoint root like every other
-        # format (a managed table would park them in spark-warehouse,
-        # where a stale directory from a previous session makes
-        # saveAsTable fail on the in-memory catalog)
-        self._paths[ident] = str(Path(root) / run_id / stage / "data")
-        return ident
-
-    def write(self, df: DataFrame, target: str, partition_by=()) -> None:
-        spark = df.sparkSession
-        # overwrite semantics across SESSIONS: the in-memory catalog
-        # forgets tables on restart but the files remain — drop both the
-        # (possibly stale) catalog entry and the old data explicitly
-        spark.sql(f"DROP TABLE IF EXISTS {target}")
-        path = self._paths.get(target)
-        if path:
-            import shutil
-
-            shutil.rmtree(path, ignore_errors=True)
-        w = (
-            df.write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(self.n_buckets, *self.bucket_cols)
-            .sortBy(*self.sort_cols)
-        )
-        if path:
-            w = w.option("path", path)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.saveAsTable(target)
-
-    def read(self, spark: SparkSession, target: str) -> DataFrame:
-        return spark.read.table(target)
-
-    def file_counts(self, target: str) -> None:
-        # target is a catalog identifier, not a path: let the store fall
-        # back to its narrow spark_partition_id() agg for lineage
-        return None
-
-
-class IcebergFormat(TableFormat):
-    """Catalog-backed Iceberg tables. ``target`` is a table identifier
-    (``<catalog>.<namespace>.<name>``), not a path; requires a session
-    with the iceberg extension + a configured catalog
-    (spark.sql.catalog.<name> = org.apache.iceberg.spark.SparkCatalog).
-    The runtime jar is absent from this environment, so construction
-    verifies the catalog is configured and fails fast otherwise — the
-    seam documents exactly what changes on a real cluster: write via
-    DataFrameWriterV2 (createOrReplace = atomic snapshot commit) and
-    read via the catalog (time travel / snapshot resume come free)."""
-
-    name = "iceberg"
-
-    def __init__(self, spark: SparkSession, catalog: str,
-                 namespace: str = "checkpoints"):
-        self.catalog = catalog
-        self.namespace = namespace
-        impl = spark.conf.get(f"spark.sql.catalog.{catalog}", None)
-        if not impl:
-            raise RuntimeError(
-                f"IcebergFormat: catalog '{catalog}' is not configured "
-                f"on this session (spark.sql.catalog.{catalog} unset). "
-                "Add the iceberg-spark-runtime jar and catalog conf, or "
-                "use ParquetFormat."
-            )
-
-    def target(self, root: str, run_id: str, stage: str) -> str:
-        """Logical (run_id, stage) -> ``catalog.namespace.r<run>_<stage>``
-        — the store's filesystem ``root`` plays no part (tables live
-        where the catalog puts them). Non-identifier chars in the
-        caller-supplied run_id fold to '_' WITH a content-hash suffix so
-        the mapping stays injective ('exp-1' and 'exp.1' must not
-        createOrReplace each other's tables while their meta.json resume
-        state stays separate)."""
-        safe = _safe_run_ident(run_id)
-        return f"{self.catalog}.{self.namespace}.r{safe}_{stage}"
-
-    def write(self, df: DataFrame, target: str, partition_by=()) -> None:
-        w = df.writeTo(target).using("iceberg")
-        if partition_by:
-            w = w.partitionedBy(*[F.col(c) for c in partition_by])
-        w.createOrReplace()
-
-    def read(self, spark: SparkSession, target: str) -> DataFrame:
-        return spark.read.table(target)
-
-
 class CheckpointStore:
-    def __init__(
-        self,
-        root: str,
-        run_id: str | None = None,
-        table_format: TableFormat | None = None,
-        partition_by: dict[str, list[str]] | None = None,
-    ):
+    def __init__(self, root: str, run_id: str | None = None):
         self.root = Path(root)
         self.run_id = run_id or uuid.uuid4().hex[:12]
-        self.fmt = table_format or ParquetFormat()
-        # per-stage partition spec, e.g. {"extract": ["lang"]}: the
-        # language dimension is low-cardinality and the natural pruning
-        # axis for per-language reprocessing at Common-Crawl scale
-        self.partition_by = partition_by or {}
 
     # -- paths ---------------------------------------------------------------
     def _stage_dir(self, stage: str) -> Path:
         return self.root / self.run_id / stage
 
     def _data_path(self, stage: str) -> str:
-        # the format owns the logical->physical mapping: a directory for
-        # file formats, a catalog identifier for Iceberg
-        return self.fmt.target(str(self.root), self.run_id, stage)
+        return str(self._stage_dir(stage) / "data")
 
     def _meta_path(self, stage: str) -> Path:
         return self._stage_dir(stage) / "meta.json"
@@ -301,15 +74,7 @@ class CheckpointStore:
         return saved.get("params") == _canon(params)
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        return self._respread(self.fmt.read(spark, self._data_path(stage)))
-
-    def _respread(self, df: DataFrame) -> DataFrame:
-        # a layout-preserving format (bucketed, Iceberg-bucket-transform)
-        # reads back CO-LOCATED; _spread's repartition would throw that
-        # away for a toy-scale core-count win
-        if getattr(self.fmt, "preserves_layout", False):
-            return df
-        return _spread(df)
+        return _spread(spark.read.parquet(self._data_path(stage)))
 
     def write(
         self,
@@ -321,26 +86,11 @@ class CheckpointStore:
         """Materialize a stage, record lineage, return the read-back DF
         (downstream reads files, not the upstream lineage — the
         checkpoint IS the stage boundary)."""
-        spark = df.sparkSession
+        path = self._data_path(stage)
         t0 = time.time()
-        self.fmt.write(
-            df, self._data_path(stage), self.partition_by.get(stage, ())
-        )
+        df.write.mode("overwrite").parquet(path)
         wall = time.time() - t0
-        out = self._respread(self.fmt.read(spark, self._data_path(stage)))
-        counts = getattr(self.fmt, "file_counts", lambda _t: None)(
-            self._data_path(stage)
-        )
-        if counts is None:
-            # non-parquet format without footer stats: one narrow agg
-            counts = [
-                (int(r["partition_id"]), int(r["rows_out"]))
-                for r in out.groupBy(
-                    F.spark_partition_id().alias("partition_id")
-                )
-                .agg(F.count("*").alias("rows_out"))
-                .collect()
-            ]
+        out = self.read(df.sparkSession, stage)
         p = _canon(params or {})
         rows = [
             (
@@ -352,7 +102,7 @@ class CheckpointStore:
                 float(wall),
                 p,
             )
-            for pid, n in counts
+            for pid, n in _footer_counts(path)
         ] or [(self.run_id, stage, -1, rows_in, 0, float(wall), p)]
         _append_match_runs(self.root / "match_runs", rows)
         self._meta_path(stage).parent.mkdir(parents=True, exist_ok=True)
@@ -398,7 +148,7 @@ class CheckpointStore:
                     "write_run_stats(entity_map=None) needs a SparkSession "
                     "(pass spark=...) when none is active"
                 )
-            src = self.fmt.read(spark, self._data_path("cluster"))
+            src = spark.read.parquet(self._data_path("cluster"))
         sizes = src.groupBy("cluster_id").count()
         row = sizes.agg(
             F.count("*").alias("total_clusters"),
@@ -442,6 +192,27 @@ def _spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         return df.repartition(sc.defaultParallelism)
     return df
+
+
+def _footer_counts(path: str) -> list[tuple[int, int]]:
+    """(partition_id, rows) per written data file, straight from the
+    parquet footers — a metadata-only read.
+
+    Validation scope: footer-only. Decoding the footer catches a
+    truncated or missing footer, but NOT corruption inside data
+    pages — that surfaces on the first real read of the checkpoint
+    (which every resume performs anyway). partition_id here is the
+    SORTED-FILE INDEX within the checkpoint directory, not a Spark
+    partition id — stable across re-lists of the same write, but not
+    comparable to spark_partition_id() (see FIXTURES.md match_runs
+    contract)."""
+    import pyarrow.parquet as pq
+
+    files = sorted(Path(path).rglob("*.parquet"))
+    return [
+        (i, pq.ParquetFile(str(f)).metadata.num_rows)
+        for i, f in enumerate(files)
+    ]
 
 
 def _append_match_runs(root: Path, rows: list[tuple]) -> None:

@@ -26,7 +26,7 @@ one anti-join whose history side is the distinct key column, one
 stream-static equi-join on block_key for the (novel-only) batch, one
 window rank. History artifacts (bloom index + key projection + blocking
 index) are built once per ingest epoch and persisted; between epochs
-they are plain appends (parquet/Iceberg via the TableFormat seam).
+they are plain parquet appends.
 
 Restart semantics ride the streaming checkpoint: the file source tracks
 consumed files, so a restarted availableNow query resumes at the first
@@ -55,7 +55,7 @@ def build_history_index(
     string per distinct page identity — the exact-confirm side);
     ``bloom_index`` is the partitioned Bloom filter over the same keys.
     Both are returned unmaterialized — persist/localCheckpoint them (or
-    write via TableFormat) before probing many batches.
+    write them as parquet) before probing many batches.
     """
     keys = (
         ingest.with_content_key(history_pages)

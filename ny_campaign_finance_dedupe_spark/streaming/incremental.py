@@ -13,7 +13,7 @@ per query url. It never extracts: the caller runs the one page-text
 chain (``DedupePipeline.extract``) once per page; only ``build_index``
 extracts here. crawl.start_crawl_pipeline runs the match per
 micro-batch, after Bloom novelty. The static index is reloaded per batch
-(cheap metadata op with parquet/Iceberg), so index/unindex are plain
+(a cheap metadata op with parquet), so index/unindex are plain
 appends/deletes on the index table between batches.
 """
 

@@ -124,32 +124,6 @@ def test_unknown_pair_strategy_raises():
         DedupePipeline(PipelineConfig(pair_strategy=ok))
 
 
-def test_pipeline_with_hac_refinement(spark, tmp_path):
-    """use_hac=True (C3) must keep every record exactly once and not
-    break the F1 contract on a small synth table."""
-    from ny_campaign_finance_dedupe_spark.plans.evaluate import evaluate_pairs
-    from ny_campaign_finance_dedupe_spark.plans.pipeline import (
-        DedupePipeline,
-        PipelineConfig,
-    )
-
-    pages, entities = synth_pages(spark, n_pages=600, seed=3)
-    pages = pages.localCheckpoint()
-    store = CheckpointStore(str(tmp_path), run_id="hac")
-    cfg = PipelineConfig(use_hac=True)
-    em = DedupePipeline(cfg, store).run(spark, pages)
-    assert em.count() == 600
-    assert em.select("record_id").distinct().count() == 600
-    cand = store.read(spark, "pairs")
-    pred = (
-        store.read(spark, "score")
-        .where(F.col("score") >= cfg.score_threshold)
-        .select("src", "dst")
-    )
-    ev = evaluate_pairs(pred, cand, true_pairs(entities))
-    assert ev.f1 >= 0.99, ev
-
-
 def test_synth_emits_both_duplicate_classes(spark):
     """The generator must plant BOTH dup classes: byte-identical copies
     (kind 0 — what exact dedup needs) AND render-noise-only near-dups
