@@ -717,10 +717,9 @@ def q_passage_dedup(spark, sf_dir):
     removed — the planted dup families share long spans, so this prunes
     their common passages while unique text survives byte-identical.
     The impl groups window sites by xxhash64; the oracle groups by the
-    window STRING itself (same result absent 64-bit collisions — the
-    repo's cluster_edges hash convention) and mirrors the slice
-    windows, >=2-site filter, covered-position union, and ORDER BY pos
-    rebuild."""
+    window STRING itself (same result absent 64-bit collisions of the
+    window hashes) and mirrors the slice windows, >=2-site filter,
+    covered-position union, and ORDER BY pos rebuild."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.passage_dedup(
         docs, "doc_id", "text", window=8

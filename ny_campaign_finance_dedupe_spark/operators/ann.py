@@ -871,17 +871,6 @@ def semantic_dedup(
     """
     if keep not in ("centroid_far", "min_id"):
         raise ValueError(f"semantic_dedup: unknown keep rule {keep!r}")
-    if not isinstance(
-        corpus.schema[id_col].dataType,
-        (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-    ):
-        # connected_components works in the long domain; a lossy cast of
-        # string ids would silently merge groups — fail fast instead
-        # (hash string ids to longs first, as cluster_edges does).
-        raise ValueError(
-            f"semantic_dedup: {id_col} must be an integer column "
-            f"(got {corpus.schema[id_col].dataType.simpleString()})"
-        )
     from .clustering import connected_components  # local: no import cycle
 
     spark = corpus.sparkSession
@@ -949,11 +938,10 @@ def semantic_dedup(
         .where(F.col("cosine") >= eps)
         .select("src", "dst")
     )
-    # groups: CC over duplicate edges (long-id domain) + singletons as
-    # their own group. gid = group-min id (C8).
+    # groups: CC over duplicate edges (ids in their own type) + singletons
+    # as their own group. gid = group-min id (C8).
     comp = connected_components(edges).select(
-        F.col("record_id").cast(id_type).alias("record_id"),
-        F.col("cluster_id").cast(id_type).alias("gid"),
+        "record_id", F.col("cluster_id").alias("gid")
     )
     singles = (
         corpus.select(F.col(id_col).alias("record_id"))

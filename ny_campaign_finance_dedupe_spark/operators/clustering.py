@@ -22,9 +22,11 @@ iterations — SURVEY.md §4):
 - ``localCheckpoint`` each round truncates lineage (else the plan doubles
   per iteration and the DAG scheduler chokes by round ~15),
 - convergence via a (count, hash-sum) checksum — one cheap agg, no
-  expensive subtract,
-- ids are hashed to longs first (numeric min beats string min in the
-  shuffle comparator; the url<->long mapping is joined back at the end).
+  expensive subtract.
+
+Both paths run on the record ids themselves, in their own orderable type
+(url strings in the pipeline): the component minimum IS the min record
+id, so C8 holds with no id map and no second labelling pass.
 """
 
 from __future__ import annotations
@@ -103,11 +105,11 @@ def _driver_union_find(e: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
 
+    t = e.schema["src"].dataType.simpleString()
+    schema = f"record_id {t}, cluster_id {t}"
     pdf = e.toPandas()
     if len(pdf) == 0:  # np.unique on empty input yields float64 indices
-        return e.sparkSession.createDataFrame(
-            [], "record_id long, cluster_id long"
-        )
+        return e.sparkSession.createDataFrame([], schema)
     src = pdf["src"].to_numpy()
     dst = pdf["dst"].to_numpy()
     ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
@@ -130,9 +132,10 @@ def _driver_union_find(e: DataFrame) -> DataFrame:
         if np.array_equal(lbl, old):
             break
     # min-id labeling: ids from np.unique are sorted, so the minimum
-    # internal label maps to the component's minimum id (C8)
+    # internal label maps to the component's minimum id (C8). str ids
+    # sort by code point, which is Spark's UTF-8 binary string order.
     out = pd.DataFrame({"record_id": ids, "cluster_id": ids[lbl]})
-    return e.sparkSession.createDataFrame(out, "record_id long, cluster_id long")
+    return e.sparkSession.createDataFrame(out, schema)
 
 
 def connected_components(
@@ -140,17 +143,18 @@ def connected_components(
     max_iters: int = MAX_CC_ITERS,
     driver_max_edges: int = DRIVER_CC_MAX_EDGES,
 ) -> DataFrame:
-    """edges(src, dst) [long ids] -> (record_id, cluster_id) for every id
-    appearing in an edge; cluster_id = component min (C8).
+    """edges(src, dst) -> (record_id, cluster_id) for every id appearing
+    in an edge; cluster_id = component min (C8). Ids keep their own
+    orderable type (long, string, ...) on both paths.
 
     Adaptive physical strategy: small edge sets union-find on the driver
     (one collect instead of O(log n) shuffle rounds); large ones run the
     alternating large-star/small-star loop with lineage truncation per
     round. Both produce identical min-label output (pinned by test).
     """
-    e = edges.select(
-        F.col("src").cast("long"), F.col("dst").cast("long")
-    ).where(F.col("src") != F.col("dst")).distinct().localCheckpoint()
+    e = edges.select("src", "dst").where(
+        F.col("src") != F.col("dst")
+    ).distinct().localCheckpoint()
     if driver_max_edges and e.count() <= driver_max_edges:
         return _driver_union_find(e)
     prev = None
@@ -168,50 +172,15 @@ def connected_components(
     return members.union(roots).distinct()
 
 
-def cluster_edges(
-    scored_pairs: DataFrame,
-    threshold: float = 0.5,
-    id_type: str = "string",
-) -> DataFrame:
+def cluster_edges(scored_pairs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """scored (src, dst, score) -> (record_id, cluster_id, cluster_score).
 
-    String ids are hashed to longs for the CC loop (xxhash64; at n=10^12
-    collision odds ~ n^2/2^64 make a dedicated 128-bit map advisable — at
-    that scale swap in ``sha2``-based 2x64 split ids; the mapping join
-    below is unchanged). ``cluster_score`` is C4's per-record confidence.
+    Connected components runs on the record ids as given, so
+    ``cluster_id`` is the min member record id (C8) by construction.
+    ``cluster_score`` is C4's per-record confidence.
     """
     edges = scored_pairs.where(F.col("score") >= threshold)
-    if id_type == "string":
-        # forward hashing is a pure expression (xxhash64 is deterministic)
-        # — no idmap join on the way in; the map back joins a derived
-        # (nid -> rid) projection once per output column.
-        nedges = edges.select(
-            F.xxhash64("src").alias("src"), F.xxhash64("dst").alias("dst")
-        )
-        idmap = (
-            edges.select(F.col("src").alias("rid"))
-            .union(edges.select(F.col("dst")))
-            .distinct()
-            .select("rid", F.xxhash64("rid").alias("nid"))
-            .localCheckpoint()
-        )
-        comp = connected_components(nedges)
-        comp = comp.join(
-            idmap.select(F.col("nid").alias("record_id"), "rid"), "record_id"
-        ).select(F.col("rid").alias("record_id"), "cluster_id")
-        # C8 in the RECORD domain: the CC labels are component-min *hashed*
-        # ids — an engine artifact; relabel to min record_id per component
-        # (min donor_id, campaign_finance_dedupe.py:105-110) so cluster
-        # ids are reproducible by any engine. One extra agg + join.
-        relabel = comp.groupBy("cluster_id").agg(
-            F.min("record_id").alias("_canon")
-        )
-        comp = (
-            comp.join(relabel, "cluster_id")
-            .select("record_id", F.col("_canon").alias("cluster_id"))
-        )
-    else:
-        comp = connected_components(edges.select("src", "dst"))
+    comp = connected_components(edges.select("src", "dst"))
     # CC output: every kept edge is intra-component — skip peer scoping
     conf = member_confidence(edges, None)
     return comp.join(conf, "record_id", "left").select(
@@ -234,33 +203,24 @@ def member_confidence(
     edge set is already component-consistent (straight CC output, where
     every >= threshold edge is intra-cluster by construction) to skip
     the two scoping joins."""
-    if components is None:
-        intra = edges.select("src", "dst", "score")
-        inc = intra.select(
-            F.col("src").alias("record_id"), (1.0 - F.col("score")).alias("d")
-        ).union(intra.select(F.col("dst"), 1.0 - F.col("score")))
-        per = inc.groupBy("record_id").agg(
-            F.sqrt(F.avg(F.col("d") * F.col("d"))).alias("rmse")
+    intra = edges
+    if components is not None:
+        intra = (
+            edges.join(
+                components.select(
+                    F.col("record_id").alias("src"), F.col("cluster_id").alias("_cs")
+                ),
+                "src",
+            )
+            .join(
+                components.select(
+                    F.col("record_id").alias("dst"), F.col("cluster_id").alias("_cd")
+                ),
+                "dst",
+            )
+            .where(F.col("_cs") == F.col("_cd"))
         )
-        return per.select(
-            "record_id", (1.0 - F.col("rmse")).alias("cluster_score")
-        )
-    intra = (
-        edges.join(
-            components.select(
-                F.col("record_id").alias("src"), F.col("cluster_id").alias("_cs")
-            ),
-            "src",
-        )
-        .join(
-            components.select(
-                F.col("record_id").alias("dst"), F.col("cluster_id").alias("_cd")
-            ),
-            "dst",
-        )
-        .where(F.col("_cs") == F.col("_cd"))
-        .select("src", "dst", "score")
-    )
+    intra = intra.select("src", "dst", "score")
     inc = intra.select(
         F.col("src").alias("record_id"), (1.0 - F.col("score")).alias("d")
     ).union(intra.select(F.col("dst"), 1.0 - F.col("score")))

@@ -477,9 +477,8 @@ def segment_dedup(
     )
     # df over 8-byte hashes, not ~seg_words-word strings: the one
     # corpus-wide agg here shuffles ids+hashes only (the postings
-    # pattern). Hash-collision caveat matches the repo's xxhash64
-    # convention (cluster_edges): at 10^12 segments swap in a 128-bit
-    # split key.
+    # pattern). Caveat: two segments with one 64-bit hash share a df
+    # count; at 10^12 segments swap in a 128-bit split key.
     hot_h = (
         postings.select(F.xxhash64("seg").alias("h"))
         .groupBy("h")

@@ -220,8 +220,7 @@ class DedupePipeline:
     ) -> DataFrame:
         # materialize the CC map once: split_oversize's emptiness probe
         # and the stage's checkpoint write both consume it, and without a
-        # checkpoint each one re-evaluates the idmap-join + relabel +
-        # confidence tree (measured ~2x the cluster stage at 1M pages)
+        # checkpoint each one re-evaluates the CC-label + confidence join
         cl = clustering.cluster_edges(
             scored, threshold=self.cfg.score_threshold
         ).localCheckpoint()

@@ -15,10 +15,11 @@ Here every stage writes:
   ``<root>/match_runs`` (FIXTURES.md §5 schema).
 
 Partition counts come from the parquet file footers of the written
-checkpoint — metadata-only: no extra scan job per stage (pinned by
-test_checkpoint_write_runs_no_extra_job), and decoding every footer
-doubles as a read-back validation (a truncated or corrupt file fails
-right here, not three stages later).
+checkpoint — metadata-only: no extra scan job per stage — and the
+read-back takes the written frame's schema, so no schema-inference job
+either (both pinned by test_checkpoint_write_runs_no_extra_job).
+Decoding every footer doubles as a read-back validation (a truncated or
+corrupt file fails right here, not three stages later).
 """
 
 from __future__ import annotations
@@ -90,7 +91,8 @@ class CheckpointStore:
         t0 = time.time()
         df.write.mode("overwrite").parquet(path)
         wall = time.time() - t0
-        out = self.read(df.sparkSession, stage)
+        # the written schema is on hand: no parquet schema-inference job
+        out = _spread(df.sparkSession.read.schema(df.schema).parquet(path))
         p = _canon(params or {})
         rows = [
             (

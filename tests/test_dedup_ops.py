@@ -411,19 +411,32 @@ def test_semantic_dedup_train_iters_keeps_groups(blob_vecs):
 
 def test_semantic_dedup_cap_and_guards(spark, blob_vecs):
     """max_list_size drops oversize lists (canopy rule) -> all
-    singletons here (every list has 10 members > cap 5); string ids and
-    unknown keep rules fail fast."""
+    singletons here (every list has 10 members > cap 5); string ids
+    group exactly as the integer ids they were cast from; unknown keep
+    rules fail fast."""
     out = ann.semantic_dedup(
         blob_vecs, eps=0.95, nlist=4, round_decimals=9, max_list_size=5
     ).collect()
     assert len(out) == 40
     assert all(not r["is_dup"] and r["record_id"] == r["keeper_id"]
                for r in out)
+    # zero-padded, so the string order (seed pick, min-id keeper) is the
+    # integer order
     sdf = blob_vecs.selectExpr(
-        "CAST(vec_id AS STRING) AS vec_id", "embedding"
+        "lpad(CAST(vec_id AS STRING), 3, '0') AS vec_id", "embedding"
     )
-    with pytest.raises(ValueError, match="integer column"):
-        ann.semantic_dedup(sdf)
+
+    def keepers(df):
+        return {
+            (r["record_id"], r["keeper_id"])
+            for r in ann.semantic_dedup(
+                df, eps=0.95, nlist=4, round_decimals=9, keep="min_id"
+            ).collect()
+        }
+
+    by_int = keepers(blob_vecs)
+    assert len({k for _, k in by_int}) == 4
+    assert keepers(sdf) == {(f"{r:03d}", f"{k:03d}") for r, k in by_int}
     with pytest.raises(ValueError, match="keep rule"):
         ann.semantic_dedup(blob_vecs, keep="random")
 

@@ -112,7 +112,7 @@ def test_golden_restaurants_f1(spark, golden):
         "src", "dst", "score"
     )
     clustered = clustering.add_singletons(
-        test, "record_id", clustering.cluster_edges(edges, id_type="long")
+        test, "record_id", clustering.cluster_edges(edges)
     )
     pred = clusters_to_pairs(clustered.select("record_id", "cluster_id"))
     test_truth = truth.join(

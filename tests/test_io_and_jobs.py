@@ -126,10 +126,10 @@ def _jobs_in_group(spark, group, action) -> int:
 
 
 def test_checkpoint_write_runs_no_extra_job(spark, tmp_path):
-    """match_runs row counts come from the parquet footers, so a
-    checkpoint write runs exactly the jobs of a bare parquet write and
-    read-back of the same frame (the read-back's schema inference is a
-    job of its own): no count, no agg, no scan of the result."""
+    """match_runs row counts come from the parquet footers and the
+    read-back takes the written schema, so a checkpoint write runs
+    exactly the jobs of a bare parquet write of the same frame: no
+    count, no agg, no scan of the result, no schema inference."""
     from ny_campaign_finance_dedupe_spark import synth
     from ny_campaign_finance_dedupe_spark.sources.checkpoint import (
         CheckpointStore,
@@ -138,12 +138,11 @@ def test_checkpoint_write_runs_no_extra_job(spark, tmp_path):
     pages, _ = synth.synth_pages(spark, n_pages=300, seed=4)
     df = pages.select("url", "lang", "text").localCheckpoint()
     bare_path = str(tmp_path / "bare")
-
-    def bare_write_and_read():
-        df.write.mode("overwrite").parquet(bare_path)
-        spark.read.parquet(bare_path)
-
-    bare = _jobs_in_group(spark, "ckpt-bare", bare_write_and_read)
+    bare = _jobs_in_group(
+        spark,
+        "ckpt-bare",
+        lambda: df.write.mode("overwrite").parquet(bare_path),
+    )
     store = CheckpointStore(str(tmp_path / "ckpt"), run_id="jobs")
     via_store = _jobs_in_group(
         spark, "ckpt-store", lambda: store.write(df, "extract")
@@ -152,6 +151,35 @@ def test_checkpoint_write_runs_no_extra_job(spark, tmp_path):
     assert via_store == bare
     rows = store.match_runs(spark).where("stage = 'extract'").collect()
     assert sum(r["rows_out"] for r in rows) == 300
+
+
+def test_cluster_stage_job_count(spark, tmp_path):
+    """The cluster stage (build + checkpoint write) runs a pinned number
+    of Spark jobs: connected components labels the url ids themselves,
+    so no id map is checkpointed, joined back or relabelled, and the
+    checkpoint read-back infers no schema."""
+    from ny_campaign_finance_dedupe_spark import synth
+    from ny_campaign_finance_dedupe_spark.plans.pipeline import (
+        DedupePipeline,
+        PipelineConfig,
+    )
+    from ny_campaign_finance_dedupe_spark.sources.checkpoint import (
+        CheckpointStore,
+    )
+
+    pages, _ = synth.synth_pages(spark, n_pages=400, seed=6)
+    store = CheckpointStore(str(tmp_path), run_id="jobs")
+    pipe = DedupePipeline(PipelineConfig(), store)
+    pipe.run(spark, pages)
+    scored = store.read(spark, "score")
+    extracted = store.read(spark, "extract")
+    assert scored.where("score >= 0.5").count() > 0  # CC has edges to label
+    n = _jobs_in_group(
+        spark,
+        "cluster-stage",
+        lambda: store.write(pipe.cluster(scored, extracted), "cluster"),
+    )
+    assert n <= 13
 
 
 def test_checkpoint_resume_with_partitioned_stage(spark, tmp_path):

@@ -28,8 +28,6 @@ import json
 import os
 import subprocess
 import sys
-import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -37,15 +35,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def worker(
     execs: int, pages_n: int, seed: int, exec_mem_mb: int, partitions: int = 0
 ) -> None:
-    import shutil
-
-    from ny_campaign_finance_dedupe_spark.plans.pipeline import (
-        DedupePipeline,
-        PipelineConfig,
-    )
-    from ny_campaign_finance_dedupe_spark.session import get_spark, scratch_dir
-    from ny_campaign_finance_dedupe_spark.sources.checkpoint import CheckpointStore
-    from ny_campaign_finance_dedupe_spark.synth import synth_pages
+    from ny_campaign_finance_dedupe_spark.session import get_spark
+    from tools.scaling_bench import measure
 
     # executors fork python workers from the same interpreter
     os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
@@ -54,12 +45,13 @@ def worker(
     # local-cluster mode the executor JVMs spawn their OWN python
     # workers, which do not inherit the driver's sys.path
     pyzip = _build_pyfiles()
+    # partitions>0: data-sized protocol — same count both levels
+    # (see tools/scaling_bench.py); 0 = legacy 2 per executor
+    parts = partitions or 2 * execs
     spark = get_spark(
         f"cluster-scaling-{execs}",
         master=f"local-cluster[{execs},1,{exec_mem_mb}]",
-        # partitions>0: data-sized protocol — same count both levels
-        # (see tools/scaling_bench.py); 0 = legacy 2 per executor
-        shuffle_partitions=partitions or 2 * execs,
+        shuffle_partitions=parts,
         extra_conf={
             # local-cluster requires executor.memory == the master
             # string's memMB or the worker refuses the allocation
@@ -82,62 +74,7 @@ def worker(
         },
     )
     spark.sparkContext.addPyFile(pyzip)
-    spark.sparkContext.setLogLevel("ERROR")
-    pages, _ = synth_pages(
-        spark, n_pages=pages_n, seed=seed, partitions=partitions or 2 * execs
-    )
-    pages = pages.persist()
-    pages.count()  # materialize input outside the timed region
-    os.makedirs(scratch_dir(), exist_ok=True)
-    ckpt_root = tempfile.mkdtemp(
-        prefix=f"nycfd_clscale{execs}_", dir=scratch_dir()
-    )
-    t0 = time.perf_counter()
-    store = CheckpointStore(ckpt_root)
-    em = DedupePipeline(PipelineConfig(), store).run(spark, pages)
-    rows = em.count()
-    secs = time.perf_counter() - t0
-    # content equivalence across topologies (order-insensitive; see
-    # tools/scaling_bench.py — float cluster_score excluded on purpose)
-    import pyspark.sql.functions as F
-
-    em_hash = str(
-        em.select(
-            # ANSI mode: a long SUM overflows; accumulate in decimal(38,0)
-            F.sum(
-                F.xxhash64("record_id", "cluster_id").cast("decimal(38,0)")
-            ).alias("h")
-        ).collect()[0]["h"]
-    )
-    stage_walls = {}
-    for st in ("extract", "signatures", "block", "pairs", "score", "cluster"):
-        mp = store._meta_path(st)
-        if mp.exists():
-            stage_walls[st] = round(
-                json.loads(mp.read_text())["wall_clock_s"], 2
-            )
-    # best-effort executor telemetry (never fails the measurement)
-    try:
-        from tools.stage_telemetry import stage_exec_metrics
-
-        stage_exec = stage_exec_metrics(spark)
-    except Exception:
-        stage_exec = None
-    shutil.rmtree(ckpt_root, ignore_errors=True)
-    print(
-        json.dumps(
-            {
-                "executors": execs,
-                "pages": pages_n,
-                "secs": round(secs, 2),
-                "pages_per_sec": round(pages_n / secs, 1),
-                "entity_map_rows": rows,
-                "entity_map_hash": em_hash,
-                "stage_walls": stage_walls,
-                "stage_exec": stage_exec,
-            }
-        )
-    )
+    measure(spark, {"executors": execs}, pages_n, seed, parts)
 
 
 def _build_pyfiles() -> str:

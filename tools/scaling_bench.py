@@ -35,15 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def worker(
     cores: int, pages_n: int, seed: int, partitions: int = 0
 ) -> None:
-    import shutil
-
-    from ny_campaign_finance_dedupe_spark.plans.pipeline import (
-        DedupePipeline,
-        PipelineConfig,
-    )
-    from ny_campaign_finance_dedupe_spark.session import get_spark, scratch_dir
-    from ny_campaign_finance_dedupe_spark.sources.checkpoint import CheckpointStore
-    from ny_campaign_finance_dedupe_spark.synth import synth_pages
+    from ny_campaign_finance_dedupe_spark.session import get_spark
 
     # Hold memory PER CORE constant across levels (4 GiB/core: 2 cores
     # -> 8g, identical to the rounds-1/2 protocol; 8 cores -> 32g). A
@@ -60,10 +52,11 @@ def worker(
     # (4 partitions over a ~13 GB pairs shuffle at 2 cores spills ~3.8 GB
     # per the stage_exec telemetry; 8 cores/16 partitions does not —
     # an artifact no real deployment of either size would exhibit).
+    parts = partitions or 2 * cores
     spark = get_spark(
         f"scaling-{cores}",
         master=f"local[{cores}]",
-        shuffle_partitions=partitions or 2 * cores,
+        shuffle_partitions=parts,
         extra_conf={
             "spark.driver.memory": f"{4 * cores}g",
             # UI on (ephemeral port): sole consumer is the post-run REST
@@ -75,14 +68,32 @@ def worker(
             "spark.ui.port": "0",
         },
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    pages, _ = synth_pages(
-        spark, n_pages=pages_n, seed=seed, partitions=partitions or 2 * cores
+    measure(spark, {"cores": cores}, pages_n, seed, parts)
+
+
+def measure(spark, level: dict, pages_n: int, seed: int, parts: int) -> None:
+    """Time one checkpointed ``DedupePipeline.run`` over synth pages on
+    ``spark`` and print its JSON line, led by ``level`` (the cores or
+    executors of this run). The --worker body of this tool and of
+    tools/cluster_scaling_bench.py."""
+    import shutil
+
+    import pyspark.sql.functions as F
+
+    from ny_campaign_finance_dedupe_spark.plans.pipeline import (
+        DedupePipeline,
+        PipelineConfig,
     )
+    from ny_campaign_finance_dedupe_spark.session import scratch_dir
+    from ny_campaign_finance_dedupe_spark.sources.checkpoint import CheckpointStore
+    from ny_campaign_finance_dedupe_spark.synth import synth_pages
+
+    spark.sparkContext.setLogLevel("ERROR")
+    pages, _ = synth_pages(spark, n_pages=pages_n, seed=seed, partitions=parts)
     pages = pages.persist()
     pages.count()  # materialize input outside the timed region
     os.makedirs(scratch_dir(), exist_ok=True)
-    ckpt_root = tempfile.mkdtemp(prefix=f"nycfd_scale{cores}_", dir=scratch_dir())
+    ckpt_root = tempfile.mkdtemp(prefix="nycfd_scale_", dir=scratch_dir())
     t0 = time.perf_counter()
     store = CheckpointStore(ckpt_root)
     em = DedupePipeline(PipelineConfig(), store).run(spark, pages)
@@ -93,8 +104,6 @@ def worker(
     # xxhash64 — commutative, so partitioning/ordering can't affect it;
     # float cluster_score is excluded: per-cluster float aggregation
     # order may legally differ between parallelism levels)
-    import pyspark.sql.functions as F
-
     em_hash = str(
         em.select(
             # ANSI mode: a long SUM overflows; accumulate in decimal(38,0)
@@ -124,7 +133,7 @@ def worker(
     print(
         json.dumps(
             {
-                "cores": cores,
+                **level,
                 "pages": pages_n,
                 "secs": round(secs, 2),
                 "pages_per_sec": round(pages_n / secs, 1),
