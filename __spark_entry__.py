@@ -1020,7 +1020,7 @@ def q_crawl_entity_map(spark, sf_dir):
     index = incremental.build_index(history, cfg).localCheckpoint()
     return (
         crawl.match_novel_batch(
-            batch, keys, bidx, index, cfg, n_buckets=8, threshold=0.5,
+            batch, keys, bidx, index, cfg, threshold=0.5,
             strategy="broadcast",
         )
         .select("record_id", "cluster_id", "matched")

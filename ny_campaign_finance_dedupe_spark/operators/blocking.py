@@ -69,16 +69,6 @@ def build_blocking_map(
     ).select("block_key", "record_id")
 
 
-def block_size_profile(blocking_map: DataFrame) -> DataFrame:
-    """(block_key, n_records, n_pairs) — the block-size histogram used for
-    skew decisions and per-run metrics (reference: block counts feed the
-    comparison-count estimate, training.py:114-170)."""
-    return blocking_map.groupBy("block_key").agg(
-        F.count("*").alias("n_records"),
-        (F.count("*") * (F.count("*") - 1) / 2).cast("long").alias("n_pairs"),
-    )
-
-
 def cap_blocks(
     blocking_map: DataFrame, max_block_size: int = DEFAULT_MAX_BLOCK
 ) -> DataFrame:

@@ -15,13 +15,18 @@ and mostly novel. The standard engine answer is a *Bloom-filter index*:
    to history (bits_per_key/8 bytes per key, ~2 GB per 10^9 keys at the
    default 16 bits) and is a durable artifact: persist it once, reuse it
    for every subsequent batch (write it as parquet like any other stage
-   output).
+   output). The index carries its own geometry: ``n_buckets`` and
+   ``n_hashes`` ride as Spark column metadata on ``bucket``, which
+   survives persist/localCheckpoint, a parquet round trip, renames and
+   selects, and reads without a job.
 
 2. ``bloom_probe`` — flags each batch row ``bloom_maybe`` by testing the
    k double-hashed bit positions (Kirsch-Mitzenmacher: pos_i = h1 + i*h2
-   mod m) against the broadcast bucket bitmaps. Zero false negatives by
-   construction; false-positive rate ~ (1 - e^(-k/bits_per_key))^k
-   (~4e-4 at the 16/8 default).
+   mod m) against the broadcast bucket bitmaps. The bucket count and k
+   come from the index itself, so a probe cannot disagree with the
+   build about either. Zero false negatives by construction;
+   false-positive rate ~ (1 - e^(-k/bits_per_key))^k (~4e-4 at the
+   16/8 default).
 
 3. ``bloom_novelty`` — EXACT novelty set: bloom-negative rows are novel
    with certainty and never touch history again; only the (small)
@@ -97,6 +102,8 @@ def build_bloom_index(
     bounds per-task memory: each task materializes one bucket's hashes
     plus its bitmap, so size it to keys/bucket * 16B <~ executor task
     memory at the target scale (the bitmap itself is n*bits_per_key/8).
+    ``n_buckets`` and ``n_hashes`` are stored as metadata on the
+    ``bucket`` column; every probe reads them from there.
     """
     key_col = F.col(key) if isinstance(key, str) else key
     h1, h2 = _hash_cols(key_col)
@@ -130,7 +137,20 @@ def build_bloom_index(
 
     return hashed.groupBy("bucket").applyInPandas(
         _build, "bucket int, m bigint, n_keys bigint, bloom binary"
-    )
+    ).withMetadata("bucket", {"n_buckets": n_buckets, "n_hashes": n_hashes})
+
+
+def _geometry(index: DataFrame) -> tuple[int, int]:
+    """(n_buckets, n_hashes) the index was built with, from the metadata
+    ``build_bloom_index`` puts on its ``bucket`` column (no Spark job)."""
+    meta = index.schema["bucket"].metadata
+    for k in ("n_buckets", "n_hashes"):
+        if k not in meta:
+            raise ValueError(
+                f"Bloom index has no {k!r} metadata on its bucket column; "
+                "build it with build_bloom_index"
+            )
+    return int(meta["n_buckets"]), int(meta["n_hashes"])
 
 
 def resolve_strategy(
@@ -153,12 +173,15 @@ def bloom_probe(
     index: DataFrame,
     key: Column | str,
     *,
-    n_buckets: int = 64,
-    n_hashes: int = N_HASHES,
     strategy: str = "auto",
     broadcast_max_bytes: int = BROADCAST_MAX_BYTES,
 ) -> DataFrame:
     """Batch columns + ``bloom_maybe`` (false => certainly not in history).
+
+    ``index`` must come from :func:`build_bloom_index`: the bucket count
+    and the number of probes are read from its ``bucket`` column
+    metadata (``ValueError`` when that is missing), so the probe always
+    hashes keys into the buckets the build used.
 
     Join strategy (the 100x-scale knob):
 
@@ -180,6 +203,7 @@ def bloom_probe(
     factorizes on the blob and tests each group with vectorized numpy
     bit probes.
     """
+    n_buckets, n_hashes = _geometry(index)
     strategy = resolve_strategy(index, strategy, broadcast_max_bytes)
     key_col = F.col(key) if isinstance(key, str) else key
     h1, h2 = _hash_cols(key_col)
@@ -239,8 +263,6 @@ def novel_rows(
     history_keys: DataFrame,
     index: DataFrame,
     *,
-    n_buckets: int = 64,
-    n_hashes: int = N_HASHES,
     strategy: str = "auto",
 ) -> DataFrame:
     """EXACT subset of ``keyed`` whose ``key_col`` value is absent from
@@ -249,16 +271,11 @@ def novel_rows(
     streaming crawl pipeline: bloom-negative rows short-circuit (no
     false negatives => certainly novel), only the positive remainder
     pays the confirm anti-join, and the history side of that join is
-    its distinct key projection. Returns ``keyed``'s rows minus the
+    its distinct key projection. The probe takes its geometry from
+    ``index``, so the result is exact for any index
+    :func:`build_bloom_index` built. Returns ``keyed``'s rows minus the
     ``bloom_maybe`` scratch column."""
-    flagged = bloom_probe(
-        keyed,
-        index,
-        F.col(key_col),
-        n_buckets=n_buckets,
-        n_hashes=n_hashes,
-        strategy=strategy,
-    )
+    flagged = bloom_probe(keyed, index, F.col(key_col), strategy=strategy)
     certain = flagged.where(~F.col("bloom_maybe")).drop("bloom_maybe")
     confirmed = (
         flagged.where(F.col("bloom_maybe"))
@@ -290,7 +307,9 @@ def bloom_novelty(
     projection — never the payload. Pass a prebuilt ``index`` to
     amortize the history scan across batches (the production shape:
     build once per ingest epoch, persist as parquet, probe every
-    batch). Returns (record_id, novel_key) ordered by caller.
+    batch). ``n_buckets``/``bits_per_key``/``n_hashes`` shape only the
+    index built here when ``index`` is None; a prebuilt index brings its
+    own geometry. Returns (record_id, novel_key) ordered by caller.
     """
     bkey = payload_key(F.col(payload)).alias("_k")
     keyed = batch.select(F.col(id_col).alias("record_id"), bkey)
@@ -311,6 +330,5 @@ def bloom_novelty(
             index = index.localCheckpoint()
     hist_keys = history.select(payload_key(F.col(payload)).alias("_k"))
     return novel_rows(
-        keyed, "_k", hist_keys, index,
-        n_buckets=n_buckets, n_hashes=n_hashes, strategy=strategy,
+        keyed, "_k", hist_keys, index, strategy=strategy
     ).select("record_id", F.col("_k").alias("novel_key"))

@@ -272,7 +272,6 @@ class DedupePipeline:
         cand = stage(3, "pairs", lambda: self.gen_pairs(bm))
         scored = stage(4, "score", lambda: self.score(cand, extracted))
         entity_map = stage(5, "cluster", lambda: self.cluster(scored, extracted))
-        # entity_map=None: aggregate the raw cluster-checkpoint scan
-        # (params-validated), skipping the read-back's repartition
+        # entity_map=None: aggregate the params-validated cluster checkpoint
         self.store.write_run_stats(params=p, spark=spark)
         return entity_map

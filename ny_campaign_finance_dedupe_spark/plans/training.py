@@ -22,8 +22,6 @@ sampling inside the blocking map — a groupBy + window, no deque dance.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
@@ -90,13 +88,6 @@ def random_pair_sample(
     sample of candidate pairs for labeling — native ``df.sample``, fully
     distributed, deterministic per (seed, partitioning)."""
     return pairs.sample(withReplacement=False, fraction=fraction, seed=seed)
-
-
-@dataclass
-class PredicateStats:
-    name: str
-    covered: int  # labeled true pairs co-blocked (T4)
-    est_comparisons: float  # extrapolated candidate pairs (T6)
 
 
 def predicate_cover(

@@ -19,7 +19,11 @@ checkpoint — metadata-only: no extra scan job per stage — and the
 read-back takes the written frame's schema, so no schema-inference job
 either (both pinned by test_checkpoint_write_runs_no_extra_job).
 Decoding every footer doubles as a read-back validation (a truncated or
-corrupt file fails right here, not three stages later).
+corrupt file fails right here, not three stages later). A read is a
+plain parquet scan with no repartition: the session's
+``maxPartitionBytes``/``openCostInBytes`` settings split small stages
+across cores, and every consumer that needs a shuffle makes its own
+(pinned by test_checkpoint_read_back_has_no_exchange).
 """
 
 from __future__ import annotations
@@ -75,7 +79,7 @@ class CheckpointStore:
         return saved.get("params") == _canon(params)
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        return _spread(spark.read.parquet(self._data_path(stage)))
+        return spark.read.parquet(self._data_path(stage))
 
     def write(
         self,
@@ -92,7 +96,7 @@ class CheckpointStore:
         df.write.mode("overwrite").parquet(path)
         wall = time.time() - t0
         # the written schema is on hand: no parquet schema-inference job
-        out = _spread(df.sparkSession.read.schema(df.schema).parquet(path))
+        out = df.sparkSession.read.schema(df.schema).parquet(path)
         p = _canon(params or {})
         rows = [
             (
@@ -127,12 +131,10 @@ class CheckpointStore:
 
         Contract: a caller-passed ``entity_map`` is aggregated AS GIVEN
         — never silently swapped for on-disk state. Pass
-        ``entity_map=None`` to aggregate the raw cluster-checkpoint scan
-        instead (the pipeline's fast path: the checkpoint scan skips the
-        read-back's _spread() repartition exchange, which the groupBy
-        would immediately re-shuffle anyway); that path requires the
-        cluster checkpoint to exist WITH matching ``params``, so stats
-        can never describe a stale or differently-configured run."""
+        ``entity_map=None`` to aggregate the cluster checkpoint
+        (``read``) instead; that path requires the cluster checkpoint to
+        exist WITH matching ``params``, so stats can never describe a
+        stale or differently-configured run."""
         if entity_map is not None:
             src = entity_map
         else:
@@ -150,7 +152,7 @@ class CheckpointStore:
                     "write_run_stats(entity_map=None) needs a SparkSession "
                     "(pass spark=...) when none is active"
                 )
-            src = spark.read.parquet(self._data_path("cluster"))
+            src = self.read(spark, "cluster")
         sizes = src.groupBy("cluster_id").count()
         row = sizes.agg(
             F.count("*").alias("total_clusters"),
@@ -182,18 +184,6 @@ class CheckpointStore:
             ],
         )
         return stats
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Re-spread a checkpoint scan across all cores when the files are
-    too small to split that far (sandbox scale): a stage written as a
-    few MB of parquet would otherwise read back as 1-2 partitions and
-    serialize every downstream stage. On a real cluster the scan
-    partition count dwarfs defaultParallelism and this is a no-op."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        return df.repartition(sc.defaultParallelism)
-    return df
 
 
 def _footer_counts(path: str) -> list[tuple[int, int]]:

@@ -14,11 +14,11 @@ tested) separately into ONE foreachBatch streaming query:
     -> gazetteer match of the novel pages, with their ntext, against
        the static blocking index (incremental.match_batch — same
        predicates, features and model as batch; it never re-extracts)
-    -> entity-map append: a novel page adopts its best match's url as
-       cluster id (the gazetteer decision, reference api.py:612-896),
-       or founds a new singleton cluster when nothing clears the
-       threshold. Non-novel pages are suppressed before matching —
-       that is the point of the Bloom stage at 100 TB/day.
+    -> entity-map write per batch_id: a novel page adopts its best
+       match's url as cluster id (the gazetteer decision, reference
+       api.py:612-896), or founds a new singleton cluster when nothing
+       clears the threshold. Non-novel pages are suppressed before
+       matching — that is the point of the Bloom stage at 100 TB/day.
 
 Scale shape per micro-batch: one Arrow extract pass, one Arrow bloom
 probe (broadcast or bucket-join, size-gated — bloom.resolve_strategy),
@@ -26,12 +26,17 @@ one anti-join whose history side is the distinct key column, one
 stream-static equi-join on block_key for the (novel-only) batch, one
 window rank. History artifacts (bloom index + key projection + blocking
 index) are built once per ingest epoch and persisted; between epochs
-they are plain parquet appends.
+they are plain parquet appends. The Bloom index carries its own
+geometry (bloom.build_bloom_index): build_history_index sets the bucket
+count once and every probe reads it back from the index.
 
 Restart semantics ride the streaming checkpoint: the file source tracks
 consumed files, so a restarted availableNow query resumes at the first
-unseen file and never re-appends a processed batch (pinned by
-test_crawl_pipeline_restart_resumes).
+unseen file (pinned by test_crawl_pipeline_restart_resumes). A batch
+that ran but was not committed before a crash re-runs under the same
+batch_id; the sink overwrites that batch_id's partition, so the replay
+replaces its rows instead of adding them twice (pinned by
+test_crawl_sink_replay_is_idempotent).
 """
 
 from __future__ import annotations
@@ -75,7 +80,6 @@ def match_novel_batch(
     index: DataFrame,
     cfg,
     *,
-    n_buckets: int = 64,
     threshold: float | None = None,
     strategy: str = "auto",
 ) -> DataFrame:
@@ -98,8 +102,7 @@ def match_novel_batch(
         .localCheckpoint()
     )
     novel = bloom.novel_rows(
-        keyed, "exact_key", history_keys, bloom_index,
-        n_buckets=n_buckets, strategy=strategy,
+        keyed, "exact_key", history_keys, bloom_index, strategy=strategy
     )
     matches = incremental.match_batch(
         novel, index, cfg, n_matches=1, threshold=threshold
@@ -135,21 +138,23 @@ def start_crawl_pipeline(
     checkpoint_dir: str,
     pages_schema,
     *,
-    n_buckets: int = 64,
     threshold: float | None = None,
     strategy: str = "auto",
     watermark: str = "1 hour",
 ):
     """Wire the composed query: file-source pages stream ->
-    foreachBatch(match_novel_batch) -> entity-map parquet append.
+    foreachBatch(match_novel_batch) -> entity-map parquet, one
+    ``batch_id=<n>`` partition per micro-batch.
 
     ``trigger(availableNow)`` drains the source directory and stops, so
     repeated calls are the crawl's ingestion ticks; each restart resumes
-    from ``checkpoint_dir`` (already-consumed files are never
-    reprocessed, so the entity-map append is effectively exactly-once at
-    file granularity). The watermark drops no late rows: with
-    foreachBatch and no stateful stage downstream every file-source row
-    reaches the batch. It exists so that a stateful stage added
+    from ``checkpoint_dir``. foreachBatch is at-least-once: a batch
+    whose commit never landed re-runs under the same batch_id after a
+    restart. The sink therefore overwrites its own ``batch_id``
+    partition (dynamic partition overwrite) rather than appending, so a
+    replay leaves each record once. The watermark drops no late rows:
+    with foreachBatch and no stateful stage downstream every file-source
+    row reaches the batch. It exists so that a stateful stage added
     downstream inherits sane late-data bounds.
     """
     # the index is fixed for the query's lifetime: resolve the probe
@@ -163,13 +168,16 @@ def start_crawl_pipeline(
             bloom_index,
             index,
             cfg,
-            n_buckets=n_buckets,
             threshold=threshold,
             strategy=strategy,
         )
-        out.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out_dir)
+        (
+            out.withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(out_dir)
+        )
 
     return ingest.start_page_stream(
         spark, stream_source_dir, pages_schema, watermark, checkpoint_dir,

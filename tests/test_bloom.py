@@ -55,7 +55,7 @@ def test_no_false_negatives_in_probe(spark, corpus):
     key = bloom.payload_key(F.col("text"))
     index = bloom.build_bloom_index(corpus, key, n_buckets=8)
     keyed = corpus.select(F.col("doc_id").alias("record_id"), key.alias("_k"))
-    flagged = bloom.bloom_probe(keyed, index, F.col("_k"), n_buckets=8)
+    flagged = bloom.bloom_probe(keyed, index, F.col("_k"))
     assert flagged.filter(~F.col("bloom_maybe")).count() == 0
 
 
@@ -72,7 +72,7 @@ def test_prefilter_shrinks_confirm_join(spark, corpus):
             F.concat(F.lit("never seen before "), F.col("id"))
         ).alias("_k"),
     )
-    flagged = bloom.bloom_probe(novel, index, F.col("_k"), n_buckets=8)
+    flagged = bloom.bloom_probe(novel, index, F.col("_k"))
     positives = flagged.filter(F.col("bloom_maybe")).count()
     assert positives <= 5, f"FP rate far above design: {positives}/500"
 
@@ -113,8 +113,8 @@ def test_prebuilt_index_reuse(spark, corpus):
     index = bloom.build_bloom_index(history, key, n_buckets=8).localCheckpoint()
     b1 = corpus.filter(F.col("doc_id").between(100, 149))
     b2 = corpus.filter(F.col("doc_id").between(200, 249))
-    out1 = bloom.bloom_novelty(b1, history, "doc_id", "text", index=index, n_buckets=8)
-    out2 = bloom.bloom_novelty(b2, history, "doc_id", "text", index=index, n_buckets=8)
+    out1 = bloom.bloom_novelty(b1, history, "doc_id", "text", index=index)
+    out2 = bloom.bloom_novelty(b2, history, "doc_id", "text", index=index)
     assert out1.count() == 0  # b1 fully inside history
     assert out2.count() == 50  # b2 fully novel
 
@@ -126,12 +126,8 @@ def test_join_strategy_matches_broadcast(spark, corpus):
     key = bloom.payload_key(F.col("text"))
     index = bloom.build_bloom_index(history, key, n_buckets=16).localCheckpoint()
     keyed = corpus.select(F.col("doc_id").alias("record_id"), key.alias("_k"))
-    bc = bloom.bloom_probe(
-        keyed, index, F.col("_k"), n_buckets=16, strategy="broadcast"
-    )
-    jn = bloom.bloom_probe(
-        keyed, index, F.col("_k"), n_buckets=16, strategy="join"
-    )
+    bc = bloom.bloom_probe(keyed, index, F.col("_k"), strategy="broadcast")
+    jn = bloom.bloom_probe(keyed, index, F.col("_k"), strategy="join")
     rows_bc = sorted((r["record_id"], r["bloom_maybe"]) for r in bc.collect())
     rows_jn = sorted((r["record_id"], r["bloom_maybe"]) for r in jn.collect())
     assert rows_bc == rows_jn
@@ -149,7 +145,7 @@ def test_auto_strategy_debroadcasts_over_threshold(spark, corpus):
     tot_bytes = index.agg(F.sum("m")).collect()[0][0] // 8
     keyed = corpus.select(F.col("doc_id").alias("record_id"), key.alias("_k"))
     flagged = bloom.bloom_probe(
-        keyed, index, F.col("_k"), n_buckets=8,
+        keyed, index, F.col("_k"),
         strategy="auto", broadcast_max_bytes=tot_bytes // 10,
     )
     plan = flagged._sc._jvm.PythonSQLUtils.explainString(
@@ -165,7 +161,7 @@ def test_auto_strategy_broadcasts_under_threshold(spark, corpus):
     key = bloom.payload_key(F.col("text"))
     index = bloom.build_bloom_index(corpus, key, n_buckets=8).localCheckpoint()
     keyed = corpus.select(F.col("doc_id").alias("record_id"), key.alias("_k"))
-    flagged = bloom.bloom_probe(keyed, index, F.col("_k"), n_buckets=8)
+    flagged = bloom.bloom_probe(keyed, index, F.col("_k"))
     plan = flagged._sc._jvm.PythonSQLUtils.explainString(
         flagged._jdf.queryExecution(), "formatted"
     )
@@ -176,4 +172,54 @@ def test_bad_strategy_raises(spark, corpus):
     key = bloom.payload_key(F.col("text"))
     index = bloom.build_bloom_index(corpus, key, n_buckets=4)
     with pytest.raises(ValueError, match="strategy"):
-        bloom.bloom_probe(corpus, index, key, n_buckets=4, strategy="nope")
+        bloom.bloom_probe(corpus, index, key, strategy="nope")
+
+
+def _novel_ids(index, corpus, history):
+    key = bloom.payload_key(F.col("text"))
+    keyed = corpus.select("doc_id", key.alias("_k"))
+    hist_keys = history.select(key.alias("_k"))
+    return {
+        r["doc_id"] for r in bloom.novel_rows(keyed, "_k", hist_keys, index).collect()
+    }
+
+
+def test_probe_reads_geometry_from_index(spark, corpus):
+    """An index built with non-default geometry, probed with none given,
+    yields the exact anti-join set: the probe hashes into the build's 8
+    buckets and tests its 4 positions, so no history key reads as
+    bloom-negative and skips the confirm join."""
+    history = corpus.filter(F.col("doc_id") % 4 != 0)
+    key = bloom.payload_key(F.col("text"))
+    index = bloom.build_bloom_index(
+        history, key, n_buckets=8, n_hashes=4
+    ).localCheckpoint()
+    assert _novel_ids(index, corpus, history) == _expected_novel(
+        spark, corpus, history
+    )
+    assert bloom._geometry(index) == (8, 4)
+
+
+def test_probe_without_geometry_metadata_raises(spark, corpus):
+    """An index that did not come from build_bloom_index (no geometry
+    metadata on ``bucket``) is refused, naming the missing key."""
+    key = bloom.payload_key(F.col("text"))
+    index = bloom.build_bloom_index(corpus, key, n_buckets=8)
+    bare = index.withMetadata("bucket", {})
+    keyed = corpus.select(F.col("doc_id").alias("record_id"), key.alias("_k"))
+    with pytest.raises(ValueError, match="n_buckets"):
+        bloom.bloom_probe(keyed, bare, F.col("_k"))
+
+
+def test_geometry_survives_parquet_round_trip(spark, corpus, tmp_path):
+    """The durable shape: an index written as parquet and read back
+    keeps its geometry and still answers novelty exactly."""
+    history = corpus.filter(F.col("doc_id") % 3 != 0)
+    key = bloom.payload_key(F.col("text"))
+    path = str(tmp_path / "bloom_index")
+    bloom.build_bloom_index(history, key, n_buckets=8, n_hashes=4).write.parquet(path)
+    back = spark.read.parquet(path)
+    assert bloom._geometry(back) == (8, 4)
+    assert _novel_ids(back, corpus, history) == _expected_novel(
+        spark, corpus, history
+    )

@@ -153,11 +153,29 @@ def test_checkpoint_write_runs_no_extra_job(spark, tmp_path):
     assert sum(r["rows_out"] for r in rows) == 300
 
 
+def test_checkpoint_read_back_has_no_exchange(spark, tmp_path):
+    """A checkpoint read (the write's read-back and a resume read) is a
+    bare parquet scan: a small single-file stage is not repartitioned,
+    so no consumer re-runs a shuffle the store put on top of it."""
+    from ny_campaign_finance_dedupe_spark import synth
+    from ny_campaign_finance_dedupe_spark.sources.checkpoint import (
+        CheckpointStore,
+    )
+
+    store = CheckpointStore(str(tmp_path), run_id="scan")
+    pages, _ = synth.synth_pages(spark, n_pages=100, seed=8)
+    back = store.write(pages.select("url", "lang").coalesce(1), "extract")
+    for got in (back, store.read(spark, "extract")):
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+
+
 def test_cluster_stage_job_count(spark, tmp_path):
     """The cluster stage (build + checkpoint write) runs a pinned number
     of Spark jobs: connected components labels the url ids themselves,
-    so no id map is checkpointed, joined back or relabelled, and the
-    checkpoint read-back infers no schema."""
+    so no id map is checkpointed, joined back or relabelled, the
+    checkpoint read-back infers no schema, and the score checkpoint is
+    read without a repartition for each of its consumers to re-run."""
     from ny_campaign_finance_dedupe_spark import synth
     from ny_campaign_finance_dedupe_spark.plans.pipeline import (
         DedupePipeline,
@@ -179,7 +197,7 @@ def test_cluster_stage_job_count(spark, tmp_path):
         "cluster-stage",
         lambda: store.write(pipe.cluster(scored, extracted), "cluster"),
     )
-    assert n <= 13
+    assert n <= 12
 
 
 def test_checkpoint_resume_with_partitioned_stage(spark, tmp_path):
@@ -285,3 +303,38 @@ def test_scaling_worker_stage_telemetry():
         assert m["run_s"] > 0, (st, m)
         assert m["cpu_s"] > 0, (st, m)
         assert m["failed_tasks"] == 0, (st, m)
+
+
+def test_match_novel_batch_job_count(spark):
+    """One crawl micro-batch (``match_novel_batch`` to a noop sink, the
+    broadcast probe) runs a pinned number of Spark jobs, and reading
+    the Bloom geometry off the index runs none."""
+    from ny_campaign_finance_dedupe_spark import synth
+    from ny_campaign_finance_dedupe_spark.operators import bloom
+    from ny_campaign_finance_dedupe_spark.plans.pipeline import PipelineConfig
+    from ny_campaign_finance_dedupe_spark.streaming import crawl, incremental
+
+    pages, _ = synth.synth_pages(spark, n_pages=120, seed=19, dup_rate=0.0)
+    history = pages.localCheckpoint()
+    keys, bidx = crawl.build_history_index(history, n_buckets=8)
+    keys, bidx = keys.localCheckpoint(), bidx.localCheckpoint()
+    index = incremental.build_index(history, PipelineConfig()).localCheckpoint()
+    one = history.limit(1).collect()[0]
+    batch = spark.createDataFrame(
+        [("https://re.example.com/a", one["warc_ts"], one["html"],
+          one["text"], one["lang"]),
+         ("https://near.example.com/b", one["warc_ts"], None,
+          one["text"] + " zzzextra", one["lang"]),
+         ("https://fresh.example.com/c", None, None,
+          "entirely new vocabulary qqq", "en")],
+        synth.PAGES_SCHEMA,
+    )
+    assert _jobs_in_group(spark, "bloom-geometry", lambda: bloom._geometry(bidx)) == 0
+    n = _jobs_in_group(
+        spark,
+        "crawl-batch",
+        lambda: crawl.match_novel_batch(
+            batch, keys, bidx, index, PipelineConfig(), strategy="broadcast"
+        ).write.format("noop").mode("overwrite").save(),
+    )
+    assert n == 12

@@ -209,3 +209,16 @@ def test_redact_pii_vertical_tab_parity(spark):
         normalize.redact_pii(F.col("t")).alias("c")).collect()]
     assert got[0] == "call 555\x0b0199-22 now"  # \x0B: not whitespace
     assert got[1] == "call <PHONE> now"          # real tab: redacts
+
+
+def test_name_concat_skips_null_middle(spark):
+    """N2: CONCAT_WS(' ', first, middle, last) — a NULL part is skipped,
+    not turned into a double space or a NULL result."""
+    df = spark.createDataFrame(
+        [("ann", None, "lee"), ("bo", "j", "kim")], "f string, m string, l string"
+    )
+    got = [
+        r["n"]
+        for r in df.select(normalize.name_concat("f", F.col("m"), "l").alias("n")).collect()
+    ]
+    assert got == ["ann lee", "bo j kim"]

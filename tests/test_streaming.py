@@ -275,7 +275,7 @@ def test_match_novel_batch_composition(spark, tmp_path):
     out = {
         r["record_id"]: r
         for r in crawl.match_novel_batch(
-            batch, keys, bidx, index, cfg, n_buckets=8
+            batch, keys, bidx, index, cfg
         ).collect()
     }
     assert "https://re.example.com/a" not in out  # suppressed as known
@@ -318,8 +318,7 @@ def test_crawl_pipeline_restart_resumes(spark, tmp_path):
     )
     t1.write.mode("append").parquet(src)
     q1 = crawl.start_crawl_pipeline(
-        spark, src, keys, bidx, index, cfg, out, ckpt, PAGES_SCHEMA,
-        n_buckets=8,
+        spark, src, keys, bidx, index, cfg, out, ckpt, PAGES_SCHEMA
     )
     q1.awaitTermination(120)
     got1 = spark.read.parquet(out).collect()
@@ -335,8 +334,7 @@ def test_crawl_pipeline_restart_resumes(spark, tmp_path):
     )
     t2.write.mode("append").parquet(src)
     q2 = crawl.start_crawl_pipeline(
-        spark, src, keys, bidx, index, cfg, out, ckpt, PAGES_SCHEMA,
-        n_buckets=8,
+        spark, src, keys, bidx, index, cfg, out, ckpt, PAGES_SCHEMA
     )
     q2.awaitTermination(120)
     got2 = spark.read.parquet(out).collect()
@@ -351,6 +349,48 @@ def test_crawl_pipeline_restart_resumes(spark, tmp_path):
     }
     near = {r["record_id"]: r for r in got2}["https://t1.example.com/near"]
     assert near["matched"] and near["cluster_id"] == one["url"]
+
+
+def test_crawl_sink_replay_is_idempotent(spark, tmp_path, crawl_history):
+    """foreachBatch is at-least-once: a batch whose commit never landed
+    (a crash between the sink write and the commit) re-runs under the
+    same batch_id on restart. The sink overwrites that batch_id's
+    partition, so the replay leaves each record exactly once."""
+    from pathlib import Path
+
+    from ny_campaign_finance_dedupe_spark.streaming import crawl
+
+    _, keys, bidx, index = crawl_history
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "entity_map", "ckpt"))
+    spark.createDataFrame(
+        [("https://replay.example.com/1", None, None,
+          "a replayed fresh page with novel words rrr", "en"),
+         ("https://replay.example.com/2", None, None,
+          "another replayed fresh page with other words sss", "en")],
+        PAGES_SCHEMA,
+    ).write.parquet(src)
+
+    def tick():
+        q = crawl.start_crawl_pipeline(
+            spark, src, keys, bidx, index, PipelineConfig(), out, ckpt,
+            PAGES_SCHEMA,
+        )
+        q.awaitTermination(120)
+        return {p["batchId"] for p in q.recentProgress if p["numInputRows"]}
+
+    (batch_id,) = tick()
+    commits = Path(ckpt) / "commits"
+    for name in (str(batch_id), f".{batch_id}.crc"):
+        (commits / name).unlink(missing_ok=True)
+    assert tick() == {batch_id}  # the same batch really ran again
+    counts = {
+        r["record_id"]: r["count"]
+        for r in spark.read.parquet(out).groupBy("record_id").count().collect()
+    }
+    assert counts == {
+        "https://replay.example.com/1": 1,
+        "https://replay.example.com/2": 1,
+    }
 
 
 def test_match_novel_batch_forwards_bloom_strategy(spark):
@@ -379,7 +419,7 @@ def test_match_novel_batch_forwards_bloom_strategy(spark):
     rows = {}
     for strat in ("broadcast", "join"):
         out = crawl.match_novel_batch(
-            batch, keys, bidx, index, cfg, n_buckets=8, strategy=strat
+            batch, keys, bidx, index, cfg, strategy=strat
         )
         rows[strat] = sorted(
             (r["record_id"], r["cluster_id"], r["matched"])
@@ -421,7 +461,7 @@ def test_match_novel_batch_extracts_once(spark, crawl_history):
         PAGES_SCHEMA,
     )
     out = crawl.match_novel_batch(
-        batch, keys, bidx, index, PipelineConfig(), n_buckets=8
+        batch, keys, bidx, index, PipelineConfig()
     )
     plan = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "extended"
@@ -446,8 +486,7 @@ def test_match_novel_batch_honours_lang_filter(spark, crawl_history):
         PAGES_SCHEMA,
     )
     out = crawl.match_novel_batch(
-        batch, keys, bidx, index, PipelineConfig(lang_filter="en"),
-        n_buckets=8,
+        batch, keys, bidx, index, PipelineConfig(lang_filter="en")
     )
     assert [r["record_id"] for r in out.collect()] == [
         "https://en.example.com/1"
