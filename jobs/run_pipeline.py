@@ -26,14 +26,17 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def main() -> None:
+    from ny_campaign_finance_dedupe_spark.sources.checkpoint import (
+        STAGES,
+        CheckpointStore,
+    )
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True,
                     help="pages parquet/table path, or synth:N for the generator")
     ap.add_argument("--checkpoint-root", required=True)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--resume-from", default=None,
-                    choices=[None, "extract", "signatures", "block", "pairs",
-                             "score", "cluster"])
+    ap.add_argument("--resume-from", default=None, choices=STAGES)
     ap.add_argument("--lang", default=None)
     ap.add_argument("--model", default=None, help="S7 model artifact JSON")
     ap.add_argument("--threshold", type=float, default=0.5)
@@ -47,7 +50,6 @@ def main() -> None:
         PipelineConfig,
     )
     from ny_campaign_finance_dedupe_spark.session import get_spark
-    from ny_campaign_finance_dedupe_spark.sources.checkpoint import CheckpointStore
     from ny_campaign_finance_dedupe_spark.sources.io import load_model_artifact
     from ny_campaign_finance_dedupe_spark.synth import synth_pages
 

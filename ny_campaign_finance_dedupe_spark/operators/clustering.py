@@ -140,7 +140,6 @@ def _driver_union_find(e: DataFrame) -> DataFrame:
 
 def connected_components(
     edges: DataFrame,
-    max_iters: int = MAX_CC_ITERS,
     driver_max_edges: int = DRIVER_CC_MAX_EDGES,
 ) -> DataFrame:
     """edges(src, dst) -> (record_id, cluster_id) for every id appearing
@@ -158,14 +157,14 @@ def connected_components(
     if driver_max_edges and e.count() <= driver_max_edges:
         return _driver_union_find(e)
     prev = None
-    for _ in range(max_iters):
+    for _ in range(MAX_CC_ITERS):
         e = _small_star(_large_star(e)).localCheckpoint()
         cur = _checksum(e)
         if cur == prev:
             break
         prev = cur
     else:
-        raise RuntimeError(f"connected_components: no convergence in {max_iters}")
+        raise RuntimeError(f"connected_components: no convergence in {MAX_CC_ITERS}")
     # converged: e is (member, root) star edges with root = component min
     members = e.select(F.col("src").alias("record_id"), F.col("dst").alias("cluster_id"))
     roots = e.select(F.col("dst").alias("record_id"), F.col("dst").alias("cluster_id"))
@@ -370,43 +369,20 @@ def split_oversize_components(
     threshold: float,
     max_component: int = MAX_COMPONENT,
     max_rounds: int = 5,
-    report: dict | None = None,
 ) -> DataFrame:
     """C2 (clustering.py:63-98): components over ``max_component`` members
     re-filter their edges at logit(min kept score) + 1 and re-cluster,
-    recursing (bounded). The semantic skew guard on top of salting/AQE.
-
-    ``report``, when given, records engagement evidence — extra cost is
-    one count on the (tiny) oversize-id list plus one max() over the
-    round-1 size agg: ``{"rounds": n executed, "oversize_round1": count
-    in round 1, "max_cluster_round1": biggest input component}`` — the
-    skew bench (tools/skew_bench.py) uses it to show the guard fired on
-    the REAL pipeline code path rather than a reimplementation.
+    recursing (bounded). The semantic skew guard on top of the block cap
+    and AQE skew-join splitting.
     """
     out = clustered
-    if report is not None:
-        report.setdefault("rounds", 0)
-    for round_no in range(max_rounds):
-        sizes = out.groupBy("cluster_id").count()
-        big = sizes.where(F.col("count") > max_component).select("cluster_id")
-        if report is not None:
-            if round_no == 0:
-                first = sizes.agg(
-                    F.count("*").alias("n"),
-                    F.max("count").alias("mx"),
-                    F.count(F.when(F.col("count") > max_component, 1)).alias(
-                        "big"
-                    ),
-                ).collect()[0]
-                report["max_cluster_round1"] = first["mx"] or 0
-                report["oversize_round1"] = first["big"]
-                n_big = first["big"]
-            else:
-                n_big = big.count()
-            if n_big == 0:
-                return out
-            report["rounds"] = round_no + 1
-        elif big.isEmpty():
+    for _ in range(max_rounds):
+        big = (
+            out.groupBy("cluster_id").count()
+            .where(F.col("count") > max_component)
+            .select("cluster_id")
+        )
+        if big.isEmpty():
             return out
         # broadcast only the (tiny) oversize-cluster-id list; big_members
         # can be max_component x n_big rows — a shuffled semi-join, never

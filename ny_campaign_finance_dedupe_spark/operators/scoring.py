@@ -511,9 +511,8 @@ def tfidf_cosine_udf(idf: dict[str, float], default_idf: float):
     1.5-1.8x faster than a hashed-token numpy intersect at web-page
     token counts (100-2000 tokens/doc — frame-build/merge/reindex
     constants dominate the former; per-row tokenization + fromiter
-    marshalling eat the latter's gains). Measurement:
-    tools/tfidf_microbench.py, table in BASELINE.md round-4
-    "TF-IDF kernel micro-bench"."""
+    marshalling eat the latter's gains). Measurement: BASELINE.md
+    round-4 "TF-IDF kernel micro-bench"."""
     import math
 
     from pyspark.sql import SparkSession

@@ -29,6 +29,11 @@ from ..functions import hashing, keygen, normalize
 from ..operators import blocking, clustering, pairs, scoring
 from ..sources.checkpoint import STAGES, CheckpointStore
 
+# word 3-gram shingles feed both signature families; 4 simhash bands key
+# the dom_sh predicate (fixed: no caller tunes either)
+SHINGLE_WORDS = 3
+SIMHASH_BANDS = 4
+
 
 @dataclass
 class PipelineConfig:
@@ -41,8 +46,6 @@ class PipelineConfig:
     minhash_perms: int = 64
     minhash_bands: int = 8
     minhash_rows: int = 8
-    shingle_words: int = 3
-    simhash_bands: int = 4
     # engine-portable hash family (functions/portable.py): md5-derived
     # minhash/simhash, zero-UDF Catalyst expressions, every signature
     # recomputable by the DuckDB oracle. Slower constants than the
@@ -50,18 +53,12 @@ class PipelineConfig:
     # the bench one. Use 16 perms / 8x2 banding with it.
     portable_hashing: bool = False
     max_block_size: int = 100
-    # candidate generation strategy: "join" (plain self-join + AQE) or
-    # "salted" (hot-key bucket grid, pairs.salted_candidate_pairs)
-    pair_strategy: str = "join"
-    salt_hot_threshold: int = 1_000
-    salt: int = 16
     score_threshold: float = 0.5
-    max_component: int = clustering.MAX_COMPONENT
     lang_filter: str | None = None
     # Compact block keys to 64-bit xxhash64 before the blocking map is
     # checkpointed / shuffled. The string keys ("mh|<band>|<hex>",
     # "dom_sh|<domain>|<band>", ~30-60 bytes) are only ever compared for
-    # EQUALITY downstream (cap count, pair self-join, salt grid), so an
+    # EQUALITY downstream (cap count, pair self-join), so an
     # 8-byte injective-enough stand-in carries the same information at
     # ~1/5 the shuffle + checkpoint byte volume — the block stage is the
     # pipeline's most bandwidth-bound after signatures (2->8-core
@@ -88,10 +85,6 @@ class DedupePipeline:
     """
 
     def __init__(self, config: PipelineConfig, store: CheckpointStore | None = None):
-        if config.pair_strategy not in ("join", "salted"):
-            raise ValueError(
-                f"unknown pair_strategy {config.pair_strategy!r} (join|salted)"
-            )
         self.cfg = config
         self.store = store
 
@@ -140,7 +133,7 @@ class DedupePipeline:
         if cfg.portable_hashing:
             from ..functions import portable
 
-            shingles = keygen.word_ngrams(F.col("ntext"), cfg.shingle_words)
+            shingles = keygen.word_ngrams(F.col("ntext"), SHINGLE_WORDS)
             return extracted.select(
                 *head,
                 exact_key,
@@ -150,7 +143,7 @@ class DedupePipeline:
         # fast family: token-hash-combined shingle ids — no gram strings
         # ever materialize JVM-side (see hashing.word_ngram_hashes)
         fused = hashing.minhash_simhash_udf(cfg.minhash_perms)(
-            hashing.word_ngram_hashes(F.col("ntext"), cfg.shingle_words)
+            hashing.word_ngram_hashes(F.col("ntext"), SHINGLE_WORDS)
         )
         return extracted.withColumn("_s", fused).select(
             *head,
@@ -168,15 +161,13 @@ class DedupePipeline:
                 F.col("sig"), cfg.minhash_bands, cfg.minhash_rows
             )
             sh = portable.simhash_band_keys(
-                F.col("simhash"), bands=cfg.simhash_bands, bits=32
+                F.col("simhash"), bands=SIMHASH_BANDS, bits=32
             )
         else:
             mh = hashing.minhash_band_keys(
                 F.col("sig"), bands=cfg.minhash_bands, rows=cfg.minhash_rows
             )
-            sh = hashing.simhash_band_keys(
-                F.col("simhash"), bands=cfg.simhash_bands
-            )
+            sh = hashing.simhash_band_keys(F.col("simhash"), bands=SIMHASH_BANDS)
         return {
             "exact": F.when(
                 F.col("exact_key").isNull(), F.array().cast("array<string>")
@@ -199,11 +190,6 @@ class DedupePipeline:
         return blocking.cap_blocks(bm, self.cfg.max_block_size)
 
     def gen_pairs(self, blocking_map: DataFrame) -> DataFrame:
-        cfg = self.cfg
-        if cfg.pair_strategy == "salted":
-            return pairs.salted_candidate_pairs(
-                blocking_map, cfg.salt_hot_threshold, cfg.salt
-            )
         return pairs.candidate_pairs(blocking_map)
 
     def score(self, cand: DataFrame, extracted: DataFrame) -> DataFrame:
@@ -212,12 +198,7 @@ class DedupePipeline:
         model = scoring.LogisticModel.from_dict(self.cfg.model)
         return scoring.score_pairs(feat, model).select("src", "dst", "score")
 
-    def cluster(
-        self,
-        scored: DataFrame,
-        records: DataFrame,
-        c2_report: dict | None = None,
-    ) -> DataFrame:
+    def cluster(self, scored: DataFrame, records: DataFrame) -> DataFrame:
         # materialize the CC map once: split_oversize's emptiness probe
         # and the stage's checkpoint write both consume it, and without a
         # checkpoint each one re-evaluates the CC-label + confidence join
@@ -225,11 +206,7 @@ class DedupePipeline:
             scored, threshold=self.cfg.score_threshold
         ).localCheckpoint()
         cl = clustering.split_oversize_components(
-            scored,
-            cl,
-            self.cfg.score_threshold,
-            self.cfg.max_component,
-            report=c2_report,
+            scored, cl, self.cfg.score_threshold
         )
         return clustering.add_singletons(records, "url", cl)
 
@@ -242,8 +219,10 @@ class DedupePipeline:
     ) -> DataFrame:
         """Execute all stages with checkpoint + resume.
 
-        ``resume_from='pairs'`` skips extract/block if their checkpoints
-        exist with matching params (start_at_clustering semantics).
+        ``resume_from=<stage>`` reads back every stage before ``<stage>``
+        whose checkpoint exists under the same params and recomputes the
+        rest (start_at_clustering semantics): ``resume_from='pairs'``
+        reuses extract, signatures and block when all three are on disk.
         """
         if self.store is None:
             raise ValueError("DedupePipeline.run requires a CheckpointStore")

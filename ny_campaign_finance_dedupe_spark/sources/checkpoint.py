@@ -15,9 +15,11 @@ Here every stage writes:
   ``<root>/match_runs`` (FIXTURES.md §5 schema).
 
 Partition counts come from the parquet file footers of the written
-checkpoint — metadata-only: no extra scan job per stage — and the
-read-back takes the written frame's schema, so no schema-inference job
-either (both pinned by test_checkpoint_write_runs_no_extra_job).
+checkpoint — metadata-only: no extra scan job per stage. The marker also
+carries the written frame's schema, and every read (the write's
+read-back, a resume, run stats) passes it to the scan, so no read runs a
+schema-inference job (pinned by test_checkpoint_write_runs_no_extra_job
+and test_checkpoint_read_runs_no_job).
 Decoding every footer doubles as a read-back validation (a truncated or
 corrupt file fails right here, not three stages later). A read is a
 plain parquet scan with no repartition: the session's
@@ -69,17 +71,28 @@ class CheckpointStore:
         return self._stage_dir(stage) / "meta.json"
 
     # -- api -----------------------------------------------------------------
-    def has(self, stage: str, params: dict | None = None) -> bool:
+    def _meta(self, stage: str) -> dict | None:
+        """The stage's marker, or None when there is none or it predates
+        the schema field (such a checkpoint cannot be read without
+        inference, so it counts as absent)."""
         meta = self._meta_path(stage)
         if not meta.exists():
-            return False
-        if params is None:
-            return True
+            return None
         saved = json.loads(meta.read_text())
-        return saved.get("params") == _canon(params)
+        return saved if "schema" in saved else None
+
+    def has(self, stage: str, params: dict | None = None) -> bool:
+        saved = self._meta(stage)
+        if saved is None:
+            return False
+        return params is None or saved["params"] == _canon(params)
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
-        return spark.read.parquet(self._data_path(stage))
+        saved = self._meta(stage)
+        if saved is None:
+            raise FileNotFoundError(f"no checkpoint for stage {stage!r}")
+        schema = T.StructType.fromJson(saved["schema"])
+        return spark.read.schema(schema).parquet(self._data_path(stage))
 
     def write(
         self,
@@ -95,8 +108,6 @@ class CheckpointStore:
         t0 = time.time()
         df.write.mode("overwrite").parquet(path)
         wall = time.time() - t0
-        # the written schema is on hand: no parquet schema-inference job
-        out = df.sparkSession.read.schema(df.schema).parquet(path)
         p = _canon(params or {})
         rows = [
             (
@@ -113,9 +124,11 @@ class CheckpointStore:
         _append_match_runs(self.root / "match_runs", rows)
         self._meta_path(stage).parent.mkdir(parents=True, exist_ok=True)
         self._meta_path(stage).write_text(
-            json.dumps({"params": p, "wall_clock_s": wall})
+            json.dumps(
+                {"params": p, "wall_clock_s": wall, "schema": df.schema.jsonValue()}
+            )
         )
-        return out
+        return self.read(df.sparkSession, stage)
 
     def match_runs(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(str(self.root / "match_runs"))

@@ -153,6 +153,40 @@ def test_checkpoint_write_runs_no_extra_job(spark, tmp_path):
     assert sum(r["rows_out"] for r in rows) == 300
 
 
+def test_checkpoint_read_runs_no_job(spark, tmp_path):
+    """A checkpoint read takes the schema its write recorded, so it runs
+    no parquet schema-inference job, and run stats over the cluster
+    checkpoint run the jobs they run over a caller's read-back. A marker
+    without a schema counts as no checkpoint."""
+    import json
+
+    from ny_campaign_finance_dedupe_spark import synth
+    from ny_campaign_finance_dedupe_spark.sources.checkpoint import (
+        CheckpointStore,
+    )
+
+    store = CheckpointStore(str(tmp_path), run_id="read")
+    pages, _ = synth.synth_pages(spark, n_pages=200, seed=9)
+    em = pages.selectExpr("url AS record_id", "url AS cluster_id")
+    p = {"v": 1}
+    back = store.write(em, "cluster", params=p)
+    assert _jobs_in_group(
+        spark, "ckpt-read", lambda: store.read(spark, "cluster")
+    ) == 0
+    from_ckpt = _jobs_in_group(
+        spark, "stats-ckpt", lambda: store.write_run_stats(params=p, spark=spark)
+    )
+    given = _jobs_in_group(
+        spark, "stats-given", lambda: store.write_run_stats(back, params=p)
+    )
+    assert from_ckpt == given
+    meta = store._meta_path("cluster")
+    saved = json.loads(meta.read_text())
+    del saved["schema"]
+    meta.write_text(json.dumps(saved))
+    assert not store.has("cluster")
+
+
 def test_checkpoint_read_back_has_no_exchange(spark, tmp_path):
     """A checkpoint read (the write's read-back and a resume read) is a
     bare parquet scan: a small single-file stage is not repartitioned,

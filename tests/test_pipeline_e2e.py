@@ -114,16 +114,6 @@ def test_resume_rejects_changed_params(spark, run):
     assert store.has("extract", PipelineConfig().params())
 
 
-def test_unknown_pair_strategy_raises():
-    """A misspelled pair_strategy must fail at construction, not fall
-    through to the plain self-join."""
-    for bad in ("cogroup", "Salted", "joins"):
-        with pytest.raises(ValueError, match="pair_strategy"):
-            DedupePipeline(PipelineConfig(pair_strategy=bad))
-    for ok in ("join", "salted"):
-        DedupePipeline(PipelineConfig(pair_strategy=ok))
-
-
 def test_synth_emits_both_duplicate_classes(spark):
     """The generator must plant BOTH dup classes: byte-identical copies
     (kind 0 — what exact dedup needs) AND render-noise-only near-dups
@@ -162,44 +152,31 @@ def test_synth_emits_both_duplicate_classes(spark):
 
 
 def test_skewed_corpus_salted_equals_join(spark):
-    """north_rule skew handling, pinned end-to-end (VERDICT r03 #4): on
-    a corpus with planted blocking-key skew (10% of pages are
-    boilerplate template pages in 4 hot families — hot domain + hot
-    minhash bands each), the salted bucket-grid pair strategy must
-    produce the IDENTICAL entity map to the plain self-join: salting is
-    a physical-plan choice, never a semantic one. Config admits the hot
-    blocks (cap above family size) and salts them (threshold below)."""
+    """north_rule skew handling on the pipeline's own blocking map: on a
+    corpus with planted blocking-key skew (10% of pages are boilerplate
+    template pages in 4 hot families — hot domain + hot minhash bands
+    each), the salted bucket-grid operator must emit exactly the pair
+    set of the pipeline's plain self-join, so the entity map cannot
+    differ: salting is a physical-plan choice, never a semantic one. The
+    cap admits the hot blocks (above family size) and the salt threshold
+    sits below them, so the grid path really runs."""
+    from ny_campaign_finance_dedupe_spark.operators import pairs as P
+
+    def pair_set(df):
+        return {(r["src"], r["dst"]) for r in df.collect()}
+
     pages, _ = synth_pages(
         spark, n_pages=2000, seed=11,
         skew_domain_frac=0.10, skew_templates=4,
     )
-    pages = pages.localCheckpoint()
-    maps = {}
-    for strategy in ("join", "salted"):
-        cfg = PipelineConfig(
-            pair_strategy=strategy,
-            max_block_size=500,       # family blocks (~50 pages) survive
-            salt_hot_threshold=20,    # ...and take the salted grid
-            salt=4,
-        )
-        pipe = DedupePipeline(cfg)
-        ext = pipe.extract(pages).localCheckpoint()
-        bm = pipe.block(pipe.signatures(ext)).localCheckpoint()
-        if strategy == "salted":
-            # the stress is real: at least one block is over the salt
-            # threshold, so the grid path actually executes
-            hot = (
-                bm.groupBy("block_key").count()
-                .where(F.col("count") > cfg.salt_hot_threshold).count()
-            )
-            assert hot > 0, "no hot blocks - skew knob failed to plant skew"
-        cand = pipe.gen_pairs(bm)
-        scored = pipe.score(cand, ext)
-        em = pipe.cluster(scored, ext)
-        maps[strategy] = {
-            (r["record_id"], r["cluster_id"]) for r in em.collect()
-        }
-    assert maps["join"] == maps["salted"]
+    pipe = DedupePipeline(PipelineConfig(max_block_size=500))
+    bm = pipe.block(pipe.signatures(pipe.extract(pages))).localCheckpoint()
+    # the stress is real: at least one block is over the salt threshold,
+    # so the grid path actually executes
+    hot = bm.groupBy("block_key").count().where(F.col("count") > 20).count()
+    assert hot > 0, "no hot blocks - skew knob failed to plant skew"
+    plain = pair_set(pipe.gen_pairs(bm))
+    assert pair_set(P.salted_candidate_pairs(bm, 20, 4)) == plain
 
 
 def test_synth_skew_zero_is_byte_identical(spark):

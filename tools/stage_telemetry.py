@@ -16,8 +16,7 @@ Used by tools/scaling_bench.py and perfbench/tracing.py when the
 session enables the UI (spark.ui.enabled=true, port 0). Pipeline stages
 are identified by the job group DedupePipeline.run sets around each
 stage; anything outside a group (synth input materialization,
-run-stats) is ignored. ``shuffle_totals`` is the app-wide shuffle/spill
-snapshot tools/llm_wing_stress.py differences around one operator.
+run-stats) is ignored.
 """
 
 from __future__ import annotations
@@ -38,21 +37,6 @@ def _rest_get(spark, path: str):
     url = f"{base}/api/v1/applications/{app_id}{path}"
     with urllib.request.urlopen(url, timeout=10) as r:
         return json.loads(r.read().decode())
-
-
-def shuffle_totals(spark) -> dict | None:
-    """{shuffle_write_b, shuffle_read_b, spill_b} summed over all
-    completed stages of the application, or None when the UI is
-    disabled or unreachable."""
-    try:
-        stages = _rest_get(spark, "/stages?status=complete")
-    except Exception:
-        return None
-    return {
-        "shuffle_write_b": sum(s.get("shuffleWriteBytes", 0) for s in stages),
-        "shuffle_read_b": sum(s.get("shuffleReadBytes", 0) for s in stages),
-        "spill_b": sum(s.get("diskBytesSpilled", 0) for s in stages),
-    }
 
 
 def stage_exec_metrics(spark) -> dict | None:
