@@ -974,8 +974,7 @@ def q_incremental_match(spark, sf_dir):
     index = incremental.build_index(idx_pages, cfg)
     return (
         incremental.match_batch(
-            DedupePipeline(cfg).extract(batch), index, cfg,
-            n_matches=1, threshold=0.5,
+            DedupePipeline(cfg).extract(batch), index, cfg, n_matches=1
         )
         .select("query_url", "match_url", "rank")
         .orderBy("query_url")
@@ -1012,17 +1011,13 @@ def q_crawl_entity_map(spark, sf_dir):
     # history artifacts are built once and checkpointed (the production
     # epoch shape build_history_index documents) — without the barrier
     # the full history lineage (content-key UDF chain + bloom build +
-    # blocking) re-executes for every consumer; strategy is explicit so
-    # the probe never runs auto's size-agg job at construction time.
+    # blocking) re-executes for every consumer.
     keys, bidx = crawl.build_history_index(history, n_buckets=8)
     keys = keys.localCheckpoint()
     bidx = bidx.localCheckpoint()
     index = incremental.build_index(history, cfg).localCheckpoint()
     return (
-        crawl.match_novel_batch(
-            batch, keys, bidx, index, cfg, threshold=0.5,
-            strategy="broadcast",
-        )
+        crawl.match_novel_batch(batch, keys, bidx, index, cfg)
         .select("record_id", "cluster_id", "matched")
         .orderBy("record_id")
     )

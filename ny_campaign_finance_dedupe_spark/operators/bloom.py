@@ -22,11 +22,12 @@ and mostly novel. The standard engine answer is a *Bloom-filter index*:
 
 2. ``bloom_probe`` — flags each batch row ``bloom_maybe`` by testing the
    k double-hashed bit positions (Kirsch-Mitzenmacher: pos_i = h1 + i*h2
-   mod m) against the broadcast bucket bitmaps. The bucket count and k
-   come from the index itself, so a probe cannot disagree with the
-   build about either. Zero false negatives by construction;
-   false-positive rate ~ (1 - e^(-k/bits_per_key))^k (~4e-4 at the
-   16/8 default).
+   mod m) against its bucket's bitmap, joined on the bucket column
+   (broadcast or shuffled: the engine picks from the index's size). The
+   bucket count and k come from the index itself, so a probe cannot
+   disagree with the build about either. Zero false negatives by
+   construction; false-positive rate ~ (1 - e^(-k/bits_per_key))^k
+   (~4e-4 at the 16/8 default).
 
 3. ``bloom_novelty`` — EXACT novelty set: bloom-negative rows are novel
    with certainty and never touch history again; only the (small)
@@ -57,15 +58,6 @@ from pyspark.sql import Column, DataFrame
 BITS_PER_KEY = 16
 N_HASHES = 8
 MIN_BITS = 1 << 13  # floor so tiny buckets still spread bits (1 KiB)
-
-#: Above this total bitmap size the probe stops broadcasting the index
-#: and shuffle-joins on the bucket column instead. 256 MiB is well under
-#: Spark's practical broadcast ceiling (the driver must hold and ship
-#: every executor a full copy); a 10^11-key history at 16 bits/key is a
-#: ~200 GB index, which no broadcast survives but the bucket join
-#: handles by sending each task 1/n_buckets of the bitmaps.
-BROADCAST_MAX_BYTES = 256 << 20
-
 
 def payload_key(payload: Column) -> Column:
     """sha2 content key with the repo's NULL-marker convention."""
@@ -153,28 +145,10 @@ def _geometry(index: DataFrame) -> tuple[int, int]:
     return int(meta["n_buckets"]), int(meta["n_hashes"])
 
 
-def resolve_strategy(
-    index: DataFrame,
-    strategy: str = "auto",
-    broadcast_max_bytes: int = BROADCAST_MAX_BYTES,
-) -> str:
-    """The probe strategy ``bloom_probe`` will run: an explicit one as
-    given; ``'auto'`` sums the index's bitmap bytes (one small agg job)
-    and picks broadcast up to ``broadcast_max_bytes``, the bucket join
-    above. Callers probing one fixed index many times resolve it once."""
-    if strategy != "auto":
-        return strategy
-    tot_bits = index.agg(F.sum("m")).collect()[0][0] or 0
-    return "broadcast" if tot_bits // 8 <= broadcast_max_bytes else "join"
-
-
 def bloom_probe(
     batch: DataFrame,
     index: DataFrame,
     key: Column | str,
-    *,
-    strategy: str = "auto",
-    broadcast_max_bytes: int = BROADCAST_MAX_BYTES,
 ) -> DataFrame:
     """Batch columns + ``bloom_maybe`` (false => certainly not in history).
 
@@ -183,28 +157,24 @@ def bloom_probe(
     metadata (``ValueError`` when that is missing), so the probe always
     hashes keys into the buckets the build used.
 
-    Join strategy (the 100x-scale knob):
+    The probe is one left equi-join of batch rows to index rows on the
+    bucket column, and its physical join is the engine's choice, made
+    from the index's size statistics (a persisted or parquet index
+    reports its real size; adaptive execution re-plans one whose lineage
+    has none once it is measured): an index under
+    ``spark.sql.autoBroadcastJoinThreshold`` is broadcast to every
+    executor; above it the engine shuffle-joins on the bucket, so each
+    task receives 1/n_buckets of the batch plus ONE bucket's bitmap and
+    a 10^11-key (~200 GB) index never has to exist in one place
+    (parallelism is then capped at ``n_buckets``). The deployment's
+    session setting selects that path.
 
-    - ``'broadcast'`` — ship the whole index to every executor. Right
-      whenever the total bitmap fits comfortably in executor memory.
-    - ``'join'`` — shuffle-join batch rows to index rows on the bucket
-      column. Each task receives 1/n_buckets of the batch plus ONE
-      bucket's bitmap, so a 10^11-key (~200 GB) index never has to
-      exist in one place. Parallelism is capped at ``n_buckets`` —
-      size it accordingly when choosing this path at scale.
-    - ``'auto'`` (default) — one cheap agg over the index's
-      ``n_buckets`` rows sums the bitmap bytes and picks: broadcast
-      below ``broadcast_max_bytes``, bucket join above. The agg is an
-      extra job; pass an explicit strategy (or a persisted prebuilt
-      index, the production shape) to skip it.
-
-    The membership test kernel is identical under both strategies: rows
-    in a batch share few distinct bitmaps, so the Arrow-batched kernel
+    The membership test kernel is the same under either join: rows in a
+    batch share few distinct bitmaps, so the Arrow-batched kernel
     factorizes on the blob and tests each group with vectorized numpy
     bit probes.
     """
     n_buckets, n_hashes = _geometry(index)
-    strategy = resolve_strategy(index, strategy, broadcast_max_bytes)
     key_col = F.col(key) if isinstance(key, str) else key
     h1, h2 = _hash_cols(key_col)
     keyed = batch.withColumns(
@@ -215,17 +185,7 @@ def bloom_probe(
         }
     )
     idx = index.withColumnRenamed("bucket", "_bb")
-    if strategy == "broadcast":
-        probed = keyed.join(F.broadcast(idx), "_bb", "left")
-    elif strategy == "join":
-        # shuffle_hash hint: keeps Catalyst/AQE from auto-broadcasting a
-        # statistically-small-looking index whose rows are huge blobs,
-        # and avoids sorting bitmap rows (merge join would).
-        probed = keyed.join(idx.hint("shuffle_hash"), "_bb", "left")
-    else:
-        raise ValueError(
-            f"bloom_probe strategy must be auto|broadcast|join, got {strategy!r}"
-        )
+    probed = keyed.join(idx, "_bb", "left")
 
     import numpy as np
 
@@ -262,8 +222,6 @@ def novel_rows(
     key_col: str,
     history_keys: DataFrame,
     index: DataFrame,
-    *,
-    strategy: str = "auto",
 ) -> DataFrame:
     """EXACT subset of ``keyed`` whose ``key_col`` value is absent from
     ``history_keys`` (a DataFrame carrying the same-named key column) —
@@ -271,18 +229,17 @@ def novel_rows(
     streaming crawl pipeline: bloom-negative rows short-circuit (no
     false negatives => certainly novel), only the positive remainder
     pays the confirm anti-join, and the history side of that join is
-    its distinct key projection. The probe takes its geometry from
-    ``index``, so the result is exact for any index
-    :func:`build_bloom_index` built. Returns ``keyed``'s rows minus the
-    ``bloom_maybe`` scratch column."""
-    flagged = bloom_probe(keyed, index, F.col(key_col), strategy=strategy)
+    its key projection (duplicate keys there cannot change an anti-join,
+    so no distinct pass). The probe takes its geometry from ``index``,
+    so the result is exact for any index :func:`build_bloom_index`
+    built. Returns ``keyed``'s rows minus the ``bloom_maybe`` scratch
+    column."""
+    flagged = bloom_probe(keyed, index, F.col(key_col))
     certain = flagged.where(~F.col("bloom_maybe")).drop("bloom_maybe")
     confirmed = (
         flagged.where(F.col("bloom_maybe"))
         .drop("bloom_maybe")
-        .join(
-            history_keys.select(key_col).distinct(), key_col, "left_anti"
-        )
+        .join(history_keys.select(key_col), key_col, "left_anti")
     )
     return certain.unionByName(confirmed)
 
@@ -297,14 +254,13 @@ def bloom_novelty(
     bits_per_key: int = BITS_PER_KEY,
     n_hashes: int = N_HASHES,
     index: DataFrame | None = None,
-    strategy: str = "auto",
 ) -> DataFrame:
     """EXACT set of batch rows whose payload does not appear in history.
 
     Bloom-negative rows short-circuit (no false negatives => novel with
     certainty); only bloom-positive rows pay the exact confirm
-    anti-join, and the history side of that join is its (distinct) key
-    projection — never the payload. Pass a prebuilt ``index`` to
+    anti-join, and the history side of that join is its key projection
+    — never the payload. Pass a prebuilt ``index`` to
     amortize the history scan across batches (the production shape:
     build once per ingest epoch, persist as parquet, probe every
     batch). ``n_buckets``/``bits_per_key``/``n_hashes`` shape only the
@@ -321,14 +277,7 @@ def bloom_novelty(
             bits_per_key=bits_per_key,
             n_hashes=n_hashes,
         )
-        if strategy == "auto":
-            # auto's size agg is an ACTION: without a materialization
-            # barrier it would run the whole index build once for the
-            # agg and again for the probe (measured +0.5 s at sf0.1;
-            # at scale, two full history scans). Prebuilt-index callers
-            # (the production shape) manage their own persistence.
-            index = index.localCheckpoint()
     hist_keys = history.select(payload_key(F.col(payload)).alias("_k"))
-    return novel_rows(
-        keyed, "_k", hist_keys, index, strategy=strategy
-    ).select("record_id", F.col("_k").alias("novel_key"))
+    return novel_rows(keyed, "_k", hist_keys, index).select(
+        "record_id", F.col("_k").alias("novel_key")
+    )

@@ -180,8 +180,7 @@ def cluster_edges(scored_pairs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """
     edges = scored_pairs.where(F.col("score") >= threshold)
     comp = connected_components(edges.select("src", "dst"))
-    # CC output: every kept edge is intra-component — skip peer scoping
-    conf = member_confidence(edges, None)
+    conf = member_confidence(edges)
     return comp.join(conf, "record_id", "left").select(
         "record_id",
         "cluster_id",
@@ -189,37 +188,14 @@ def cluster_edges(scored_pairs: DataFrame, threshold: float = 0.5) -> DataFrame:
     )
 
 
-def member_confidence(
-    edges: DataFrame, components: DataFrame | None
-) -> DataFrame:
+def member_confidence(edges: DataFrame) -> DataFrame:
     """C4 (clustering.py:241-262): per record,
-    1 - sqrt(mean over SAME-CLUSTER peer edges of (1-score)^2) — a native
-    agg over the member->edge incidence, no per-cluster Python.
-
-    ``components`` scopes the peers: when a refinement pass (HAC / C2
-    re-threshold) splits a component, edges crossing the split no longer
-    count toward either endpoint's confidence. Pass ``None`` when the
-    edge set is already component-consistent (straight CC output, where
-    every >= threshold edge is intra-cluster by construction) to skip
-    the two scoping joins."""
-    intra = edges
-    if components is not None:
-        intra = (
-            edges.join(
-                components.select(
-                    F.col("record_id").alias("src"), F.col("cluster_id").alias("_cs")
-                ),
-                "src",
-            )
-            .join(
-                components.select(
-                    F.col("record_id").alias("dst"), F.col("cluster_id").alias("_cd")
-                ),
-                "dst",
-            )
-            .where(F.col("_cs") == F.col("_cd"))
-        )
-    intra = intra.select("src", "dst", "score")
+    1 - sqrt(mean over peer edges of (1-score)^2) — a native agg over
+    the member->edge incidence, no per-cluster Python. ``edges`` must be
+    component-consistent: every edge given is intra-cluster, as the
+    >= threshold edges of a connected-components run are by
+    construction."""
+    intra = edges.select("src", "dst", "score")
     inc = intra.select(
         F.col("src").alias("record_id"), (1.0 - F.col("score")).alias("d")
     ).union(intra.select(F.col("dst"), 1.0 - F.col("score")))

@@ -18,10 +18,6 @@ no Python in the hot path):
   f_len      length ratio
   f_missing  1 - both-present indicator  (datamodel.py:107-113)
 
-``jaro_winkler_udf`` is the Custom-comparator extension point
-(variables/base.py:75-91): an Arrow-batched pandas UDF, off the default
-path because f_lev already covers edit similarity JVM-side.
-
 The classifier is a broadcast-weight sigmoid column expression — a dot
 product folded into whole-stage codegen; training happens once,
 driver-side, on the (small, by construction) labeled-pairs set exactly
@@ -46,11 +42,11 @@ FEATURES = ["f_cosine", "f_jaccard", "f_lev", "f_len", "f_missing"]
 # normalized text is the "name line" of a page.
 LEV_PREFIX = 120
 
-# Pairwise DP comparators (affine gap, jaro-winkler) allocate per-batch
-# state sized by the LONGEST string in the Arrow batch and loop O(L1*L2)
-# (resp. O(Lmax^2)) whole-batch steps: one dirty 50k-char value would
-# scale a 10k-row batch to ~40 GB of DP state. Same reasoning as
-# LEV_PREFIX; these are short-field (name/address-line) comparators.
+# The pairwise affine-gap DP allocates per-batch state sized by the
+# LONGEST string in the Arrow batch and loops O(L1*L2) whole-batch
+# steps: one dirty 50k-char value would scale a 10k-row batch to ~40 GB
+# of DP state. Same reasoning as LEV_PREFIX; it is a short-field
+# (name/address-line) comparator.
 PAIRWISE_PREFIX = 256
 
 
@@ -566,136 +562,11 @@ def tfidf_cosine_udf(idf: dict[str, float], default_idf: float):
     return F.pandas_udf(batch, T.DoubleType())
 
 
-def jaro_winkler_one(s1: str, s2: str) -> float:
-    """Scalar Jaro-Winkler — the specification the vectorized kernel is
-    pinned against (test_jaro_winkler_vectorized_matches_scalar); not
-    used on any Spark path."""
-    if not s1 or not s2:
-        return 0.0
-    if s1 == s2:
-        return 1.0
-    l1, l2 = len(s1), len(s2)
-    window = max(l1, l2) // 2 - 1
-    f1 = [False] * l1
-    f2 = [False] * l2
-    m = 0
-    for i in range(l1):
-        lo, hi = max(0, i - window), min(l2, i + window + 1)
-        for j in range(lo, hi):
-            if not f2[j] and s1[i] == s2[j]:
-                f1[i] = f2[j] = True
-                m += 1
-                break
-    if m == 0:
-        return 0.0
-    t = 0
-    k = 0
-    for i in range(l1):
-        if f1[i]:
-            while not f2[k]:
-                k += 1
-            if s1[i] != s2[k]:
-                t += 1
-            k += 1
-    jaro = (m / l1 + m / l2 + (m - t / 2) / m) / 3
-    p = 0
-    for a, c in zip(s1[:4], s2[:4]):
-        if a == c:
-            p += 1
-        else:
-            break
-    return jaro + 0.1 * p * (1 - jaro)
-
-
 def _bounded(col: pd.Series, prefix: int | None) -> np.ndarray:
     s = col.fillna("")
     if prefix is not None:
         s = s.str.slice(0, prefix)
     return s.to_numpy(dtype=object)
-
-
-def jaro_winkler_batch(
-    a: pd.Series, b: pd.Series, prefix: int | None = PAIRWISE_PREFIX
-) -> np.ndarray:
-    """Row-vectorized Jaro-Winkler over a batch of string pairs.
-
-    Strings become codepoint matrices (utf-32 view, zero-padded); the
-    matching pass loops over character POSITIONS of the left string
-    (bounded by the longest key, not the batch), and every step inside
-    it is a whole-batch numpy operation — candidate window mask, first
-    unflagged equal char via argmax, flag updates. Transpositions and
-    the common-prefix boost are batch bincount/cumprod reductions.
-    O(Lmax * n * Lmax) vectorized work vs the per-row Python loops the
-    scalar form spends per pair (VERDICT r02 #9)."""
-    s1, s2 = _bounded(a, prefix), _bounded(b, prefix)
-    n = len(s1)
-    if n == 0:
-        return np.zeros(0)
-    l1 = np.fromiter((len(x) for x in s1), dtype=np.int64, count=n)
-    l2 = np.fromiter((len(x) for x in s2), dtype=np.int64, count=n)
-    L1 = int(l1.max(initial=0))
-    L2 = int(l2.max(initial=0))
-    if L1 == 0 or L2 == 0:
-        return np.zeros(n)
-    c1 = np.zeros((n, L1), dtype=np.int64)
-    c2 = np.zeros((n, L2), dtype=np.int64)
-    for i, s in enumerate(s1):
-        if s:
-            c1[i, : len(s)] = np.frombuffer(
-                s.encode("utf-32-le"), dtype=np.uint32
-            )
-    for i, s in enumerate(s2):
-        if s:
-            c2[i, : len(s)] = np.frombuffer(
-                s.encode("utf-32-le"), dtype=np.uint32
-            )
-    window = np.maximum(l1, l2) // 2 - 1  # may be -1: empty window
-    f1 = np.zeros((n, L1), dtype=bool)
-    f2 = np.zeros((n, L2), dtype=bool)
-    J = np.arange(L2)[None, :]
-    for i in range(L1):
-        active = i < l1
-        if not active.any():
-            break
-        valid = (
-            (J >= (i - window)[:, None])
-            & (J <= (i + window)[:, None])
-            & (J < l2[:, None])
-        )
-        cand = valid & ~f2 & (c2 == c1[:, i][:, None]) & active[:, None]
-        hit = cand.any(axis=1)
-        j = cand.argmax(axis=1)
-        f1[hit, i] = True
-        f2[hit, j[hit]] = True
-    m = f1.sum(axis=1)
-    r1, p1 = np.nonzero(f1)
-    r2, p2 = np.nonzero(f2)
-    # nonzero is row-major, so matched chars align in order per row
-    half_t = np.bincount(
-        r1, weights=(c1[r1, p1] != c2[r2, p2]).astype(np.float64), minlength=n
-    )
-    safe_m = np.maximum(m, 1).astype(np.float64)
-    jaro = np.where(
-        m > 0,
-        (m / np.maximum(l1, 1) + m / np.maximum(l2, 1)
-         + (m - half_t / 2) / safe_m) / 3.0,
-        0.0,
-    )
-    k = min(4, L1, L2)
-    if k > 0:
-        eq = (c1[:, :k] == c2[:, :k]) & (
-            np.arange(k)[None, :] < np.minimum(l1, l2)[:, None]
-        )
-        p = np.cumprod(eq, axis=1).sum(axis=1)
-    else:
-        p = np.zeros(n)
-    out = jaro + 0.1 * p * (1.0 - jaro)
-    # exact-equality short-circuit of the scalar spec (e.g. two equal
-    # 1-char strings have an EMPTY match window, so the main pass alone
-    # would score them 0.1 via the prefix boost instead of 1.0)
-    out[(a.fillna("") == b.fillna("")).to_numpy()] = 1.0
-    out[(l1 == 0) | (l2 == 0)] = 0.0
-    return out
 
 
 def affine_gap_batch(
@@ -828,17 +699,5 @@ def affine_gap_udf(**weights):
     def batch(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
         for a, b in it:
             yield pd.Series(affine_gap_batch(a, b, **weights), dtype="float64")
-
-    return F.pandas_udf(batch, T.DoubleType())
-
-
-def jaro_winkler_udf():
-    """Custom-comparator extension point (variables/base.py:75-91):
-    Arrow-batched pandas UDF over the vectorized ``jaro_winkler_batch``
-    kernel."""
-
-    def batch(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        for a, b in it:
-            yield pd.Series(jaro_winkler_batch(a, b), dtype="float64")
 
     return F.pandas_udf(batch, T.DoubleType())

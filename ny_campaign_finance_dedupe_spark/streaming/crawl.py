@@ -20,13 +20,15 @@ tested) separately into ONE foreachBatch streaming query:
        clears the threshold. Non-novel pages are suppressed before
        matching — that is the point of the Bloom stage at 100 TB/day.
 
-Scale shape per micro-batch: one Arrow extract pass, one Arrow bloom
-probe (broadcast or bucket-join, size-gated — bloom.resolve_strategy),
-one anti-join whose history side is the distinct key column, one
-stream-static equi-join on block_key for the (novel-only) batch, one
-window rank. History artifacts (bloom index + key projection + blocking
-index) are built once per ingest epoch and persisted; between epochs
-they are plain parquet appends. The Bloom index carries its own
+Scale shape per micro-batch: one Arrow extract pass (localCheckpointed),
+one Arrow bloom probe (a bucket equi-join the engine broadcasts or
+shuffles by the index's size — bloom.bloom_probe) and one anti-join
+whose history side is the key column (their novel rows
+localCheckpointed), then one stream-static equi-join on block_key for
+the (novel-only) batch and one window rank.
+History artifacts (bloom index + key projection + blocking index) are
+built once per ingest epoch and persisted; between epochs they are
+plain parquet appends. The Bloom index carries its own
 geometry (bloom.build_bloom_index): build_history_index sets the bucket
 count once and every probe reads it back from the index.
 
@@ -79,21 +81,20 @@ def match_novel_batch(
     bloom_index: DataFrame,
     index: DataFrame,
     cfg,
-    *,
-    threshold: float | None = None,
-    strategy: str = "auto",
 ) -> DataFrame:
     """One micro-batch -> entity-map rows for its NOVEL pages.
 
     Returns (record_id, cluster_id, cluster_score, exact_key, matched):
-    cluster_id is the best gazetteer match's url when one clears the
-    threshold, else the page's own url (new singleton entity). Pages
-    whose content key is already in history yield no row (suppressed),
-    and so do pages ``cfg.lang_filter`` drops, as in batch extract.
-    Both Bloom branches, both of match_batch's reads and the
-    adopt-or-found join read one extracted, keyed, localCheckpointed
-    frame. Runs identically under foreachBatch or as a plain batch call
-    (how the tests drive it deterministically).
+    cluster_id is the best gazetteer match's url when one clears
+    ``cfg.score_threshold``, else the page's own url (new singleton
+    entity). Pages whose content key is already in history yield no row
+    (suppressed), and so do pages ``cfg.lang_filter`` drops, as in batch
+    extract. Two localCheckpointed frames keep every step single-pass:
+    the extracted, keyed batch (read by both Bloom branches) and its
+    novel rows (read by both of match_batch's reads and the
+    adopt-or-found join), so no consumer re-runs the extract, the Bloom
+    kernel or the confirm anti-join. Runs identically under foreachBatch
+    or as a plain batch call (how the tests drive it deterministically).
     """
     keyed = (
         DedupePipeline(cfg)
@@ -102,11 +103,9 @@ def match_novel_batch(
         .localCheckpoint()
     )
     novel = bloom.novel_rows(
-        keyed, "exact_key", history_keys, bloom_index, strategy=strategy
-    )
-    matches = incremental.match_batch(
-        novel, index, cfg, n_matches=1, threshold=threshold
-    )
+        keyed, "exact_key", history_keys, bloom_index
+    ).localCheckpoint()
+    matches = incremental.match_batch(novel, index, cfg, n_matches=1)
     best = matches.where(F.col("rank") == 1).select(
         F.col("query_url").alias("record_id"),
         F.col("match_url"),
@@ -137,10 +136,6 @@ def start_crawl_pipeline(
     out_dir: str,
     checkpoint_dir: str,
     pages_schema,
-    *,
-    threshold: float | None = None,
-    strategy: str = "auto",
-    watermark: str = "1 hour",
 ):
     """Wire the composed query: file-source pages stream ->
     foreachBatch(match_novel_batch) -> entity-map parquet, one
@@ -152,25 +147,12 @@ def start_crawl_pipeline(
     whose commit never landed re-runs under the same batch_id after a
     restart. The sink therefore overwrites its own ``batch_id``
     partition (dynamic partition overwrite) rather than appending, so a
-    replay leaves each record once. The watermark drops no late rows:
-    with foreachBatch and no stateful stage downstream every file-source
-    row reaches the batch. It exists so that a stateful stage added
-    downstream inherits sane late-data bounds.
+    replay leaves each record once. The stream has no watermark: no
+    stage of it holds state, so every file-source row reaches the batch.
     """
-    # the index is fixed for the query's lifetime: resolve the probe
-    # strategy once here, not as an auto agg job inside every batch
-    strategy = bloom.resolve_strategy(bloom_index, strategy)
 
     def sink(batch_df: DataFrame, batch_id: int):
-        out = match_novel_batch(
-            batch_df,
-            history_keys,
-            bloom_index,
-            index,
-            cfg,
-            threshold=threshold,
-            strategy=strategy,
-        )
+        out = match_novel_batch(batch_df, history_keys, bloom_index, index, cfg)
         (
             out.withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
@@ -180,6 +162,6 @@ def start_crawl_pipeline(
         )
 
     return ingest.start_page_stream(
-        spark, stream_source_dir, pages_schema, watermark, checkpoint_dir,
+        spark, stream_source_dir, pages_schema, checkpoint_dir,
         lambda stream: stream.writeStream.foreachBatch(sink),
     )

@@ -49,7 +49,6 @@ def match_batch(
     index: DataFrame,
     cfg,
     n_matches: int = 1,
-    threshold: float | None = None,
 ) -> DataFrame:
     """One micro-batch of extract-stage rows (url, warc_ts, lang, ntext —
     ``DedupePipeline(cfg).extract`` output; extra columns are ignored)
@@ -59,11 +58,9 @@ def match_batch(
     url like the oracles (a saturated sigmoid ties distinct logits). Pure
     DataFrame ops, so it runs identically under foreachBatch or as a
     plain batch call (which is how the tests drive it deterministically).
-    ``threshold=None`` takes ``cfg.score_threshold`` — stream and batch
-    accept at the SAME configured score unless explicitly overridden.
+    A match is kept at ``cfg.score_threshold``, so stream and batch
+    accept at the SAME configured score.
     """
-    if threshold is None:
-        threshold = getattr(cfg, "score_threshold", 0.5)
     pipe = DedupePipeline(cfg)
     bm = pipe.block(pipe.signatures(batch))
     qk = bm.join(
@@ -86,7 +83,7 @@ def match_batch(
     )
     w = Window.partitionBy("query_url").orderBy(F.desc("_z"), F.asc("url"))
     return (
-        scored.where(F.col("score") >= threshold)
+        scored.where(F.col("score") >= cfg.score_threshold)
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= n_matches)
         .select(

@@ -56,22 +56,17 @@ def start_page_stream(
     spark,
     stream_source_dir: str,
     pages_schema,
-    watermark: str,
     checkpoint_dir: str,
     to_writer: Callable[[DataFrame], DataStreamWriter],
 ) -> StreamingQuery:
     """The one file-source query shape every ``start_*`` entry point
-    runs: parquet pages stream watermarked on ``warc_ts`` ->
-    ``to_writer(stream)`` (the query's transform + sink) ->
+    runs: parquet pages stream -> ``to_writer(stream)`` (the query's
+    transform + sink; a stateful transform sets its own watermark) ->
     ``checkpointLocation`` -> ``trigger(availableNow)`` -> start.
     availableNow drains what exists and stops, so repeated calls against
     a growing source directory are the crawl's ingestion ticks; each
     restart resumes from ``checkpoint_dir``."""
-    stream = (
-        spark.readStream.schema(pages_schema)
-        .parquet(stream_source_dir)
-        .withWatermark("warc_ts", watermark)
-    )
+    stream = spark.readStream.schema(pages_schema).parquet(stream_source_dir)
     return (
         to_writer(stream)
         .option("checkpointLocation", checkpoint_dir)
@@ -92,8 +87,10 @@ def start_ingest_dedup(
     append parquet sink (``start_page_stream``); each restart reloads
     dedup state from ``checkpoint_dir``."""
     return start_page_stream(
-        spark, stream_source_dir, pages_schema, watermark, checkpoint_dir,
-        lambda stream: with_content_key(stream)
+        spark, stream_source_dir, pages_schema, checkpoint_dir,
+        lambda stream: with_content_key(
+            stream.withWatermark("warc_ts", watermark)
+        )
         .dropDuplicatesWithinWatermark(["exact_key"])
         .writeStream.format("parquet")
         .option("path", out_dir),
@@ -182,7 +179,7 @@ def start_ingest_dedup_with_counts(
 
     def audited(stream: DataFrame) -> DataStreamWriter:
         return (
-            with_content_key(stream)
+            with_content_key(stream.withWatermark("warc_ts", watermark))
             .select("exact_key", "url", "warc_ts")
             .groupBy("exact_key")
             .applyInPandasWithState(
@@ -197,6 +194,5 @@ def start_ingest_dedup_with_counts(
         )
 
     return start_page_stream(
-        spark, stream_source_dir, pages_schema, watermark, checkpoint_dir,
-        audited,
+        spark, stream_source_dir, pages_schema, checkpoint_dir, audited
     )

@@ -118,61 +118,81 @@ def test_prebuilt_index_reuse(spark, corpus):
     assert out1.count() == 0  # b1 fully inside history
     assert out2.count() == 50  # b2 fully novel
 
+#: The session's size gate for broadcast joins: the probe's join is
+#: the engine's choice, so these tests steer it through this setting.
+BROADCAST_THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
+def _run(df):
+    """Collect ``df`` -> (rows, its executed plan). The plan is read
+    after the action, so it shows the join adaptive execution settled
+    on from the index's measured size (an index whose lineage carries
+    no size statistics, like this module's python-list corpus, is
+    planned as a shuffle join and re-planned at run time)."""
+    rows = df.collect()
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    return rows, plan
+
+
 def test_join_strategy_matches_broadcast(spark, corpus):
-    """Forced multi-bucket bucket-join probe must flag exactly the same
-    rows as the broadcast probe — the kernel is shared, only the join
-    topology differs."""
+    """With broadcasting switched off (session threshold -1) the engine
+    shuffle-joins the probe on the bucket column, and it must flag
+    exactly the same rows as the default broadcast probe — the kernel
+    is shared, only the join topology differs."""
     history = corpus.filter(F.col("doc_id") % 3 != 0)
     key = bloom.payload_key(F.col("text"))
     index = bloom.build_bloom_index(history, key, n_buckets=16).localCheckpoint()
     keyed = corpus.select(F.col("doc_id").alias("record_id"), key.alias("_k"))
-    bc = bloom.bloom_probe(keyed, index, F.col("_k"), strategy="broadcast")
-    jn = bloom.bloom_probe(keyed, index, F.col("_k"), strategy="join")
-    rows_bc = sorted((r["record_id"], r["bloom_maybe"]) for r in bc.collect())
-    rows_jn = sorted((r["record_id"], r["bloom_maybe"]) for r in jn.collect())
+
+    def probe():
+        rows, plan = _run(bloom.bloom_probe(keyed, index, F.col("_k")))
+        return plan, sorted((r["record_id"], r["bloom_maybe"]) for r in rows)
+
+    plan_bc, rows_bc = probe()
+    old = spark.conf.get(BROADCAST_THRESHOLD)
+    spark.conf.set(BROADCAST_THRESHOLD, "-1")
+    try:
+        plan_jn, rows_jn = probe()
+    finally:
+        spark.conf.set(BROADCAST_THRESHOLD, old)
+    assert "BroadcastHashJoin" in plan_bc, plan_bc
+    assert "BroadcastHashJoin" not in plan_jn, plan_jn
     assert rows_bc == rows_jn
     # spot-check multiple buckets actually exist in the index
     assert index.select("bucket").distinct().count() > 1
 
 
 def test_auto_strategy_debroadcasts_over_threshold(spark, corpus):
-    """Planted 10x-over-threshold index: auto must pick the bucket join
-    (no BroadcastHashJoin in the plan), and the novelty answer must stay
-    exact. Threshold is shrunk instead of building a multi-GB index."""
+    """Planted 10x-over-threshold index: the engine must pick a shuffle
+    join on the bucket (no BroadcastHashJoin in the plan), and the
+    novelty answer must stay exact. The session threshold is shrunk
+    instead of building a multi-GB index."""
     history = corpus.filter(F.col("doc_id") % 4 != 0)
     key = bloom.payload_key(F.col("text"))
     index = bloom.build_bloom_index(history, key, n_buckets=8).localCheckpoint()
     tot_bytes = index.agg(F.sum("m")).collect()[0][0] // 8
     keyed = corpus.select(F.col("doc_id").alias("record_id"), key.alias("_k"))
-    flagged = bloom.bloom_probe(
-        keyed, index, F.col("_k"),
-        strategy="auto", broadcast_max_bytes=tot_bytes // 10,
-    )
-    plan = flagged._sc._jvm.PythonSQLUtils.explainString(
-        flagged._jdf.queryExecution(), "formatted"
-    )
+    old = spark.conf.get(BROADCAST_THRESHOLD)
+    spark.conf.set(BROADCAST_THRESHOLD, str(tot_bytes // 10))
+    try:
+        rows, plan = _run(bloom.bloom_probe(keyed, index, F.col("_k")))
+    finally:
+        spark.conf.set(BROADCAST_THRESHOLD, old)
     assert "BroadcastHashJoin" not in plan, plan
     assert "ShuffledHashJoin" in plan or "SortMergeJoin" in plan, plan
     # and the guarantee still holds end to end on the join path
-    assert flagged.filter(~F.col("bloom_maybe")).count() == corpus.count() - history.count()
+    n_negative = sum(not r["bloom_maybe"] for r in rows)
+    assert n_negative == corpus.count() - history.count()
 
 
 def test_auto_strategy_broadcasts_under_threshold(spark, corpus):
     key = bloom.payload_key(F.col("text"))
     index = bloom.build_bloom_index(corpus, key, n_buckets=8).localCheckpoint()
     keyed = corpus.select(F.col("doc_id").alias("record_id"), key.alias("_k"))
-    flagged = bloom.bloom_probe(keyed, index, F.col("_k"))
-    plan = flagged._sc._jvm.PythonSQLUtils.explainString(
-        flagged._jdf.queryExecution(), "formatted"
-    )
+    _, plan = _run(bloom.bloom_probe(keyed, index, F.col("_k")))
     assert "BroadcastHashJoin" in plan, plan
-
-
-def test_bad_strategy_raises(spark, corpus):
-    key = bloom.payload_key(F.col("text"))
-    index = bloom.build_bloom_index(corpus, key, n_buckets=4)
-    with pytest.raises(ValueError, match="strategy"):
-        bloom.bloom_probe(corpus, index, key, strategy="nope")
 
 
 def _novel_ids(index, corpus, history):

@@ -340,9 +340,10 @@ def test_scaling_worker_stage_telemetry():
 
 
 def test_match_novel_batch_job_count(spark):
-    """One crawl micro-batch (``match_novel_batch`` to a noop sink, the
-    broadcast probe) runs a pinned number of Spark jobs, and reading
-    the Bloom geometry off the index runs none."""
+    """One crawl micro-batch (``match_novel_batch`` to a noop sink) runs
+    a pinned number of Spark jobs, for a 3-page tick and for 200 fresh
+    pages against the same history, and reading the Bloom geometry off
+    the index runs none."""
     from ny_campaign_finance_dedupe_spark import synth
     from ny_campaign_finance_dedupe_spark.operators import bloom
     from ny_campaign_finance_dedupe_spark.plans.pipeline import PipelineConfig
@@ -363,12 +364,18 @@ def test_match_novel_batch_job_count(spark):
           "entirely new vocabulary qqq", "en")],
         synth.PAGES_SCHEMA,
     )
+    fresh, _ = synth.synth_pages(spark, n_pages=200, seed=77, dup_rate=0.0)
+    fresh = fresh.localCheckpoint()
     assert _jobs_in_group(spark, "bloom-geometry", lambda: bloom._geometry(bidx)) == 0
-    n = _jobs_in_group(
-        spark,
-        "crawl-batch",
-        lambda: crawl.match_novel_batch(
-            batch, keys, bidx, index, PipelineConfig(), strategy="broadcast"
-        ).write.format("noop").mode("overwrite").save(),
-    )
-    assert n == 12
+
+    def tick_jobs(group, pages):
+        return _jobs_in_group(
+            spark,
+            group,
+            lambda: crawl.match_novel_batch(
+                pages, keys, bidx, index, PipelineConfig()
+            ).write.format("noop").mode("overwrite").save(),
+        )
+
+    assert tick_jobs("crawl-batch", batch) == 12
+    assert tick_jobs("crawl-batch-200", fresh) == 13

@@ -1,6 +1,6 @@
 """Round-2 operators: ported reference clustering fixtures
-(dedupe/tests/test_dedupe.py:100-231), C4 peer scoping, carry-forward,
-set-element predicates, edit-distance blocking, TF-IDF text comparator.
+(dedupe/tests/test_dedupe.py:100-231), carry-forward, set-element
+predicates, edit-distance blocking, TF-IDF text comparator.
 """
 
 from __future__ import annotations
@@ -96,29 +96,6 @@ def test_gazetteer_reference_fixture(spark):
         (1, 6, 1), (1, 8, 2), (2, 7, 1), (2, 8, 2), (3, 6, 1), (3, 8, 2),
         (4, 6, 1), (4, 5, 2), (5, 8, 1),
     }
-
-
-# --- C4 peer scoping --------------------------------------------------------
-
-def test_member_confidence_respects_components(spark):
-    """When a refinement splits a component, cross-split edges stop
-    counting toward confidence (VERDICT r01 C4)."""
-    edges = _edges(spark, [(1, 2, 0.9), (2, 3, 0.6), (3, 4, 0.9)])
-    split = spark.createDataFrame(
-        [(1, 1), (2, 1), (3, 3), (4, 3)], "record_id long, cluster_id long"
-    )
-    scoped = {
-        r["record_id"]: r["cluster_score"]
-        for r in clustering.member_confidence(edges, split).collect()
-    }
-    # node 2's only same-cluster peer edge is (1,2,0.9): 1-sqrt(0.01)=0.9
-    assert scoped[2] == pytest.approx(0.9)
-    unscoped = {
-        r["record_id"]: r["cluster_score"]
-        for r in clustering.member_confidence(edges, None).collect()
-    }
-    # unscoped, node 2 also averages the 0.6 cross edge -> lower
-    assert unscoped[2] < scoped[2]
 
 
 # --- carry-forward ----------------------------------------------------------

@@ -394,9 +394,10 @@ def test_crawl_sink_replay_is_idempotent(spark, tmp_path, crawl_history):
 
 
 def test_match_novel_batch_forwards_bloom_strategy(spark):
-    """strategy='join' must reach the Bloom probe (bucket shuffle-join,
-    no broadcast of the index) and still produce the same entity map as
-    the broadcast path."""
+    """The Bloom probe's join is the engine's choice: with broadcasting
+    switched off (session threshold -1) the tick shuffle-joins the
+    index on the bucket and must produce the same entity map as the
+    default broadcast path."""
     from ny_campaign_finance_dedupe_spark.streaming import crawl
 
     pages, _ = synth_pages(spark, n_pages=120, seed=17, dup_rate=0.0)
@@ -416,17 +417,25 @@ def test_match_novel_batch_forwards_bloom_strategy(spark):
         ],
         PAGES_SCHEMA,
     )
-    rows = {}
-    for strat in ("broadcast", "join"):
-        out = crawl.match_novel_batch(
-            batch, keys, bidx, index, cfg, strategy=strat
-        )
-        rows[strat] = sorted(
+
+    def entity_map():
+        return sorted(
             (r["record_id"], r["cluster_id"], r["matched"])
-            for r in out.collect()
+            for r in crawl.match_novel_batch(
+                batch, keys, bidx, index, cfg
+            ).collect()
         )
-    assert rows["broadcast"] == rows["join"]
-    assert [r[0] for r in rows["join"]] == ["https://fresh.example.com/y"]
+
+    broadcast = entity_map()
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        shuffled = entity_map()
+    finally:
+        spark.conf.set(conf, old)
+    assert broadcast == shuffled
+    assert [r[0] for r in shuffled] == ["https://fresh.example.com/y"]
 
 
 @pytest.fixture(scope="module")

@@ -292,31 +292,6 @@ def test_tfidf_vectorized_matches_reference_formula(spark):
         assert abs(r["c"] - want) < 1e-12, (a, b, r["c"], want)
 
 
-def test_jaro_winkler_vectorized_matches_scalar(spark):
-    import random
-
-    import pandas as pd
-
-    from ny_campaign_finance_dedupe_spark.operators.scoring import (
-        jaro_winkler_batch,
-        jaro_winkler_one,
-    )
-
-    rng = random.Random(99)
-    cases = [("", ""), ("a", "a"), ("a", "b"), ("martha", "marhta"),
-             ("dixon", "dicksonx"), ("ab", "ba")]
-    for _ in range(500):
-        cases.append(
-            ("".join(rng.choice("abcd ") for _ in range(rng.randint(0, 10))),
-             "".join(rng.choice("abcd ") for _ in range(rng.randint(0, 10))))
-        )
-    a = pd.Series([c[0] for c in cases])
-    b = pd.Series([c[1] for c in cases])
-    got = jaro_winkler_batch(a, b)
-    for i, (s1, s2) in enumerate(cases):
-        assert abs(got[i] - jaro_winkler_one(s1, s2)) < 1e-12, (s1, s2)
-
-
 def _affine_gap_scalar(
     s1, s2, match=1.0, mismatch=11.0, go=10.0, ge=7.0, ab=0.125
 ):
@@ -441,11 +416,9 @@ def test_pairwise_comparators_bounded_by_prefix():
     b = pd.Series([long_s[:30000], "acme corporation"])
     t0 = time.perf_counter()
     got = scoring.affine_gap_batch(a, b)
-    jw = scoring.jaro_winkler_batch(a, b)
     assert time.perf_counter() - t0 < 30.0
     pfx = scoring.PAIRWISE_PREFIX
     exp = scoring.affine_gap_batch(
         pd.Series([long_s[:pfx]]), pd.Series([long_s[:30000][:pfx]])
     )
     assert got[0] == exp[0]
-    assert 0.0 <= jw[0] <= 1.0
