@@ -5,7 +5,8 @@ Two physical strategies behind one contract:
   matrix, stream the corpus through a mapInPandas GEMM (one
   numpy matmul per Arrow batch), keep batch-local top-k, global window
   top-k. The corpus never shuffles; per-batch pruning keeps the exchange
-  at O(n_queries x k x n_batches) rows.
+  at O(n_queries x k x n_batches) rows. A query side over
+  MAX_COLLECT_ROWS takes a distributed cross join instead.
 - ``lsh_topk``: scale path — random-hyperplane LSH buckets
   (sign-pattern key per band) so the join is an equi-join on bucket id;
   exact cosine re-rank (Arrow-batched einsum) within the union of
@@ -113,13 +114,14 @@ def _tile_cols(n_rows: int, elems: int) -> int:
     return max(64, elems // max(1, n_rows))
 
 
-def _matrix(df: DataFrame, id_col: str, vec_col: str, max_rows: int = MAX_COLLECT_ROWS):
+def _matrix(df: DataFrame, id_col: str, vec_col: str):
     """Driver-side (ids, row-normalized float64 matrix) for the SMALL
     side of a similarity plan. The collected side must fit the driver —
     same contract as any broadcast join build side, ENFORCED: refuses to
-    collect more than ``max_rows`` (fail fast beats a driver OOM).
+    collect more than MAX_COLLECT_ROWS (fail fast beats a driver OOM).
     Single evaluation of the input lineage: the bound is enforced by the
     ``limit(max+1)`` collect itself, not a separate count job."""
+    max_rows = MAX_COLLECT_ROWS
     pdf = df.select(id_col, vec_col).limit(max_rows + 1).toPandas()
     if len(pdf) > max_rows:
         raise ValueError(
@@ -164,21 +166,22 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    broadcast_queries: bool = True,
     round_decimals: int | None = None,
 ) -> DataFrame:
     """Exact top-k by cosine: (query_id, neighbor_id, rank, cosine).
 
     Self-search convention: a vector is never its own neighbor.
-    Physical plan (broadcast_queries=True): the (small) normalized query
-    matrix is a broadcast variable; each corpus Arrow batch does ONE GEMM
-    against it and emits only its batch-local top-k rows per query; a
-    global window rank finishes. The corpus never shuffles; the exchange
-    carries O(n_queries x k x n_batches) rows, not n_q x n_c.
-
-    broadcast_queries=False: fully-distributed exact plan — query x corpus
-    join + Arrow-batched cosine + window top-k. No driver collect at all;
-    use when the query side exceeds the broadcast contract.
+    The physical plan follows the query side's size, read off one
+    ``limit(MAX_COLLECT_ROWS + 1)`` collect:
+    - it fits (the common case): the collected, normalized query matrix
+      is a broadcast variable; each corpus Arrow batch does ONE GEMM
+      against it and emits only its batch-local top-k rows per query; a
+      global window rank finishes. The corpus never shuffles; the
+      exchange carries O(n_queries x k x n_batches) rows, not n_q x n_c.
+    - it does not: fully-distributed exact plan — query x corpus join +
+      Arrow-batched cosine + window top-k, with no further driver
+      collect.
+    Both return the same rows (pinned by test at 9 decimals).
 
     ``round_decimals`` quantizes the cosine BEFORE ranking, so rank
     boundaries depend on the id tie-break rather than the engine's float
@@ -186,7 +189,8 @@ def brute_force_topk(
     cross-engine (numpy GEMM vs SQL dot/norm) reproducibility knob the
     oracle-checked gate queries use (9 decimals).
     """
-    if not broadcast_queries:
+    pdf = queries.select(id_col, vec_col).limit(MAX_COLLECT_ROWS + 1).toPandas()
+    if len(pdf) > MAX_COLLECT_ROWS:
         q = queries.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
         )
@@ -205,17 +209,31 @@ def brute_force_topk(
                 ).alias("cosine"),
             )
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cosine"), F.asc("neighbor_id")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "cosine")
-        )
+    else:
+        scored = _gemm_topk_rows(pdf, corpus, id_col, vec_col, k, round_decimals)
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cosine")
+    )
 
+
+def _gemm_topk_rows(
+    pdf: pd.DataFrame,
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    round_decimals: int | None,
+) -> DataFrame:
+    """brute_force_topk's broadcast path: (query_id, neighbor_id, cosine)
+    batch-local top-k rows of the collected query side ``pdf`` against
+    every corpus Arrow batch."""
     spark = corpus.sparkSession
-    q_ids, q_mat = _matrix(queries, id_col, vec_col)
+    q_ids, q_mat = _pdf_to_matrix(pdf, id_col, vec_col)
     id_type = corpus.schema[id_col].dataType
 
     out_schema = T.StructType(
@@ -272,15 +290,7 @@ def brute_force_topk(
             out = pd.concat(frames, ignore_index=True)
             yield out[out["query_id"] != out["neighbor_id"]]
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(gemm, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return corpus.select(id_col, vec_col).mapInPandas(gemm, schema=out_schema)
 
 
 def _hyperplanes(dim: int, bands: int, bits: int, seed: int) -> list[list[list[float]]]:
@@ -729,8 +739,6 @@ def cosine_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
-    max_broadcast_rows: int = NEARDUP_BROADCAST_MAX_ROWS,
-    exact: bool | None = None,
     dim: int | None = None,
     bands: int = 16,
     bits: int = 8,
@@ -738,51 +746,37 @@ def cosine_neardup_pairs(
 ) -> DataFrame:
     """All pairs with cosine >= threshold (src < dst).
 
-    Adaptive physical strategy: below ``max_broadcast_rows`` the
-    normalized matrix is a broadcast variable and each Arrow batch does
-    one GEMM against it, emitting only over-threshold pairs — the
+    Adaptive physical strategy: up to NEARDUP_BROADCAST_MAX_ROWS rows
+    the normalized matrix is a broadcast variable and each Arrow batch
+    does one GEMM against it, emitting only over-threshold pairs — the
     exchange carries results, never the n^2 pair space. Above it the plan
     switches to ``cosine_neardup_bucketed`` (LSH bands + exact cosine
     re-check): fully distributed, no driver collect, recall margin-safe
-    at neardup thresholds. Same output contract either way.
+    at neardup thresholds. Same output contract either way, and the
+    switch WARNS, so the "all pairs >= threshold" contract never weakens
+    silently. One evaluation of the input lineage either way: the size
+    probe IS the driver collect (``limit(max+1).toPandas``), reused as
+    the broadcast matrix when it fits. ``dim``/``bands``/``bits``/
+    ``seed`` tune the bucketed plan (ignored by the exact GEMM, which
+    has no knobs)."""
+    max_rows = NEARDUP_BROADCAST_MAX_ROWS
+    pdf = df.select(id_col, vec_col).limit(max_rows + 1).toPandas()
+    if len(pdf) > max_rows:
+        import warnings
 
-    ``exact`` pins the strategy: True forces the GEMM plan (raises via
-    ``_matrix`` if the corpus exceeds the broadcast contract — fail fast
-    beats a silent ~0.5% recall loss), False forces the bucketed plan.
-    The default (None) keeps the size-adaptive choice but WARNS when it
-    degrades to the approximate plan, so the "all pairs >= threshold"
-    contract never weakens silently. One evaluation of the input
-    lineage either way: the adaptive probe IS the driver collect
-    (``limit(max+1).toPandas``), reused as the broadcast matrix when it
-    fits. ``dim``/``bands``/``bits``/``seed`` tune the bucketed plan
-    (ignored by the exact GEMM, which has no knobs)."""
-    def bucketed() -> DataFrame:
+        warnings.warn(
+            f"cosine_neardup_pairs: corpus exceeds {max_rows} rows;"
+            f" degrading to the LSH-bucketed approximate plan (~0.5%"
+            f" recall loss at threshold 0.9). Call"
+            f" cosine_neardup_bucketed directly to silence.",
+            stacklevel=2,
+        )
         return cosine_neardup_bucketed(
             df, id_col, vec_col, threshold,
             dim=dim, bands=bands, bits=bits, seed=seed,
         ).select("src", "dst", "cosine")
-
-    if exact is not None and not exact:  # False or falsy: force bucketed
-        return bucketed()
     spark = df.sparkSession
-    if exact is None:
-        probe = df.select(id_col, vec_col).limit(max_broadcast_rows + 1)
-        pdf = probe.toPandas()
-        if len(pdf) > max_broadcast_rows:
-            import warnings
-
-            warnings.warn(
-                f"cosine_neardup_pairs: corpus exceeds "
-                f"{max_broadcast_rows} rows; degrading to the "
-                f"LSH-bucketed approximate plan (~0.5% recall loss at "
-                f"threshold 0.9). Pass exact=False to silence, or "
-                f"exact=True to force the exact plan.",
-                stacklevel=2,
-            )
-            return bucketed()
-        ids, mat = _pdf_to_matrix(pdf, id_col, vec_col)
-    else:
-        ids, mat = _matrix(df, id_col, vec_col)
+    ids, mat = _pdf_to_matrix(pdf, id_col, vec_col)
     id_type = df.schema[id_col].dataType
     out_schema = T.StructType(
         [

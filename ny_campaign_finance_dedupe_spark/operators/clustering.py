@@ -35,6 +35,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 MAX_COMPONENT = 30_000  # dedupe/clustering.py:198
+# bound on C2's re-filter-and-recluster rounds; every round removes at
+# least one edge of each oversize component
+MAX_SPLIT_ROUNDS = 5
 MAX_CC_ITERS = 50
 # below this many edges the iterative loop's per-round fixed cost (two
 # shuffles + localCheckpoint + checksum job, ~O(seconds) each) dwarfs the
@@ -95,19 +98,19 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def _driver_union_find(e: DataFrame) -> DataFrame:
-    """Small-graph fast path: vectorized label propagation on collected
-    edges (numpy min-hooking with full pointer-jumping between rounds —
-    the driver-side mirror of the large-star/small-star shuffle loop).
-    No per-edge Python loop: each round is O(E) numpy kernels and the
-    round count is the graph's star-contraction depth, so a few hundred
-    thousand edges resolve in tens of milliseconds on the driver."""
+def _driver_union_find(e: DataFrame, pdf) -> DataFrame:
+    """Small-graph fast path: vectorized label propagation on the
+    collected edges ``pdf`` of ``e`` (numpy min-hooking with full
+    pointer-jumping between rounds — the driver-side mirror of the
+    large-star/small-star shuffle loop). No per-edge Python loop: each
+    round is O(E) numpy kernels and the round count is the graph's
+    star-contraction depth, so a few hundred thousand edges resolve in
+    tens of milliseconds on the driver."""
     import numpy as np
     import pandas as pd
 
     t = e.schema["src"].dataType.simpleString()
     schema = f"record_id {t}, cluster_id {t}"
-    pdf = e.toPandas()
     if len(pdf) == 0:  # np.unique on empty input yields float64 indices
         return e.sparkSession.createDataFrame([], schema)
     src = pdf["src"].to_numpy()
@@ -138,24 +141,26 @@ def _driver_union_find(e: DataFrame) -> DataFrame:
     return e.sparkSession.createDataFrame(out, schema)
 
 
-def connected_components(
-    edges: DataFrame,
-    driver_max_edges: int = DRIVER_CC_MAX_EDGES,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(src, dst) -> (record_id, cluster_id) for every id appearing
     in an edge; cluster_id = component min (C8). Ids keep their own
     orderable type (long, string, ...) on both paths.
 
-    Adaptive physical strategy: small edge sets union-find on the driver
-    (one collect instead of O(log n) shuffle rounds); large ones run the
-    alternating large-star/small-star loop with lineage truncation per
-    round. Both produce identical min-label output (pinned by test).
+    Adaptive physical strategy, read off one
+    ``limit(DRIVER_CC_MAX_EDGES + 1)`` collect of the distinct edges:
+    when it fits, union-find runs on the driver over that collect (one
+    job instead of O(log n) shuffle rounds); otherwise the edges are
+    localCheckpointed and run the alternating large-star/small-star loop
+    with lineage truncation per round. Both produce identical min-label
+    output (pinned by test).
     """
     e = edges.select("src", "dst").where(
         F.col("src") != F.col("dst")
-    ).distinct().localCheckpoint()
-    if driver_max_edges and e.count() <= driver_max_edges:
-        return _driver_union_find(e)
+    ).distinct()
+    pdf = e.limit(DRIVER_CC_MAX_EDGES + 1).toPandas()
+    if len(pdf) <= DRIVER_CC_MAX_EDGES:
+        return _driver_union_find(e, pdf)
+    e = e.localCheckpoint()
     prev = None
     for _ in range(MAX_CC_ITERS):
         e = _small_star(_large_star(e)).localCheckpoint()
@@ -343,25 +348,23 @@ def split_oversize_components(
     scored_pairs: DataFrame,
     clustered: DataFrame,
     threshold: float,
-    max_component: int = MAX_COMPONENT,
-    max_rounds: int = 5,
 ) -> DataFrame:
-    """C2 (clustering.py:63-98): components over ``max_component`` members
+    """C2 (clustering.py:63-98): components over MAX_COMPONENT members
     re-filter their edges at logit(min kept score) + 1 and re-cluster,
-    recursing (bounded). The semantic skew guard on top of the block cap
-    and AQE skew-join splitting.
+    recursing for at most MAX_SPLIT_ROUNDS rounds. The semantic skew
+    guard on top of the block cap and AQE skew-join splitting.
     """
     out = clustered
-    for _ in range(max_rounds):
+    for _ in range(MAX_SPLIT_ROUNDS):
         big = (
             out.groupBy("cluster_id").count()
-            .where(F.col("count") > max_component)
+            .where(F.col("count") > MAX_COMPONENT)
             .select("cluster_id")
         )
         if big.isEmpty():
             return out
         # broadcast only the (tiny) oversize-cluster-id list; big_members
-        # can be max_component x n_big rows — a shuffled semi-join, never
+        # can be MAX_COMPONENT x n_big rows — a shuffled semi-join, never
         # a broadcast build side
         memb = out.join(F.broadcast(big), "cluster_id").select(
             "record_id", "cluster_id"
@@ -370,7 +373,7 @@ def split_oversize_components(
         # keep the component id on each edge: the reference re-filters
         # EACH component at ITS OWN min kept score (clustering.py:63-98).
         # A single global min would only peel one min-tier per round —
-        # max_rounds could exhaust while high-score components were
+        # the rounds could run out while high-score components were
         # never re-filtered at all. (score>=threshold edges never cross
         # components: CC already merged anything they connect.)
         bad_edges = (

@@ -82,12 +82,7 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
     return None if est >= (1 << 62) else est
 
 
-def exact_duplicates(
-    df: DataFrame,
-    id_col: str,
-    payload: str,
-    persist_threshold_bytes: int = EXACT_DUP_PERSIST_BYTES,
-) -> DataFrame:
+def exact_duplicates(df: DataFrame, id_col: str, payload: str) -> DataFrame:
     """(record_id, cluster_id, cluster_size): cluster_id = min id among
     byte-identical payloads.
 
@@ -99,9 +94,9 @@ def exact_duplicates(
     the join; the old ``collect_list`` materialized it in one task.
 
     The shared (id, hash) projection is persisted only when Catalyst
-    estimates the input above ``persist_threshold_bytes`` (or when no
-    estimate is available — scale-safe default): see
-    EXACT_DUP_PERSIST_BYTES for the trade.
+    estimates the input at or above EXACT_DUP_PERSIST_BYTES (or when no
+    estimate is available — scale-safe default): see that constant for
+    the trade.
     """
     # NULL payloads must survive the equi-join below (sha2(NULL) is NULL
     # and a NULL key never matches), so they get a marker key that cannot
@@ -111,7 +106,7 @@ def exact_duplicates(
     key = F.when(c.isNull(), F.lit("__NULL_PAYLOAD__")).otherwise(F.sha2(c, 256))
     keyed = df.select(F.col(id_col).alias("record_id"), key.alias("k"))
     est = _plan_size_bytes(df)
-    do_persist = est is None or est >= persist_threshold_bytes
+    do_persist = est is None or est >= EXACT_DUP_PERSIST_BYTES
     if do_persist:
         keyed = keyed.persist()
     agg = keyed.groupBy("k").agg(
@@ -419,9 +414,9 @@ def segment_text(col: Column, seg_words: int = 10) -> Column:
     return keygen._bind(F.split(col, " "), _segs)
 
 
-#: Above this many distinct boilerplate segments the broadcast strategy
-#: refuses (driver + executor memory holds the full hot-set strings);
-#: switch to strategy='join', which never collects it.
+#: Up to this many distinct boilerplate segments segment_dedup ships the
+#: hot-set strings as a broadcast set (driver + executor memory holds
+#: them); above it, it takes the anti-join rebuild, which never collects.
 SEGMENT_HOT_BROADCAST_MAX = 100_000
 
 
@@ -431,8 +426,6 @@ def segment_dedup(
     text_col: str,
     seg_words: int = 10,
     df_threshold: int = 2,
-    strategy: str = "broadcast",
-    max_hot: int = SEGMENT_HOT_BROADCAST_MAX,
 ) -> DataFrame:
     """Cross-document segment (paragraph) deduplication — the CCNet
     preprocessing step (Wenzek et al. 2019, arXiv:1911.00359 §3.1:
@@ -446,27 +439,25 @@ def segment_dedup(
     Scale shape: document frequencies aggregate over (xxhash64(seg),
     record_id) postings — ids+hashes only, never text, with map-side
     array_distinct (a segment repeated inside one doc counts once).
-    - strategy='broadcast' (default): the hot segment strings (tiny by
-      construction — boilerplate is the head of the df distribution) are
-      collected once and shipped as a broadcast set; an Arrow-batched
+    The path follows the hot-set size, read off one bounded collect:
+    - up to SEGMENT_HOT_BROADCAST_MAX hot segments (boilerplate is the
+      head of the df distribution, so this is the common case): the
+      collected strings ship as a broadcast set and an Arrow-batched
       kernel filters each document's segment array by set membership.
-      The corpus NEVER shuffles. Fails loudly above ``max_hot``
-      (a silent driver OOM is worse); per-batch cost is O(segs) set
-      probes — the interpreted higher-order array_contains alternative
-      is O(segs x hot) per row.
-    - strategy='join': fully distributed, no driver bound — posexplode,
+      The corpus NEVER shuffles; per-batch cost is O(segs) set probes —
+      the interpreted higher-order array_contains alternative is
+      O(segs x hot) per row.
+    - above it: fully distributed, no driver bound — posexplode,
       broadcast ANTI-join against the hot-hash list (no shuffle of the
       big side), then one groupBy(record_id) rebuild (sort_array of
       (pos, seg) structs). The rebuild is the one intrinsic
       corpus-sized shuffle. Identical output (pinned by test).
     """
-    if strategy not in ("broadcast", "join"):
-        raise ValueError(f"segment_dedup: unknown strategy {strategy!r}")
     # persisted: the segmentation projection feeds three plan subtrees
-    # per strategy (df agg + hot-string probe + rebuild / ex + hot_h +
-    # all_docs) and Catalyst does no CSE across them — unpersisted, the
-    # corpus would be re-tokenized three times per call (caller reclaims
-    # via dedup.release, the module's _tag_persisted convention)
+    # (df agg + hot-string probe + rebuild, or ex + all_docs) and
+    # Catalyst does no CSE across them — unpersisted, the corpus would
+    # be re-tokenized three times per call (caller reclaims via
+    # dedup.release, the module's _tag_persisted convention)
     base = df.select(
         F.col(id_col).alias("record_id"),
         segment_text(F.col(text_col), seg_words).alias("segs"),
@@ -486,26 +477,21 @@ def segment_dedup(
         .where(F.col("seg_df") > df_threshold)
         .select("h")
     )
-    if strategy == "broadcast":
-        # hot STRINGS come from a broadcast semi-join probe (only hot
-        # occurrences reach the distinct), never a string shuffle
-        rows = (
-            postings.join(
-                F.broadcast(hot_h),
-                F.xxhash64(postings["seg"]) == F.col("h"),
-                "left_semi",
-            )
-            .select("seg")
-            .distinct()
-            .limit(max_hot + 1)
-            .collect()
+    # hot STRINGS come from a broadcast semi-join probe (only hot
+    # occurrences reach the distinct), never a string shuffle
+    max_hot = SEGMENT_HOT_BROADCAST_MAX
+    rows = (
+        postings.join(
+            F.broadcast(hot_h),
+            F.xxhash64(postings["seg"]) == F.col("h"),
+            "left_semi",
         )
-        if len(rows) > max_hot:
-            raise ValueError(
-                f"segment_dedup: more than {max_hot} boilerplate segments"
-                f" at df_threshold={df_threshold}; raise max_hot or use"
-                f" strategy='join'"
-            )
+        .select("seg")
+        .distinct()
+        .limit(max_hot + 1)
+        .collect()
+    )
+    if len(rows) <= max_hot:
         hot_set = frozenset(r["seg"] for r in rows)
         bc = df.sparkSession.sparkContext.broadcast(hot_set)
         id_type = df.schema[id_col].dataType.simpleString()
@@ -535,6 +521,7 @@ def segment_dedup(
         return _tag_persisted(
             base.mapInPandas(drop_hot, schema=out_schema), base
         )
+    # over the bound: the distributed anti-join rebuild
     ex = base.select(
         "record_id",
         F.size("segs").alias("n_seg"),
@@ -802,7 +789,6 @@ def passage_dedup(
     text_col: str,
     window: int = 8,
     min_sites: int = 2,
-    arrow_min_tokens: int = PASSAGE_ARROW_MIN_TOKENS,
 ) -> DataFrame:
     """ExactSubstr-style duplicate-passage removal (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better",
@@ -827,8 +813,8 @@ def passage_dedup(
     hash caveat matches the repo's xxhash64 convention: at 10^12-token
     corpora swap in a 128-bit split key.
 
-    Kept-token rebuild: docs shorter than ``arrow_min_tokens`` go through
-    the higher-order-expression filter (interpreted,
+    Kept-token rebuild: docs shorter than PASSAGE_ARROW_MIN_TOKENS go
+    through the higher-order-expression filter (interpreted,
     O(tokens x covered-spans) per doc — fine for web pages at 10^3-10^4
     tokens, and it keeps the plan codegen-adjacent with no Python
     round-trip). Docs at or above the threshold route through an Arrow
@@ -836,8 +822,7 @@ def passage_dedup(
     O(tokens + dup_sites x window) — so a pathological multi-MB doc with
     many duplicated spans cannot go quadratic in one task. The two paths
     are output-identical (pinned by
-    test_passage_dedup_arrow_kernel_matches_expr); set the threshold to
-    0 / a huge value to force one path.
+    test_passage_dedup_arrow_kernel_matches_expr).
     """
     base = df.select(
         F.col(id_col).alias("record_id"),
@@ -872,6 +857,7 @@ def passage_dedup(
     # empty (measured), so the common all-short corpus keeps the old
     # single-branch pure-expression plan. The max-length probe is one
     # agg over the already-persisted token arrays.
+    arrow_min_tokens = PASSAGE_ARROW_MIN_TOKENS
     max_len = base.agg(F.max(F.size("words"))).collect()[0][0] or 0
     if max_len < arrow_min_tokens:
         out = _passage_rebuild_expr(

@@ -62,11 +62,7 @@ def _best_per(scored: DataFrame, side: str) -> DataFrame:
     )
 
 
-def greedy_one_to_one(
-    scored: DataFrame,
-    threshold: float = 0.0,
-    max_iters: int = MAX_MATCH_ITERS,
-) -> DataFrame:
+def greedy_one_to_one(scored: DataFrame, threshold: float = 0.0) -> DataFrame:
     """C6 (clustering.py:265-277): maximal matching equal to greedy-by-
     score on distinct scores. scored(src, dst, score) -> accepted subset.
 
@@ -74,7 +70,8 @@ def greedy_one_to_one(
     edge that is both endpoints' best, then removes all edges touching a
     matched endpoint. Terminates because every round either accepts the
     globally best remaining edge (always locally dominant) or the edge
-    set is empty.
+    set is empty. A remnant still left after MAX_MATCH_ITERS rounds is
+    finished on the driver under the same order.
     """
     remaining = (
         scored.where(F.col("score") >= threshold)
@@ -82,7 +79,7 @@ def greedy_one_to_one(
         .localCheckpoint()
     )
     accepted: DataFrame | None = None
-    for _ in range(max_iters):
+    for _ in range(MAX_MATCH_ITERS):
         if remaining.isEmpty():
             break
         # an edge is dominant iff it is its src's best AND its dst's best
@@ -105,16 +102,17 @@ def greedy_one_to_one(
         )
     # convergence means *no edges remain* — matching that completes exactly
     # on the final allowed iteration is success (the emptiness test at the
-    # top of the loop never runs again once max_iters is exhausted).
+    # top of the loop never runs again once MAX_MATCH_ITERS is exhausted).
     if not remaining.isEmpty():
         # adversarial score orderings (a monotonically-decreasing chain)
-        # retire only O(1) edges per round, so a >2*max_iters-long chain
-        # survives the loop. Finish the remnant with the SAME greedy
-        # matching computed sequentially on the driver under the same
-        # total order (score desc, src, dst) — output-identical to
-        # continuing the rounds (locally-dominant iteration == greedy by
-        # a total order). A remnant that survives max_iters rounds is a
-        # thin chain, not a dense graph; the collect is bounded anyway.
+        # retire only O(1) edges per round, so a chain longer than
+        # 2*MAX_MATCH_ITERS survives the loop. Finish the remnant with
+        # the SAME greedy matching computed sequentially on the driver
+        # under the same total order (score desc, src, dst) —
+        # output-identical to continuing the rounds (locally-dominant
+        # iteration == greedy by a total order). A remnant that survives
+        # every round is a thin chain, not a dense graph; the collect is
+        # bounded anyway.
         # canonical column order first: the join-key anti-joins above put
         # "dst" first, and createDataFrame(tuples, schema) binds by position
         rem = remaining.select("src", "dst", "score")
@@ -125,8 +123,9 @@ def greedy_one_to_one(
         )
         if len(rows) > DRIVER_MATCH_MAX_EDGES:
             raise RuntimeError(
-                f"greedy_one_to_one: {len(rows)}+ edges after {max_iters} "
-                "rounds — not a chain remnant; raise max_iters"
+                f"greedy_one_to_one: {len(rows)}+ edges after"
+                f" {MAX_MATCH_ITERS} rounds — not a chain remnant; raise"
+                " MAX_MATCH_ITERS"
             )
         used_src: set = set()
         used_dst: set = set()

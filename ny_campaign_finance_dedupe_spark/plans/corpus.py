@@ -34,16 +34,13 @@ def clean_corpus(
     seg_words: int = 10,
     df_threshold: int = 2,
     min_tokens: int = 5,
-    strategy: str = "broadcast",
 ) -> DataFrame:
     """(record_id, clean_text, n_tok) for every SURVIVING document.
 
     Drops: documents emptied by boilerplate removal, exact duplicates of
     a lower-id document (after cleaning), and documents shorter than
     ``min_tokens`` whitespace tokens post-cleaning."""
-    seg = dedup.segment_dedup(
-        df, id_col, text_col, seg_words, df_threshold, strategy
-    )
+    seg = dedup.segment_dedup(df, id_col, text_col, seg_words, df_threshold)
     nonempty = seg.where(F.col("clean_text") != "").select(
         "record_id", "clean_text"
     )

@@ -55,21 +55,6 @@ class PipelineConfig:
     max_block_size: int = 100
     score_threshold: float = 0.5
     lang_filter: str | None = None
-    # Compact block keys to 64-bit xxhash64 before the blocking map is
-    # checkpointed / shuffled. The string keys ("mh|<band>|<hex>",
-    # "dom_sh|<domain>|<band>", ~30-60 bytes) are only ever compared for
-    # EQUALITY downstream (cap count, pair self-join), so an
-    # 8-byte injective-enough stand-in carries the same information at
-    # ~1/5 the shuffle + checkpoint byte volume — the block stage is the
-    # pipeline's most bandwidth-bound after signatures (2->8-core
-    # executor-CPU inflation +29-134% across the round-4 telemetry
-    # draws, BASELINE.md). Collisions merge two blocks (~26M keys in a
-    # 64-bit space: P(any) ~ 2e-5 at 2M pages) which only ADDS candidate
-    # pairs that scoring then rejects — never drops a true pair.
-    # None = compact exactly when the fast hash family runs; the
-    # portable family keeps strings so the DuckDB oracle can recompute
-    # every key (functions/portable.py contract).
-    compact_block_keys: bool | None = None
     model: dict = field(
         default_factory=lambda: scoring.LogisticModel().to_dict()
     )
@@ -127,30 +112,33 @@ class DedupePipeline:
         extract checkpoint by url — the J2 ids-only pattern applied to
         the stage boundary.
         """
+        return self.with_signatures(extracted).select(
+            "url", "warc_ts", "lang", "exact_key", "sig", "simhash"
+        )
+
+    def with_signatures(self, df: DataFrame) -> DataFrame:
+        """``df`` (any rows with url and ntext) plus the signature
+        columns exact_key, sig and simhash: the signatures stage before
+        its projection. The crawl signs its novel rows this way, so
+        ntext rides beside the keys into incremental.match_batch."""
         cfg = self.cfg
-        exact_key = F.sha2(F.col("ntext"), 256).alias("exact_key")
-        head = ["url", "warc_ts", "lang"]
+        df = df.withColumn("exact_key", F.sha2(F.col("ntext"), 256))
         if cfg.portable_hashing:
             from ..functions import portable
 
             shingles = keygen.word_ngrams(F.col("ntext"), SHINGLE_WORDS)
-            return extracted.select(
-                *head,
-                exact_key,
-                portable.minhash_sig(shingles, cfg.minhash_perms).alias("sig"),
-                portable.simhash32(shingles).alias("simhash"),
-            )
+            return df.withColumns({
+                "sig": portable.minhash_sig(shingles, cfg.minhash_perms),
+                "simhash": portable.simhash32(shingles),
+            })
         # fast family: token-hash-combined shingle ids — no gram strings
         # ever materialize JVM-side (see hashing.word_ngram_hashes)
         fused = hashing.minhash_simhash_udf(cfg.minhash_perms)(
             hashing.word_ngram_hashes(F.col("ntext"), SHINGLE_WORDS)
         )
-        return extracted.withColumn("_s", fused).select(
-            *head,
-            exact_key,
-            F.col("_s.sig").alias("sig"),
-            F.col("_s.simhash").alias("simhash"),
-        )
+        return df.withColumn("_s", fused).withColumns({
+            "sig": F.col("_s.sig"), "simhash": F.col("_s.simhash"),
+        }).drop("_s")
 
     def predicates(self) -> dict:
         cfg = self.cfg
@@ -177,13 +165,23 @@ class DedupePipeline:
         }
 
     def block(self, extracted: DataFrame) -> DataFrame:
+        """Blocking map (block_key, record_id), capped at ``max_block_size``.
+
+        The fast family compacts each string key ("mh|<band>|<hex>",
+        "dom_sh|<domain>|<band>", ~30-60 bytes) to its 64-bit xxhash64
+        before the cap. Keys are only ever compared for equality
+        downstream (cap count, pair self-join), so the 8-byte stand-in
+        carries the same blocks at ~1/5 the bytes through both shuffles
+        of the map and the stage checkpoint; the block stage is the
+        most bandwidth-bound after signatures (BASELINE.md round-4
+        telemetry). A collision merges two blocks (~26M keys in a 64-bit
+        space: P(any) ~ 2e-5 at 2M pages), which only adds candidate
+        pairs that scoring rejects and never drops a true pair. The
+        portable family keeps the strings so the DuckDB oracle can
+        recompute every key (functions/portable.py contract).
+        """
         bm = blocking.build_blocking_map(extracted, "url", self.predicates())
-        compact = self.cfg.compact_block_keys
-        if compact is None:
-            compact = not self.cfg.portable_hashing
-        if compact:
-            # before cap_blocks so BOTH shuffles of the map (cap count +
-            # pair join) and the stage checkpoint carry 8-byte longs
+        if not self.cfg.portable_hashing:
             bm = bm.select(
                 F.xxhash64("block_key").alias("block_key"), "record_id"
             )

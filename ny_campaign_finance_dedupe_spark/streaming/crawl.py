@@ -23,9 +23,9 @@ tested) separately into ONE foreachBatch streaming query:
 Scale shape per micro-batch: one Arrow extract pass (localCheckpointed),
 one Arrow bloom probe (a bucket equi-join the engine broadcasts or
 shuffles by the index's size — bloom.bloom_probe) and one anti-join
-whose history side is the key column (their novel rows
-localCheckpointed), then one stream-static equi-join on block_key for
-the (novel-only) batch and one window rank.
+whose history side is the key column, then one Arrow signature pass
+over the novel rows only (localCheckpointed with them), one
+stream-static equi-join on block_key and one window rank.
 History artifacts (bloom index + key projection + blocking index) are
 built once per ingest epoch and persisted; between epochs they are
 plain parquet appends. The Bloom index carries its own
@@ -91,19 +91,24 @@ def match_novel_batch(
     (suppressed), and so do pages ``cfg.lang_filter`` drops, as in batch
     extract. Two localCheckpointed frames keep every step single-pass:
     the extracted, keyed batch (read by both Bloom branches) and its
-    novel rows (read by both of match_batch's reads and the
+    signed novel rows (read by match_batch's three reads and the
     adopt-or-found join), so no consumer re-runs the extract, the Bloom
-    kernel or the confirm anti-join. Runs identically under foreachBatch
-    or as a plain batch call (how the tests drive it deterministically).
+    kernel, the confirm anti-join or the signature kernel. Runs
+    identically under foreachBatch or as a plain batch call (how the
+    tests drive it deterministically).
     """
+    pipe = DedupePipeline(cfg)
     keyed = (
-        DedupePipeline(cfg)
-        .extract(batch)
+        pipe.extract(batch)
         .withColumn("exact_key", ingest.exact_key())
         .localCheckpoint()
     )
-    novel = bloom.novel_rows(
-        keyed, "exact_key", history_keys, bloom_index
+    # the content key steps aside for the signatures' exact_key (no url
+    # fallback), so the crawl blocks on the keys the batch pipeline uses
+    novel = pipe.with_signatures(
+        bloom.novel_rows(
+            keyed, "exact_key", history_keys, bloom_index
+        ).withColumnRenamed("exact_key", "content_key")
     ).localCheckpoint()
     matches = incremental.match_batch(novel, index, cfg, n_matches=1)
     best = matches.where(F.col("rank") == 1).select(
@@ -112,7 +117,10 @@ def match_novel_batch(
         F.col("score"),
     )
     return (
-        novel.select(F.col("url").alias("record_id"), "exact_key")
+        novel.select(
+            F.col("url").alias("record_id"),
+            F.col("content_key").alias("exact_key"),
+        )
         .join(best, "record_id", "left")
         .select(
             "record_id",

@@ -7,10 +7,11 @@ inverted index becomes a *stream-static equi-join on block_key* against a
 persisted blocking map; the per-block top-N becomes a window rank inside
 ``foreachBatch``.
 
-Shape: ``match_batch`` = batch blocking keys over extract-stage rows ->
-join static index -> score (same native expression as batch) -> top-N
-per query url. It never extracts: the caller runs the one page-text
-chain (``DedupePipeline.extract``) once per page; only ``build_index``
+Shape: ``match_batch`` = batch blocking keys over signed extract-stage
+rows -> join static index -> score (same native expression as batch) ->
+top-N per query url. It never extracts or signs: the caller runs the one
+page-text chain (``DedupePipeline.extract``) and the signature kernel
+(``DedupePipeline.with_signatures``) once per page; only ``build_index``
 extracts here. crawl.start_crawl_pipeline runs the match per
 micro-batch, after Bloom novelty. The static index is reloaded per batch
 (a cheap metadata op with parquet), so index/unindex are plain
@@ -50,9 +51,13 @@ def match_batch(
     cfg,
     n_matches: int = 1,
 ) -> DataFrame:
-    """One micro-batch of extract-stage rows (url, warc_ts, lang, ntext —
-    ``DedupePipeline(cfg).extract`` output; extra columns are ignored)
-    -> top-N scored matches vs the index.
+    """One micro-batch of signed extract-stage rows (url, ntext,
+    exact_key, sig, simhash — ``DedupePipeline(cfg).with_signatures``
+    over ``extract`` output; extra columns are ignored) -> top-N scored
+    matches vs the index. ``batch`` is read three times (the block cap,
+    the blocking join and the ntext join), so a caller that signs with
+    the fast family's Arrow kernel materializes it first, as the crawl
+    does.
 
     Returns (query_url, match_url, score, rank), ranked on the logit then
     url like the oracles (a saturated sigmoid ties distinct logits). Pure
@@ -61,8 +66,7 @@ def match_batch(
     A match is kept at ``cfg.score_threshold``, so stream and batch
     accept at the SAME configured score.
     """
-    pipe = DedupePipeline(cfg)
-    bm = pipe.block(pipe.signatures(batch))
+    bm = DedupePipeline(cfg).block(batch)
     qk = bm.join(
         batch.select(F.col("url").alias("record_id"), F.col("ntext").alias("q_ntext")),
         "record_id",

@@ -87,7 +87,7 @@ def test_add_singletons(spark):
     assert len(rows) == 3
 
 
-def test_split_oversize_components(spark):
+def test_split_oversize_components(spark, monkeypatch):
     # two tight triangles joined by one weak edge; cap forces a split
     tri1 = [("a", "b", 0.95), ("b", "c", 0.95), ("a", "c", 0.95)]
     tri2 = [("x", "y", 0.95), ("y", "z", 0.95), ("x", "z", 0.95)]
@@ -97,14 +97,13 @@ def test_split_oversize_components(spark):
     )
     merged = clustering.cluster_edges(scored, threshold=0.5)
     assert len(comp_sets(merged.select("record_id", "cluster_id"))) == 1
-    split = clustering.split_oversize_components(
-        scored, merged, threshold=0.5, max_component=4
-    )
+    monkeypatch.setattr(clustering, "MAX_COMPONENT", 4)
+    split = clustering.split_oversize_components(scored, merged, threshold=0.5)
     got = comp_sets(split.select("record_id", "cluster_id"))
     assert frozenset({"a", "b", "c"}) in got and frozenset({"x", "y", "z"}) in got
 
 
-def test_cc_driver_and_distributed_paths_agree(spark):
+def test_cc_driver_and_distributed_paths_agree(spark, monkeypatch):
     """The adaptive small-graph fast path must equal the large-star/
     small-star loop on the same random graph, with long ids and with
     string ids (non-ASCII ones included), and label every component by
@@ -129,10 +128,12 @@ def test_cc_driver_and_distributed_paths_agree(spark):
             (r["record_id"], r["cluster_id"])
             for r in C.connected_components(df).collect()
         }
-        slow = {
-            (r["record_id"], r["cluster_id"])
-            for r in C.connected_components(df, driver_max_edges=0).collect()
-        }
+        with monkeypatch.context() as m:
+            m.setattr(C, "DRIVER_CC_MAX_EDGES", 0)
+            slow = {
+                (r["record_id"], r["cluster_id"])
+                for r in C.connected_components(df).collect()
+            }
         assert fast == slow, id_type
         by = {}
         for rid, cid in fast:
@@ -158,7 +159,7 @@ def test_canonical_mode_ignores_nulls(spark):
     assert got == {1: "acme co", 3: "a"}
 
 
-def test_split_oversize_per_component_threshold(spark):
+def test_split_oversize_per_component_threshold(spark, monkeypatch):
     """Each oversize component re-filters at ITS OWN min kept score: a
     high-score chain must split in the same rounds as a low-score one,
     not wait for the global min tier to be peeled first."""
@@ -168,15 +169,15 @@ def test_split_oversize_per_component_threshold(spark):
     # two 6-member chains at very different score tiers; cap 4 forces
     # both to split. With a GLOBAL min threshold, round 1's
     # sigmoid(logit(0.55)+1)~0.77 removes nothing from the 0.97 chain
-    # and max_rounds can exhaust on the high tier.
+    # and the rounds can run out on the high tier.
     low = chain(["l1", "l2", "l3", "l4", "l5", "l6"], 0.55)
     high = chain(["h1", "h2", "h3", "h4", "h5", "h6"], 0.97)
     scored = spark.createDataFrame(
         low + high, "src string, dst string, score double"
     )
     merged = clustering.cluster_edges(scored, threshold=0.5)
-    split = clustering.split_oversize_components(
-        scored, merged, threshold=0.5, max_component=4, max_rounds=3
-    )
+    monkeypatch.setattr(clustering, "MAX_COMPONENT", 4)
+    monkeypatch.setattr(clustering, "MAX_SPLIT_ROUNDS", 3)
+    split = clustering.split_oversize_components(scored, merged, threshold=0.5)
     sizes = [len(s) for s in comp_sets(split.select("record_id", "cluster_id"))]
     assert max(sizes) <= 4, sizes

@@ -19,6 +19,10 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _executed_plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_exact_duplicates(docs):
     out = {
         r["record_id"]: (r["cluster_id"], r["cluster_size"])
@@ -48,10 +52,10 @@ def test_exact_duplicates_no_member_array(spark):
     assert got[1000] == (1000, 1)
 
 
-def test_exact_duplicates_persist_is_size_adaptive(docs):
+def test_exact_duplicates_persist_is_size_adaptive(docs, monkeypatch):
     """Toy inputs skip the shared-projection persist (re-hashing a few
-    KB twice beats the materialization barrier); forcing the threshold
-    to 0 restores the scale shape, and both produce identical output.
+    KB twice beats the materialization barrier); a threshold of 0
+    restores the scale shape, and both produce identical output.
     Uses a parquet source because Catalyst only has a size estimate for
     file sources — unestimatable plans (e.g. Python createDataFrame)
     keep the persist as the scale-safe default."""
@@ -59,9 +63,8 @@ def test_exact_duplicates_persist_is_size_adaptive(docs):
     pq = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     small = dedup.exact_duplicates(pq, "doc_id", "text")
     assert not getattr(small, "_persisted_deps", [])
-    forced = dedup.exact_duplicates(
-        pq, "doc_id", "text", persist_threshold_bytes=0
-    )
+    monkeypatch.setattr(dedup, "EXACT_DUP_PERSIST_BYTES", 0)
+    forced = dedup.exact_duplicates(pq, "doc_id", "text")
     assert getattr(forced, "_persisted_deps", [])
     # unestimatable input -> persist stays on (scale-safe)
     local = dedup.exact_duplicates(docs, "doc_id", "text")
@@ -242,7 +245,6 @@ def test_ann_empty_inputs(spark, vecs):
     assert ann.brute_force_topk(empty, vecs, k=2).count() == 0
     assert ann.brute_force_topk(vecs, empty, k=2).count() == 0
     assert ann.cosine_neardup_pairs(empty, threshold=0.9).count() == 0
-    assert ann.cosine_neardup_pairs(empty, threshold=0.9, exact=True).count() == 0
 
 
 def test_gemm_tiling_matches_untiled(spark, monkeypatch):
@@ -487,17 +489,18 @@ def test_release_ann_broadcasts(spark, vecs):
     assert len(ann._ANN_BROADCASTS) == 0
 
 
-def test_cosine_neardup_exact_flag(spark, vecs):
+def test_cosine_neardup_exact_flag(spark, vecs, monkeypatch):
     import warnings
 
-    # exact=False forces the bucketed plan even under the size bound
-    approx = ann.cosine_neardup_pairs(vecs, threshold=0.9, exact=False)
-    assert {(r["src"], r["dst"]) for r in approx.collect()} == {(0, 1), (2, 3)}
-    # adaptive degrade warns (ADVICE r02: no silent contract weakening)
+    # over the size bound the bucketed plan runs, finds the same pairs,
+    # and the degrade warns (ADVICE r02: no silent contract weakening)
+    monkeypatch.setattr(ann, "NEARDUP_BROADCAST_MAX_ROWS", 2)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        ann.cosine_neardup_pairs(vecs, threshold=0.9, max_broadcast_rows=2)
+        approx = ann.cosine_neardup_pairs(vecs, threshold=0.9)
         assert any("degrading" in str(x.message) for x in w)
+    assert "MapInPandas" not in _executed_plan(approx)
+    assert {(r["src"], r["dst"]) for r in approx.collect()} == {(0, 1), (2, 3)}
 
 
 def test_textstats_goldens(spark):
@@ -614,9 +617,10 @@ def test_quantizer_parity_across_physical_paths(spark):
     assert df.select(ann._maybe_round(F.col("x"), None)).collect()[0][0] == 0.145
 
 
-def test_brute_force_paths_agree_with_quantizer(spark):
-    """The operator's two physical strategies (broadcast GEMM vs
-    distributed join) must return the same top-k under the quantizer —
+def test_brute_force_paths_agree_with_quantizer(spark, monkeypatch):
+    """The operator's two physical paths (broadcast GEMM, and the
+    distributed join it takes when the query side is over
+    MAX_COLLECT_ROWS) must return the same top-k under the quantizer —
     the cross-path determinism round_decimals exists for."""
     import numpy as np
 
@@ -625,12 +629,14 @@ def test_brute_force_paths_agree_with_quantizer(spark):
         (i, [float(x) for x in rng.standard_normal(8)]) for i in range(40)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    a = ann.brute_force_topk(
-        df, df, k=3, broadcast_queries=True, round_decimals=9
-    ).collect()
-    b = ann.brute_force_topk(
-        df, df, k=3, broadcast_queries=False, round_decimals=9
-    ).collect()
+    fits = ann.brute_force_topk(df, df, k=3, round_decimals=9)
+    assert "MapInPandas" in _executed_plan(fits)
+    a = fits.collect()
+    monkeypatch.setattr(ann, "MAX_COLLECT_ROWS", 39)
+    over = ann.brute_force_topk(df, df, k=3, round_decimals=9)
+    plan = _executed_plan(over)
+    assert "MapInPandas" not in plan and "ArrowEvalPython" in plan, plan
+    b = over.collect()
     key = lambda r: (r["query_id"], r["rank"])
     sa = {key(r): (r["neighbor_id"], r["cosine"]) for r in a}
     sb = {key(r): (r["neighbor_id"], r["cosine"]) for r in b}
@@ -663,40 +669,54 @@ def test_segment_dedup_removes_planted_boilerplate(spark):
     assert out[1]["n_seg"] == 3 and out[1]["n_dropped"] == 1
 
 
-def test_segment_dedup_strategies_identical(spark):
-    """broadcast (zero corpus shuffle, Arrow set-membership kernel) and
-    join (distributed anti-join + rebuild) must emit identical rows on a
+def test_segment_dedup_strategies_identical(spark, monkeypatch):
+    """The broadcast set (zero corpus shuffle, Arrow set-membership
+    kernel) and the anti-join rebuild it falls back to above
+    SEGMENT_HOT_BROADCAST_MAX hot segments must emit identical rows on a
     corpus with planted families — the family-equivalence contract."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = {
-        tuple(r)
-        for r in dedup.segment_dedup(
+
+    def run():
+        out = dedup.segment_dedup(
             docs, "doc_id", "text", seg_words=7, df_threshold=1
-        ).collect()
-    }
-    b = {
-        tuple(r)
-        for r in dedup.segment_dedup(
-            docs, "doc_id", "text", seg_words=7, df_threshold=1,
-            strategy="join",
-        ).collect()
-    }
-    assert a == b and len(a) == docs.count()
+        )
+        plan = _executed_plan(out)
+        rows = {tuple(r) for r in out.collect()}
+        dedup.release(out)
+        return plan, rows
+
+    plan, a = run()
+    assert "MapInPandas" in plan
+    assert len(a) == docs.count()
     assert sum(r[3] for r in a) > 0  # the planted dups fire
+    # a bound below the (non-zero) hot-segment count takes the join path
+    monkeypatch.setattr(dedup, "SEGMENT_HOT_BROADCAST_MAX", 0)
+    plan, b = run()
+    assert "MapInPandas" not in plan and "LeftAnti" in plan, plan
+    assert a == b
 
 
-def test_segment_dedup_guards(spark):
+def test_segment_dedup_guards(spark, monkeypatch):
+    """The path choice is not a caller knob: the removed ``strategy=``
+    keyword is rejected, and a hot set over SEGMENT_HOT_BROADCAST_MAX
+    (it raised ValueError before) takes the anti-join rebuild and still
+    keeps every document, all-boilerplate ones as ''."""
     df = spark.createDataFrame(
         [(1, "a b c"), (2, "a b c"), (3, "a b c")],
         "doc_id long, text string",
     )
-    with pytest.raises(ValueError, match="strategy"):
+    with pytest.raises(TypeError, match="strategy"):
         dedup.segment_dedup(df, "doc_id", "text", strategy="shuffle")
-    # every doc is one identical segment -> 1 hot segment > max_hot=0
-    with pytest.raises(ValueError, match="boilerplate segments"):
-        dedup.segment_dedup(
-            df, "doc_id", "text", seg_words=5, df_threshold=1, max_hot=0
-        )
+    # every doc is one identical segment -> 1 hot segment > bound 0
+    monkeypatch.setattr(dedup, "SEGMENT_HOT_BROADCAST_MAX", 0)
+    out = dedup.segment_dedup(
+        df, "doc_id", "text", seg_words=5, df_threshold=1
+    )
+    plan = _executed_plan(out)
+    assert "MapInPandas" not in plan and "LeftAnti" in plan, plan
+    rows = sorted(tuple(r) for r in out.collect())
+    dedup.release(out)
+    assert rows == [(i, "", 1, 1) for i in (1, 2, 3)]
 
 
 def test_repetition_stats_goldens(spark):
@@ -963,7 +983,7 @@ def test_hot_ngrams_doc_frequency_not_term_frequency(spark):
     ]
 
 
-def test_passage_dedup_arrow_kernel_matches_expr(spark):
+def test_passage_dedup_arrow_kernel_matches_expr(spark, monkeypatch):
     """The two kept-token rebuild paths must be output-identical. Drive
     the same mixed corpus (shared spans, within-doc repeat, clean doc,
     short doc, empty) through forced-expr (threshold huge) and
@@ -980,9 +1000,8 @@ def test_passage_dedup_arrow_kernel_matches_expr(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
     def run(threshold):
-        out = dedup.passage_dedup(
-            df, "doc_id", "text", window=8, arrow_min_tokens=threshold
-        )
+        monkeypatch.setattr(dedup, "PASSAGE_ARROW_MIN_TOKENS", threshold)
+        out = dedup.passage_dedup(df, "doc_id", "text", window=8)
         rows_ = sorted(
             (r["record_id"], r["clean_text"], r["n_tokens"], r["n_removed"])
             for r in out.collect()

@@ -231,7 +231,7 @@ def test_cluster_stage_job_count(spark, tmp_path):
         "cluster-stage",
         lambda: store.write(pipe.cluster(scored, extracted), "cluster"),
     )
-    assert n <= 12
+    assert n <= 9
 
 
 def test_checkpoint_resume_with_partitioned_stage(spark, tmp_path):

@@ -45,11 +45,11 @@ def test_greedy_one_to_one_empty(spark):
     assert linkage.greedy_one_to_one(scored, threshold=0.5).count() == 0
 
 
-def test_greedy_one_to_one_long_chain_driver_finish(spark):
+def test_greedy_one_to_one_long_chain_driver_finish(spark, monkeypatch):
     # adversarial shape: a path a0-b0-a1-b1-... with strictly decreasing
     # scores retires ONE dominant edge per round (a_i's best is always
-    # the edge back to b_{i-1}), so a chain longer than max_iters leaves
-    # a remnant. The driver finish must produce the SAME matching the
+    # the edge back to b_{i-1}), so a chain longer than MAX_MATCH_ITERS
+    # leaves a remnant. The driver finish must produce the SAME matching the
     # unbounded rounds would — every (a_i, b_i) edge.
     n = 12
     rows, score = [], 1000.0
@@ -62,11 +62,12 @@ def test_greedy_one_to_one_long_chain_driver_finish(spark):
     want = {(f"a{i:02d}", f"b{i:02d}") for i in range(n)}
     full = {
         (r["src"], r["dst"])
-        for r in linkage.greedy_one_to_one(scored, max_iters=50).collect()
+        for r in linkage.greedy_one_to_one(scored).collect()
     }
+    monkeypatch.setattr(linkage, "MAX_MATCH_ITERS", 2)
     capped = {
         (r["src"], r["dst"])
-        for r in linkage.greedy_one_to_one(scored, max_iters=2).collect()
+        for r in linkage.greedy_one_to_one(scored).collect()
     }
     assert full == want
     assert capped == want

@@ -199,30 +199,37 @@ def test_synth_skew_zero_is_byte_identical(spark):
 
 
 def test_compact_block_keys_semantics_and_type(spark):
-    """Block-key compaction (fast-family default) is a physical choice,
-    never a semantic one: the 64-bit xxhash64 keys must yield the
-    IDENTICAL entity map to the string keys on the same corpus, and the
+    """Block-key compaction (the fast family's block stage) is a
+    physical choice, never a semantic one: the 64-bit xxhash64 keys must
+    yield the IDENTICAL entity map to the string keys on the same corpus
+    — the map that ``build_blocking_map`` + ``cap_blocks``, the two
+    operators ``block()`` composes, give before compaction — and the
     compact map must actually carry longs (8 bytes/key through the cap
     shuffle, the pair self-join, and the stage checkpoint) while the
     portable family keeps oracle-recomputable strings."""
     from pyspark.sql.types import LongType, StringType
 
+    from ny_campaign_finance_dedupe_spark.operators import blocking
+
     pages, _ = synth_pages(spark, n_pages=1200, seed=7)
     pages = pages.localCheckpoint()
+    pipe = DedupePipeline(PipelineConfig())
+    ext = pipe.extract(pages).localCheckpoint()
+    signed = pipe.signatures(ext).localCheckpoint()
+    strings = blocking.cap_blocks(
+        blocking.build_blocking_map(signed, "url", pipe.predicates()),
+        pipe.cfg.max_block_size,
+    )
     maps = {}
-    for compact in (False, True):
-        pipe = DedupePipeline(PipelineConfig(compact_block_keys=compact))
-        ext = pipe.extract(pages).localCheckpoint()
-        bm = pipe.block(pipe.signatures(ext)).localCheckpoint()
-        want = LongType() if compact else StringType()
+    for name, bm, want in (
+        ("string", strings, StringType()),
+        ("compact", pipe.block(signed), LongType()),
+    ):
+        bm = bm.localCheckpoint()
         assert bm.schema["block_key"].dataType == want
-        scored = pipe.score(pipe.gen_pairs(bm), ext)
-        em = pipe.cluster(scored, ext)
-        maps[compact] = {
-            (r["record_id"], r["cluster_id"]) for r in em.collect()
-        }
-    assert maps[False] == maps[True]
-    # the portable family resolves the None default to strings
+        em = pipe.cluster(pipe.score(pipe.gen_pairs(bm), ext), ext)
+        maps[name] = {(r["record_id"], r["cluster_id"]) for r in em.collect()}
+    assert maps["string"] == maps["compact"]
     pipe = DedupePipeline(PipelineConfig(portable_hashing=True))
     bm = pipe.block(pipe.signatures(pipe.extract(pages.limit(50))))
     assert bm.schema["block_key"].dataType == StringType()

@@ -27,7 +27,8 @@ def test_match_batch_finds_planted_match(spark, corpus):
           one["text"], one["lang"])],
         PAGES_SCHEMA,
     )
-    ext = DedupePipeline(cfg).extract(batch)
+    pipe = DedupePipeline(cfg)
+    ext = pipe.with_signatures(pipe.extract(batch))
     out = incremental.match_batch(ext, index, cfg, n_matches=1).collect()
     assert len(out) == 1
     assert out[0]["match_url"] == one["url"]
@@ -44,7 +45,8 @@ def test_match_batch_no_false_match(spark, corpus):
           "en")],
         PAGES_SCHEMA,
     )
-    ext = DedupePipeline(cfg).extract(batch)
+    pipe = DedupePipeline(cfg)
+    ext = pipe.with_signatures(pipe.extract(batch))
     out = incremental.match_batch(ext, index, cfg, n_matches=3).collect()
     assert out == []
 
@@ -69,8 +71,9 @@ def test_match_batch_ties_break_on_logit(spark, corpus):
     batch = spark.createDataFrame(
         [("https://q.example.com/1", None, None, base, "en")], PAGES_SCHEMA
     )
+    pipe = DedupePipeline(cfg)
     out = incremental.match_batch(
-        DedupePipeline(cfg).extract(batch), index, cfg, n_matches=2
+        pipe.with_signatures(pipe.extract(batch)), index, cfg, n_matches=2
     ).collect()
     assert [r["score"] for r in out] == [1.0, 1.0]
     assert {r["rank"]: r["match_url"] for r in out} == {
@@ -479,6 +482,61 @@ def test_match_novel_batch_extracts_once(spark, crawl_history):
     assert {r["record_id"] for r in out.collect()} == {
         "https://near.example.com/b", "https://fresh.example.com/c"
     }
+
+
+def test_match_novel_batch_signs_novel_rows_once(
+    spark, crawl_history, monkeypatch
+):
+    """A tick runs the signature kernel once per novel page and never on
+    a suppressed one: the signatures ride in the localCheckpointed novel
+    rows, so match_batch's three reads of them (block cap, blocking
+    join, ntext join) re-run no kernel. Counted at the kernel itself
+    (rows in, summed over tasks), because the optimizer pushes the
+    signing projection into both disjoint branches of the novel-rows
+    union; the result's own plan holds no Python kernel at all."""
+    from collections.abc import Iterator
+
+    import pandas as pd
+    import pyspark.sql.functions as F
+
+    from ny_campaign_finance_dedupe_spark.functions import hashing
+    from ny_campaign_finance_dedupe_spark.streaming import crawl
+
+    rows_in = spark.sparkContext.accumulator(0)
+    real = hashing.minhash_simhash_udf
+
+    def counted_udf(*args, **kwargs):
+        udf = real(*args, **kwargs)
+        kernel = udf.func
+
+        def counted(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+            for grams in it:
+                rows_in.add(len(grams))
+                yield from kernel(iter([grams]))
+
+        return F.pandas_udf(counted, udf.returnType)
+
+    monkeypatch.setattr(hashing, "minhash_simhash_udf", counted_udf)
+    history, keys, bidx, index = crawl_history
+    one = history.limit(1).collect()[0]
+    batch = spark.createDataFrame(
+        [("https://re.example.com/a", one["warc_ts"], one["html"],
+          one["text"], one["lang"]),
+         ("https://near.example.com/b", one["warc_ts"], None,
+          one["text"] + " zzzextra", one["lang"]),
+         ("https://fresh.example.com/c", None, None,
+          "entirely new vocabulary qqq", "en")],
+        PAGES_SCHEMA,
+    )
+    out = crawl.match_novel_batch(batch, keys, bidx, index, PipelineConfig())
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan, plan
+    rows = {r["record_id"]: r["cluster_id"] for r in out.collect()}
+    assert rows == {
+        "https://near.example.com/b": one["url"],
+        "https://fresh.example.com/c": "https://fresh.example.com/c",
+    }
+    assert rows_in.value == 2
 
 
 def test_match_novel_batch_honours_lang_filter(spark, crawl_history):
