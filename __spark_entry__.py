@@ -699,12 +699,11 @@ def q_temperature_mix(spark, sf_dir):
 def q_segment_dedup(spark, sf_dir):
     """CCNet paragraph dedup (dedup.segment_dedup; Wenzek et al. 2019):
     drop every 10-word segment occurring in >1 document (the planted
-    dup families make these), rebuild surviving text in order. Its few
-    hot segments fit the broadcast set (corpus never shuffles; hot-set
-    via hash postings + semi-join probe); the anti-join rebuild taken
-    above SEGMENT_HOT_BROADCAST_MAX is pinned output-identical by test.
-    Oracle mirrors segmentation (list slices), the df filter, and the
-    ORDER BY pos string_agg rebuild."""
+    dup families make these), rebuild surviving text in order. Hot
+    segments come from hash postings and leave through a broadcast
+    anti-join against the hot-hash list, then one groupBy(record_id)
+    rebuild. Oracle mirrors segmentation (list slices), the df filter,
+    and the ORDER BY pos string_agg rebuild."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.segment_dedup(
         docs, "doc_id", "text", seg_words=10, df_threshold=1

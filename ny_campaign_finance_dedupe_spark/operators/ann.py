@@ -83,29 +83,6 @@ MAX_COLLECT_ROWS = 2_000_000
 # against a 2M-row build side would otherwise allocate 320 GB per task.
 GEMM_TILE_ELEMS = 16 * 1024 * 1024
 
-_ANN_BROADCASTS: list = []  # weakrefs (cf. scoring._IDF_BROADCASTS)
-
-
-def release_ann_broadcasts() -> None:
-    """Destroy (ids, matrix) broadcasts created by ``brute_force_topk`` /
-    ``cosine_neardup_pairs`` that are still alive — the eager-release
-    hook for long-lived sessions running many ANN plans (same contract
-    as scoring.release_idf_broadcasts: call after results materialize;
-    plans built before the release must not re-execute afterwards)."""
-    while _ANN_BROADCASTS:
-        b = _ANN_BROADCASTS.pop()()
-        if b is not None:
-            try:
-                b.destroy()
-            except Exception:
-                pass
-
-
-def _register_broadcast(bc) -> None:
-    import weakref
-
-    _ANN_BROADCASTS.append(weakref.ref(bc))
-
 
 def _tile_cols(n_rows: int, elems: int) -> int:
     """Column-tile width so a (n_rows x tile) float64 block stays under
@@ -246,7 +223,6 @@ def _gemm_topk_rows(
     if len(q_ids) == 0:  # an empty query side is an empty result, not
         return spark.createDataFrame([], out_schema)  # a vstack crash
     bc = spark.sparkContext.broadcast((q_ids, q_mat))
-    _register_broadcast(bc)
     tile_elems = GEMM_TILE_ELEMS  # captured: executors see the build-time value
 
     def gemm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -567,7 +543,6 @@ def train_ivf_centroids(
     )
     for _ in range(iters):
         bc = spark.sparkContext.broadcast(c_mat)
-        _register_broadcast(bc)
 
         def partial_sums(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             cm = bc.value
@@ -658,7 +633,6 @@ def ivf_topk(
             corpus, c_mat, id_col, vec_col, iters=train_iters
         )
     bc = spark.sparkContext.broadcast((c_ids, c_mat))
-    _register_broadcast(bc)
     if corpus_assignment is None:
         corpus_assignment = _ivf_assign(
             corpus, bc, id_col, vec_col, "neighbor_id", 1, round_decimals, id_type
@@ -788,7 +762,6 @@ def cosine_neardup_pairs(
     if len(ids) == 0:
         return spark.createDataFrame([], out_schema)
     bc = spark.sparkContext.broadcast((ids, mat))
-    _register_broadcast(bc)
     tile_elems = GEMM_TILE_ELEMS  # captured: executors see the build-time value
 
     def gemm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -884,7 +857,6 @@ def semantic_dedup(
             corpus, c_mat, id_col, vec_col, iters=train_iters
         )
     bc = spark.sparkContext.broadcast((c_ids, c_mat))
-    _register_broadcast(bc)
     assign = _ivf_assign(
         corpus, bc, id_col, vec_col, "record_id", 1, round_decimals,
         id_type, emit_sim=True,

@@ -37,10 +37,10 @@ and mostly novel. The standard engine answer is a *Bloom-filter index*:
    the filter's false positives, so the operator is oracle-checkable by
    a plain ANTI JOIN.
 
-Key hashing follows the exact_duplicates convention
-(operators/dedup.py:99-104): NULL payloads map to a marker key that
-cannot collide with hex sha2 output, so they group together under SQL
-GROUP BY NULL semantics instead of silently vanishing.
+Key hashing is exact_duplicates' (dedup.payload_key): NULL payloads map
+to a marker key that cannot collide with hex sha2 output, so they group
+together under SQL GROUP BY NULL semantics instead of silently
+vanishing.
 """
 
 from __future__ import annotations
@@ -50,6 +50,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from .dedup import payload_key
+
 #: Default geometry: 16 bits/key with k=8 double-hashed probes gives a
 #: false-positive rate of ~(1 - e^(-0.5))^8 ~= 4e-4 — at that rate the
 #: exact confirm join on a 10^9-row mostly-novel batch sees ~4e5 stray
@@ -58,13 +60,6 @@ from pyspark.sql import Column, DataFrame
 BITS_PER_KEY = 16
 N_HASHES = 8
 MIN_BITS = 1 << 13  # floor so tiny buckets still spread bits (1 KiB)
-
-def payload_key(payload: Column) -> Column:
-    """sha2 content key with the repo's NULL-marker convention."""
-    c = payload.cast("string")
-    return F.when(c.isNull(), F.lit("__NULL_PAYLOAD__")).otherwise(
-        F.sha2(c, 256)
-    )
 
 
 def _hash_cols(key: Column) -> tuple[Column, Column]:
@@ -217,24 +212,16 @@ def bloom_probe(
     ).drop("_bb", "_h1", "_h2", "m", "n_keys", "bloom")
 
 
-def novel_rows(
-    keyed: DataFrame,
-    key_col: str,
-    history_keys: DataFrame,
-    index: DataFrame,
+def confirm_novel(
+    flagged: DataFrame, key_col: str, history_keys: DataFrame
 ) -> DataFrame:
-    """EXACT subset of ``keyed`` whose ``key_col`` value is absent from
-    ``history_keys`` (a DataFrame carrying the same-named key column) —
-    the shared exactness-critical core of :func:`bloom_novelty` and the
-    streaming crawl pipeline: bloom-negative rows short-circuit (no
-    false negatives => certainly novel), only the positive remainder
-    pays the confirm anti-join, and the history side of that join is
-    its key projection (duplicate keys there cannot change an anti-join,
-    so no distinct pass). The probe takes its geometry from ``index``,
-    so the result is exact for any index :func:`build_bloom_index`
-    built. Returns ``keyed``'s rows minus the ``bloom_maybe`` scratch
-    column."""
-    flagged = bloom_probe(keyed, index, F.col(key_col))
+    """EXACT novel subset of a :func:`bloom_probe` result: bloom-negative
+    rows short-circuit (no false negatives => certainly novel), only the
+    positive remainder pays the confirm anti-join, and the history side
+    of that join is its key projection (duplicate keys there cannot
+    change an anti-join, so no distinct pass). ``flagged`` is read by
+    both branches, so a caller that materializes it runs the membership
+    kernel once. Returns ``flagged``'s rows minus ``bloom_maybe``."""
     certain = flagged.where(~F.col("bloom_maybe")).drop("bloom_maybe")
     confirmed = (
         flagged.where(F.col("bloom_maybe"))
@@ -242,6 +229,23 @@ def novel_rows(
         .join(history_keys.select(key_col), key_col, "left_anti")
     )
     return certain.unionByName(confirmed)
+
+
+def novel_rows(
+    keyed: DataFrame,
+    key_col: str,
+    history_keys: DataFrame,
+    index: DataFrame,
+) -> DataFrame:
+    """EXACT subset of ``keyed`` whose ``key_col`` value is absent from
+    ``history_keys`` (a DataFrame carrying the same-named key column):
+    :func:`bloom_probe` then :func:`confirm_novel`, the exactness-
+    critical core of :func:`bloom_novelty`. The probe takes its geometry
+    from ``index``, so the result is exact for any index
+    :func:`build_bloom_index` built."""
+    return confirm_novel(
+        bloom_probe(keyed, index, F.col(key_col)), key_col, history_keys
+    )
 
 
 def bloom_novelty(

@@ -54,37 +54,22 @@ def release(df: DataFrame) -> None:
         df._persisted_deps = []
 
 
-#: Below this optimizer-estimated input size the (id, hash) projection in
-#: ``exact_duplicates`` is NOT persisted: re-hashing a few MB twice is
-#: cheaper than the persist's materialization barrier (measured +0.65 s
-#: at sf0.1, VERDICT r03 #4). Above it, both the agg and the join probe
-#: would otherwise re-scan and re-sha2 the full payload column — at
-#: Common-Crawl scale that is two full text-column scans for one
-#: 40-byte-per-row intermediate, so the persist always wins.
-EXACT_DUP_PERSIST_BYTES = 64 << 20
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's own size estimate for the ANALYZED plan (file sizes
-    for file sources, actual bytes for local relations). Analyzed — not
-    optimized — on purpose: reading optimizedPlan() here would force the
-    full optimizer rule pipeline synchronously on the driver at
-    DataFrame-construction time (seconds for a deep upstream DAG), then
-    run it again at the real action; analysis alone is cheap and happens
-    on first use regardless. None when the JVM handle is unavailable
-    (e.g. Connect)."""
-    try:
-        est = int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
-    except Exception:
-        return None
-    # Long.MaxValue is Catalyst's "unknown" sentinel
-    # (spark.sql.defaultSizeInBytes default) — treat as no estimate
-    return None if est >= (1 << 62) else est
+def payload_key(payload: Column) -> Column:
+    """sha2 content key with the NULL-marker convention: a NULL payload
+    gets a marker key that cannot collide with hex sha2 output, so NULL
+    payloads group together (SQL GROUP BY null semantics) and survive
+    equi-joins instead of silently vanishing (sha2(NULL) is NULL, and a
+    NULL key never matches)."""
+    c = payload.cast("string")
+    return F.when(c.isNull(), F.lit("__NULL_PAYLOAD__")).otherwise(
+        F.sha2(c, 256)
+    )
 
 
 def exact_duplicates(df: DataFrame, id_col: str, payload: str) -> DataFrame:
     """(record_id, cluster_id, cluster_size): cluster_id = min id among
-    byte-identical payloads.
+    byte-identical payloads (NULL payloads form one group, see
+    :func:`payload_key`).
 
     Scale shape: aggregate only (min, count) per payload hash, then join
     the (record_id, hash) projection back to the aggregate — the J2
@@ -93,22 +78,15 @@ def exact_duplicates(df: DataFrame, id_col: str, payload: str) -> DataFrame:
     Common-Crawl scale) costs one counter in the agg and streams through
     the join; the old ``collect_list`` materialized it in one task.
 
-    The shared (id, hash) projection is persisted only when Catalyst
-    estimates the input at or above EXACT_DUP_PERSIST_BYTES (or when no
-    estimate is available — scale-safe default): see that constant for
-    the trade.
+    The (record_id, hash) projection is persisted: the agg and the join
+    probe are its two consumers, and without it each would re-scan and
+    re-sha2 the payload column. The caller reclaims it with
+    :func:`release`.
     """
-    # NULL payloads must survive the equi-join below (sha2(NULL) is NULL
-    # and a NULL key never matches), so they get a marker key that cannot
-    # collide with hex sha2 output — they group together, matching SQL
-    # GROUP BY null semantics, instead of silently vanishing
-    c = F.col(payload).cast("string")
-    key = F.when(c.isNull(), F.lit("__NULL_PAYLOAD__")).otherwise(F.sha2(c, 256))
-    keyed = df.select(F.col(id_col).alias("record_id"), key.alias("k"))
-    est = _plan_size_bytes(df)
-    do_persist = est is None or est >= EXACT_DUP_PERSIST_BYTES
-    if do_persist:
-        keyed = keyed.persist()
+    keyed = df.select(
+        F.col(id_col).alias("record_id"),
+        payload_key(F.col(payload)).alias("k"),
+    ).persist()
     agg = keyed.groupBy("k").agg(
         F.min("record_id").alias("cluster_id"),
         F.count("*").alias("cluster_size"),
@@ -116,7 +94,7 @@ def exact_duplicates(df: DataFrame, id_col: str, payload: str) -> DataFrame:
     out = keyed.join(agg, "k").select(
         "record_id", "cluster_id", "cluster_size"
     )
-    return _tag_persisted(out, keyed) if do_persist else out
+    return _tag_persisted(out, keyed)
 
 
 #: Absolute ceiling on the canopy stop-word cap. The reference's rule
@@ -414,12 +392,6 @@ def segment_text(col: Column, seg_words: int = 10) -> Column:
     return keygen._bind(F.split(col, " "), _segs)
 
 
-#: Up to this many distinct boilerplate segments segment_dedup ships the
-#: hot-set strings as a broadcast set (driver + executor memory holds
-#: them); above it, it takes the anti-join rebuild, which never collects.
-SEGMENT_HOT_BROADCAST_MAX = 100_000
-
-
 def segment_dedup(
     df: DataFrame,
     id_col: str,
@@ -436,27 +408,19 @@ def segment_dedup(
     n_dropped); clean_text preserves surviving segments in order ('' if
     everything was boilerplate).
 
-    Scale shape: document frequencies aggregate over (xxhash64(seg),
-    record_id) postings — ids+hashes only, never text, with map-side
-    array_distinct (a segment repeated inside one doc counts once).
-    The path follows the hot-set size, read off one bounded collect:
-    - up to SEGMENT_HOT_BROADCAST_MAX hot segments (boilerplate is the
-      head of the df distribution, so this is the common case): the
-      collected strings ship as a broadcast set and an Arrow-batched
-      kernel filters each document's segment array by set membership.
-      The corpus NEVER shuffles; per-batch cost is O(segs) set probes —
-      the interpreted higher-order array_contains alternative is
-      O(segs x hot) per row.
-    - above it: fully distributed, no driver bound — posexplode,
-      broadcast ANTI-join against the hot-hash list (no shuffle of the
-      big side), then one groupBy(record_id) rebuild (sort_array of
-      (pos, seg) structs). The rebuild is the one intrinsic
-      corpus-sized shuffle. Identical output (pinned by test).
+    Scale shape, fully distributed with no driver bound and no Spark
+    job before the caller's action: document frequencies aggregate over
+    (xxhash64(seg), record_id) postings — ids+hashes only, never text,
+    with map-side array_distinct (a segment repeated inside one doc
+    counts once). Then posexplode, broadcast ANTI-join against the
+    hot-hash list (no shuffle of the big side), and one
+    groupBy(record_id) rebuild (sort_array of (pos, seg) structs). The
+    rebuild is the one intrinsic corpus-sized shuffle.
     """
     # persisted: the segmentation projection feeds three plan subtrees
-    # (df agg + hot-string probe + rebuild, or ex + all_docs) and
-    # Catalyst does no CSE across them — unpersisted, the corpus would
-    # be re-tokenized three times per call (caller reclaims via
+    # (df agg, the exploded anti-join side and all_docs) and Catalyst
+    # does no CSE across them — unpersisted, the corpus would be
+    # re-tokenized three times per call (caller reclaims via
     # dedup.release, the module's _tag_persisted convention)
     base = df.select(
         F.col(id_col).alias("record_id"),
@@ -477,51 +441,6 @@ def segment_dedup(
         .where(F.col("seg_df") > df_threshold)
         .select("h")
     )
-    # hot STRINGS come from a broadcast semi-join probe (only hot
-    # occurrences reach the distinct), never a string shuffle
-    max_hot = SEGMENT_HOT_BROADCAST_MAX
-    rows = (
-        postings.join(
-            F.broadcast(hot_h),
-            F.xxhash64(postings["seg"]) == F.col("h"),
-            "left_semi",
-        )
-        .select("seg")
-        .distinct()
-        .limit(max_hot + 1)
-        .collect()
-    )
-    if len(rows) <= max_hot:
-        hot_set = frozenset(r["seg"] for r in rows)
-        bc = df.sparkSession.sparkContext.broadcast(hot_set)
-        id_type = df.schema[id_col].dataType.simpleString()
-        out_schema = (
-            f"record_id {id_type}, clean_text string,"
-            f" n_seg int, n_dropped int"
-        )
-
-        def drop_hot(batches):
-            import pandas as pd
-
-            hs = bc.value
-            for pdf in batches:
-                segs = pdf["segs"]
-                kept = [[s for s in arr if s not in hs] for arr in segs]
-                yield pd.DataFrame(
-                    {
-                        "record_id": pdf["record_id"],
-                        "clean_text": [" ".join(k) for k in kept],
-                        "n_seg": [len(a) for a in segs],
-                        "n_dropped": [
-                            len(a) - len(k) for a, k in zip(segs, kept)
-                        ],
-                    }
-                )
-
-        return _tag_persisted(
-            base.mapInPandas(drop_hot, schema=out_schema), base
-        )
-    # over the bound: the distributed anti-join rebuild
     ex = base.select(
         "record_id",
         F.size("segs").alias("n_seg"),

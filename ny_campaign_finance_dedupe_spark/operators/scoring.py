@@ -472,27 +472,6 @@ def compute_idf(
     return out
 
 
-_IDF_BROADCASTS: list = []  # weakrefs: registry must not pin broadcasts
-
-
-def release_idf_broadcasts() -> None:
-    """Destroy IDF broadcasts created by ``tfidf_cosine_udf`` that are
-    still alive. Call after the results of Text-variable plans are
-    materialized (the bench / correctness-sweep pattern); plans built
-    before the release must not be re-executed afterwards. The registry
-    holds weakrefs, so broadcasts whose plans were simply dropped are
-    reclaimed by Spark's ContextCleaner as before — this hook only adds
-    eager, deterministic release."""
-    while _IDF_BROADCASTS:
-        ref = _IDF_BROADCASTS.pop()
-        b = ref()
-        if b is not None:
-            try:
-                b.destroy()
-            except Exception:
-                pass
-
-
 def tfidf_cosine_udf(idf: dict[str, float], default_idf: float):
     """Arrow-batched pandas UDF: IDF-weighted token-set cosine between
     two text columns — the real Text comparator (TF-IDF cosine), vs the
@@ -515,14 +494,6 @@ def tfidf_cosine_udf(idf: dict[str, float], default_idf: float):
 
     spark = SparkSession.getActiveSession()
     bc = spark.sparkContext.broadcast(idf) if spark is not None else None
-    if bc is not None:
-        # register (weakly — pinning would defeat the ContextCleaner's
-        # automatic reclamation of dropped plans) so long-lived sessions
-        # compiling many Text specs can release eagerly via
-        # release_idf_broadcasts() (cf. dedup._tag_persisted)
-        import weakref
-
-        _IDF_BROADCASTS.append(weakref.ref(bc))
     local_idf = None if bc is not None else dict(idf)
     d2 = float(default_idf) ** 2
     cache: dict[str, dict] = {}

@@ -48,14 +48,8 @@ def clean_corpus(
     # exact_duplicates convention — 64-hex key, never the text).
     # Persisted: the winners groupBy and the semi-join probe are two
     # consumers of this subtree and Catalyst does no CSE across them —
-    # unpersisted, the segment Arrow kernel + sha2 would run twice
-    # (size-gated exactly like exact_duplicates; unknown estimate keeps
-    # the persist, the scale-safe default).
-    keyed = nonempty.withColumn("_k", F.sha2("clean_text", 256))
-    est = dedup._plan_size_bytes(df)
-    do_persist = est is None or est >= dedup.EXACT_DUP_PERSIST_BYTES
-    if do_persist:
-        keyed = keyed.persist()
+    # unpersisted, the segment rebuild + sha2 would run twice.
+    keyed = nonempty.withColumn("_k", F.sha2("clean_text", 256)).persist()
     winners = keyed.groupBy("_k").agg(F.min("record_id").alias("record_id"))
     out = keyed.join(winners, ["_k", "record_id"], "left_semi")
     out = out.withColumn(
@@ -64,5 +58,5 @@ def clean_corpus(
     return dedup._tag_persisted(
         out.select("record_id", "clean_text", "n_tok"),
         *getattr(seg, "_persisted_deps", []),
-        *([keyed] if do_persist else []),
+        keyed,
     )

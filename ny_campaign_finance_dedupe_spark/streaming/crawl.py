@@ -5,12 +5,13 @@ tested) separately into ONE foreachBatch streaming query:
   readStream(pages)
     -> DedupePipeline.extract (the one page-text chain, lang_filter
        included) + ingest.exact_key (the ingest dedup's key, so stream
-       and batch agree on "same page"), localCheckpointed: every step
-       below reads that frame, so a tick normalizes each page once
-    -> Bloom novelty vs indexed history (operators/bloom — negatives
-       are certainly novel and skip the join entirely; the small
-       positive remainder pays an exact confirm anti-join against the
-       history KEY projection, never the corpus)
+       and batch agree on "same page") + the Bloom probe against the
+       indexed history, localCheckpointed: every step below reads that
+       frame, so a tick normalizes and probes each page once
+    -> exact novelty (operators/bloom — negatives are certainly novel
+       and skip the join entirely; the small positive remainder pays an
+       exact confirm anti-join against the history KEY projection,
+       never the corpus)
     -> gazetteer match of the novel pages, with their ntext, against
        the static blocking index (incremental.match_batch — same
        predicates, features and model as batch; it never re-extracts)
@@ -20,12 +21,12 @@ tested) separately into ONE foreachBatch streaming query:
        clears the threshold. Non-novel pages are suppressed before
        matching — that is the point of the Bloom stage at 100 TB/day.
 
-Scale shape per micro-batch: one Arrow extract pass (localCheckpointed),
-one Arrow bloom probe (a bucket equi-join the engine broadcasts or
-shuffles by the index's size — bloom.bloom_probe) and one anti-join
-whose history side is the key column, then one Arrow signature pass
-over the novel rows only (localCheckpointed with them), one
-stream-static equi-join on block_key and one window rank.
+Scale shape per micro-batch: one Arrow extract pass and one Arrow bloom
+probe (a bucket equi-join the engine broadcasts or shuffles by the
+index's size — bloom.bloom_probe), localCheckpointed together, one
+anti-join whose history side is the key column, then one Arrow
+signature pass over the novel rows only (localCheckpointed with them),
+one stream-static equi-join on block_key and one window rank.
 History artifacts (bloom index + key projection + blocking index) are
 built once per ingest epoch and persisted; between epochs they are
 plain parquet appends. The Bloom index carries its own
@@ -90,24 +91,25 @@ def match_novel_batch(
     entity). Pages whose content key is already in history yield no row
     (suppressed), and so do pages ``cfg.lang_filter`` drops, as in batch
     extract. Two localCheckpointed frames keep every step single-pass:
-    the extracted, keyed batch (read by both Bloom branches) and its
-    signed novel rows (read by match_batch's three reads and the
-    adopt-or-found join), so no consumer re-runs the extract, the Bloom
-    kernel, the confirm anti-join or the signature kernel. Runs
-    identically under foreachBatch or as a plain batch call (how the
-    tests drive it deterministically).
+    the extracted, keyed and Bloom-probed batch (read by both branches
+    of bloom.confirm_novel) and its signed novel rows (read by
+    match_batch's three reads and the adopt-or-found join), so no
+    consumer re-runs the extract, the Bloom kernel, the confirm
+    anti-join or the signature kernel. Runs identically under
+    foreachBatch or as a plain batch call (how the tests drive it
+    deterministically).
     """
     pipe = DedupePipeline(cfg)
-    keyed = (
-        pipe.extract(batch)
-        .withColumn("exact_key", ingest.exact_key())
-        .localCheckpoint()
-    )
+    probed = bloom.bloom_probe(
+        pipe.extract(batch).withColumn("exact_key", ingest.exact_key()),
+        bloom_index,
+        F.col("exact_key"),
+    ).localCheckpoint()
     # the content key steps aside for the signatures' exact_key (no url
     # fallback), so the crawl blocks on the keys the batch pipeline uses
     novel = pipe.with_signatures(
-        bloom.novel_rows(
-            keyed, "exact_key", history_keys, bloom_index
+        bloom.confirm_novel(
+            probed, "exact_key", history_keys
         ).withColumnRenamed("exact_key", "content_key")
     ).localCheckpoint()
     matches = incremental.match_batch(novel, index, cfg, n_matches=1)

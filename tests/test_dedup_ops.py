@@ -52,28 +52,20 @@ def test_exact_duplicates_no_member_array(spark):
     assert got[1000] == (1000, 1)
 
 
-def test_exact_duplicates_persist_is_size_adaptive(docs, monkeypatch):
-    """Toy inputs skip the shared-projection persist (re-hashing a few
-    KB twice beats the materialization barrier); a threshold of 0
-    restores the scale shape, and both produce identical output.
-    Uses a parquet source because Catalyst only has a size estimate for
-    file sources — unestimatable plans (e.g. Python createDataFrame)
-    keep the persist as the scale-safe default."""
-    spark = docs.sparkSession
+def test_exact_duplicates_always_persists(spark):
+    """The shared (record_id, key) projection is persisted whatever the
+    input's size, a small parquet source included, and dedup.release
+    unpersists it."""
+    from pyspark import StorageLevel
+
     pq = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    small = dedup.exact_duplicates(pq, "doc_id", "text")
-    assert not getattr(small, "_persisted_deps", [])
-    monkeypatch.setattr(dedup, "EXACT_DUP_PERSIST_BYTES", 0)
-    forced = dedup.exact_duplicates(pq, "doc_id", "text")
-    assert getattr(forced, "_persisted_deps", [])
-    # unestimatable input -> persist stays on (scale-safe)
-    local = dedup.exact_duplicates(docs, "doc_id", "text")
-    assert getattr(local, "_persisted_deps", [])
-    dedup.release(local)
-    assert sorted(map(tuple, small.collect())) == sorted(
-        map(tuple, forced.collect())
-    )
-    dedup.release(forced)
+    out = dedup.exact_duplicates(pq, "doc_id", "text")
+    deps = list(getattr(out, "_persisted_deps", []))
+    assert deps and all(d.storageLevel != StorageLevel.NONE for d in deps)
+    assert out.count() == pq.count()
+    dedup.release(out)
+    assert out._persisted_deps == []
+    assert all(d.storageLevel == StorageLevel.NONE for d in deps)
 
 
 def test_ngram_jaccard_pairs(docs):
@@ -482,13 +474,6 @@ def test_train_ivf_centroids_rebalances_bad_seeds(spark):
     assert r5 >= r0
 
 
-def test_release_ann_broadcasts(spark, vecs):
-    ann.cosine_neardup_pairs(vecs, threshold=0.9).collect()
-    assert len(ann._ANN_BROADCASTS) >= 1
-    ann.release_ann_broadcasts()
-    assert len(ann._ANN_BROADCASTS) == 0
-
-
 def test_cosine_neardup_exact_flag(spark, vecs, monkeypatch):
     import warnings
 
@@ -669,51 +654,37 @@ def test_segment_dedup_removes_planted_boilerplate(spark):
     assert out[1]["n_seg"] == 3 and out[1]["n_dropped"] == 1
 
 
-def test_segment_dedup_strategies_identical(spark, monkeypatch):
-    """The broadcast set (zero corpus shuffle, Arrow set-membership
-    kernel) and the anti-join rebuild it falls back to above
-    SEGMENT_HOT_BROADCAST_MAX hot segments must emit identical rows on a
-    corpus with planted families — the family-equivalence contract."""
+def test_segment_dedup_anti_join_rebuild(spark):
+    """One path serves every input: on a corpus with planted families
+    the hot segments leave through the broadcast anti-join and the
+    groupBy rebuild (no Python kernel), one row per document."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-
-    def run():
-        out = dedup.segment_dedup(
-            docs, "doc_id", "text", seg_words=7, df_threshold=1
-        )
-        plan = _executed_plan(out)
-        rows = {tuple(r) for r in out.collect()}
-        dedup.release(out)
-        return plan, rows
-
-    plan, a = run()
-    assert "MapInPandas" in plan
-    assert len(a) == docs.count()
-    assert sum(r[3] for r in a) > 0  # the planted dups fire
-    # a bound below the (non-zero) hot-segment count takes the join path
-    monkeypatch.setattr(dedup, "SEGMENT_HOT_BROADCAST_MAX", 0)
-    plan, b = run()
-    assert "MapInPandas" not in plan and "LeftAnti" in plan, plan
-    assert a == b
+    out = dedup.segment_dedup(
+        docs, "doc_id", "text", seg_words=7, df_threshold=1
+    )
+    plan = _executed_plan(out)
+    assert "LeftAnti" in plan and "MapInPandas" not in plan, plan
+    rows = out.collect()
+    dedup.release(out)
+    assert len(rows) == docs.count()
+    assert len({r["record_id"] for r in rows}) == len(rows)
+    assert sum(r["n_dropped"] for r in rows) > 0  # the planted dups fire
 
 
-def test_segment_dedup_guards(spark, monkeypatch):
-    """The path choice is not a caller knob: the removed ``strategy=``
-    keyword is rejected, and a hot set over SEGMENT_HOT_BROADCAST_MAX
-    (it raised ValueError before) takes the anti-join rebuild and still
-    keeps every document, all-boilerplate ones as ''."""
+def test_segment_dedup_guards(spark):
+    """The path is not a caller knob: the removed ``strategy=`` keyword
+    is rejected, and documents made only of hot segments keep their
+    rows, as '' with every segment dropped."""
     df = spark.createDataFrame(
         [(1, "a b c"), (2, "a b c"), (3, "a b c")],
         "doc_id long, text string",
     )
     with pytest.raises(TypeError, match="strategy"):
         dedup.segment_dedup(df, "doc_id", "text", strategy="shuffle")
-    # every doc is one identical segment -> 1 hot segment > bound 0
-    monkeypatch.setattr(dedup, "SEGMENT_HOT_BROADCAST_MAX", 0)
     out = dedup.segment_dedup(
         df, "doc_id", "text", seg_words=5, df_threshold=1
     )
-    plan = _executed_plan(out)
-    assert "MapInPandas" not in plan and "LeftAnti" in plan, plan
+    assert "LeftAnti" in _executed_plan(out)
     rows = sorted(tuple(r) for r in out.collect())
     dedup.release(out)
     assert rows == [(i, "", 1, 1) for i in (1, 2, 3)]

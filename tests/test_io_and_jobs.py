@@ -339,11 +339,12 @@ def test_scaling_worker_stage_telemetry():
         assert m["failed_tasks"] == 0, (st, m)
 
 
-def test_match_novel_batch_job_count(spark):
+def test_match_novel_batch_job_count(spark, monkeypatch):
     """One crawl micro-batch (``match_novel_batch`` to a noop sink) runs
     a pinned number of Spark jobs, for a 3-page tick and for 200 fresh
     pages against the same history, and reading the Bloom geometry off
-    the index runs none."""
+    the index runs none. The tick runs the Bloom kernel once: its
+    executed plans hold one ``_test`` node between them."""
     from ny_campaign_finance_dedupe_spark import synth
     from ny_campaign_finance_dedupe_spark.operators import bloom
     from ny_campaign_finance_dedupe_spark.plans.pipeline import PipelineConfig
@@ -379,3 +380,52 @@ def test_match_novel_batch_job_count(spark):
 
     assert tick_jobs("crawl-batch", batch) == 12
     assert tick_jobs("crawl-batch-200", fresh) == 13
+
+    # the executed plans of the two frames the tick localCheckpoints and
+    # of its result hold the Bloom membership kernel once between them
+    plans = []
+    frame_cls = type(fresh)
+    checkpoint = frame_cls.localCheckpoint
+
+    def recorded(df, *args, **kwargs):
+        out = checkpoint(df, *args, **kwargs)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recorded)
+    out = crawl.match_novel_batch(fresh, keys, bidx, index, PipelineConfig())
+    out.write.format("noop").mode("overwrite").save()
+    plans.append(out._jdf.queryExecution().executedPlan().toString())
+    monkeypatch.undo()
+    probes = [  # an adaptive plan prints its final plan, then its initial
+        line
+        for plan in plans
+        for line in plan.split("== Initial Plan ==")[0].splitlines()
+        if "ArrowEvalPython" in line and "_test(" in line
+    ]
+    assert len(probes) == 1, plans
+
+
+def test_segment_dedup_builds_without_a_job(spark):
+    """Building a segment_dedup or clean_corpus frame runs no Spark job:
+    the hot segments stay a lazy broadcast anti-join input, nothing is
+    collected before the caller's action."""
+    from ny_campaign_finance_dedupe_spark.operators import dedup
+    from ny_campaign_finance_dedupe_spark.plans.corpus import clean_corpus
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    built = []
+    assert _jobs_in_group(
+        spark,
+        "segment-build",
+        lambda: built.append(
+            dedup.segment_dedup(docs, "doc_id", "text", seg_words=7)
+        ),
+    ) == 0
+    assert _jobs_in_group(
+        spark,
+        "clean-corpus-build",
+        lambda: built.append(clean_corpus(docs, "doc_id", "text")),
+    ) == 0
+    for df in built:
+        dedup.release(df)
