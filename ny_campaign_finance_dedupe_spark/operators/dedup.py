@@ -78,23 +78,21 @@ def exact_duplicates(df: DataFrame, id_col: str, payload: str) -> DataFrame:
     Common-Crawl scale) costs one counter in the agg and streams through
     the join; the old ``collect_list`` materialized it in one task.
 
-    The (record_id, hash) projection is persisted: the agg and the join
-    probe are its two consumers, and without it each would re-scan and
-    re-sha2 the payload column. The caller reclaims it with
-    :func:`release`.
+    The (record_id, hash) projection is not persisted: the agg and the
+    join probe each re-hash the payload column, which measured cheaper
+    than a cache's materialization barrier at every fixture size.
     """
     keyed = df.select(
         F.col(id_col).alias("record_id"),
         payload_key(F.col(payload)).alias("k"),
-    ).persist()
+    )
     agg = keyed.groupBy("k").agg(
         F.min("record_id").alias("cluster_id"),
         F.count("*").alias("cluster_size"),
     )
-    out = keyed.join(agg, "k").select(
+    return keyed.join(agg, "k").select(
         "record_id", "cluster_id", "cluster_size"
     )
-    return _tag_persisted(out, keyed)
 
 
 #: Absolute ceiling on the canopy stop-word cap. The reference's rule

@@ -45,11 +45,11 @@ def clean_corpus(
         "record_id", "clean_text"
     )
     # exact keep-min on cleaned text: hash for shuffle bytes (the
-    # exact_duplicates convention — 64-hex key, never the text).
-    # Persisted: the winners groupBy and the semi-join probe are two
-    # consumers of this subtree and Catalyst does no CSE across them —
-    # unpersisted, the segment rebuild + sha2 would run twice.
-    keyed = nonempty.withColumn("_k", F.sha2("clean_text", 256)).persist()
+    # exact_duplicates convention — 64-hex key, never the text). Not
+    # persisted, like exact_duplicates: the winners groupBy and the
+    # semi-join probe each recompute the rebuild + sha2 from
+    # segment_dedup's cached base, which measured cheaper than a cache.
+    keyed = nonempty.withColumn("_k", F.sha2("clean_text", 256))
     winners = keyed.groupBy("_k").agg(F.min("record_id").alias("record_id"))
     out = keyed.join(winners, ["_k", "record_id"], "left_semi")
     out = out.withColumn(
@@ -58,5 +58,4 @@ def clean_corpus(
     return dedup._tag_persisted(
         out.select("record_id", "clean_text", "n_tok"),
         *getattr(seg, "_persisted_deps", []),
-        keyed,
     )

@@ -52,20 +52,18 @@ def test_exact_duplicates_no_member_array(spark):
     assert got[1000] == (1000, 1)
 
 
-def test_exact_duplicates_always_persists(spark):
-    """The shared (record_id, key) projection is persisted whatever the
-    input's size, a small parquet source included, and dedup.release
-    unpersists it."""
-    from pyspark import StorageLevel
-
-    pq = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    out = dedup.exact_duplicates(pq, "doc_id", "text")
-    deps = list(getattr(out, "_persisted_deps", []))
-    assert deps and all(d.storageLevel != StorageLevel.NONE for d in deps)
-    assert out.count() == pq.count()
-    dedup.release(out)
-    assert out._persisted_deps == []
-    assert all(d.storageLevel == StorageLevel.NONE for d in deps)
+def test_exact_duplicates_never_caches(spark):
+    """The (record_id, key) projection is never persisted, whatever the
+    input's size: a source Catalyst estimates at gigabytes gets no cache
+    and no dependency for dedup.release. The frame is only planned,
+    never run."""
+    big = spark.range(10**9).select(
+        F.col("id").alias("doc_id"), F.lit("page").alias("text")
+    )
+    out = dedup.exact_duplicates(big, "doc_id", "text")
+    assert not getattr(out, "_persisted_deps", [])
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" not in plan
 
 
 def test_ngram_jaccard_pairs(docs):
@@ -749,6 +747,9 @@ def test_clean_corpus_composite(spark):
     assert set(out) == {1, 5}
     assert out[1]["clean_text"] == "alpha beta gamma delta epsilon"
     assert out[1]["n_tok"] == 5
+    # the one cached subtree is segment_dedup's base; the exact stage
+    # adds none
+    assert len(res._persisted_deps) == 1
     dedup.release(res)  # reclaims the segment persist carried through
 
 
